@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Benchmark main. Prints ONE compact JSON summary as the true last
   * stdout line (build.sbt routes forked stdout straight through and
@@ -15,6 +16,11 @@ import org.apache.spark.sql.SparkSession
   * order is walked TWICE, A→Z then Z→A, and each query reports the
   * MIN of its two per-pass medians: a GC phase cannot straddle the
   * same query at both ends of the schedule.
+  *
+  * `SPARK_GRAFT_QUERIES=a,b` warms and times only the named queries
+  * (and only their build/search and streaming splits); such a partial
+  * run prints its full line to stdout and writes no bench_self file,
+  * so it never overwrites a full run's record.
   */
 object Bench {
   /** Seconds rounded to ms so the JSON stays compact enough for the
@@ -22,26 +28,32 @@ object Bench {
     */
   private def ms3(v: Double): Double = math.round(v * 1000) / 1000.0
 
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"BENCH $what: ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 2 reps per pass x 2 passes = 4 timed runs per query, about the
     // same budget as the old 3-rep single pass + its re-samples
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = sys.env.get("SPARK_GRAFT_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { o =>
+      val unknown = o.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    }
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
+    val cpus = Session.cpus
+    val spark = Session(cpus)
     // warmup pass at the smallest SF: JIT + codegen caches + parquet
     // footers, so timed numbers reflect steady state, not first-query
     // JVM warmup
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (n, fn) =>
+        try fn(spark, warmDir).count()
+        catch { case NonFatal(e) => warn(s"WARMUP FAIL $n", e) }
       }
     }
     // drop caches + checkpoint blocks between queries so one query's
@@ -53,21 +65,18 @@ object Bench {
     }
     // force the per-JVM at-rest artifacts at the BENCH SF before the
     // timed passes (r16, prescribed by the r15 advice + verdict item
-    // 7): each build is timed by ArtifactTimes inside atRestDir /
-    // GraphIndexCache and reported below as a split `build` entry, so
-    // the one-time costs stay on the record instead of skewing the
-    // first timed consumer (the min-of-pass-medians estimator was
-    // silently dropping them). Artifacts are per-JVM temp dirs built
+    // 7): each build is timed by the AtRest store and reported below
+    // as a split `build` entry, so the one-time costs stay on the
+    // record instead of skewing the first timed consumer (the
+    // min-of-pass-medians estimator was silently dropping them). Artifacts are per-JVM temp dirs built
     // from the parquet inputs — nothing persists across runs.
-    SparkEntry.atRestWarm.foreach { n =>
+    SparkEntry.atRestWarm.filter(wanted).foreach { n =>
       try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case e: Throwable =>
-        System.err.println(s"BENCH ATREST WARM FAIL $n: ${e.getMessage}")
-      }
+      catch { case NonFatal(e) => warn(s"ATREST WARM FAIL $n", e) }
       cleanup()
     }
     val sfCanon = new java.io.File(sfDir).getCanonicalPath
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.filter(wanted).sorted
     // one timed run; None on crash (a crash never poisons other reps
     // or the other pass — ADVICE r7: a re-sample failure used to
     // discard valid measurements)
@@ -76,10 +85,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-          false
-        }
+        catch { case NonFatal(e) => warn(s"FAIL $name", e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       cleanup()
       if (ok) Some(dt) else None
@@ -114,7 +120,7 @@ object Bench {
     // probe over the materialized frame — the steady-state serving
     // cost an at-rest index pays, with the one-shot training cost
     // reported separately instead of smeared into every round's total
-    val splits = SparkEntry.benchSplits.flatMap { case (name, mk) =>
+    val splits = SparkEntry.benchSplits.filter(kv => wanted(kv._1)).flatMap { case (name, mk) =>
       try {
         val (build, search) = mk(spark, sfDir)
         val t0 = System.nanoTime()
@@ -127,10 +133,7 @@ object Bench {
         codes.unpersist(false)
         cleanup()
         Some(name -> (tb, ts))
-      } catch { case e: Throwable =>
-        System.err.println(s"BENCH SPLIT FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-        None
-      }
+      } catch { case NonFatal(e) => warn(s"SPLIT FAIL $name", e); None }
     }
     // streaming machinery split: a real stream's time is dominated by
     // a CONSTANT start→drain harness cost per cycle; measure each
@@ -138,10 +141,11 @@ object Bench {
     // inflates) and report operator = raw − cycles×constant. Raw
     // queries/total stay untouched for cross-round comparability.
     val resultMap = results.toMap
-    val wantsFed = SparkEntry.streamHarness.values.exists(_._1 == "fed")
-    val wantsDirect = SparkEntry.streamHarness.values.exists(_._1 == "direct")
+    val harness = SparkEntry.streamHarness.filter(kv => wanted(kv._1))
+    val wantsFed = harness.values.exists(_._1 == "fed")
+    val wantsDirect = harness.values.exists(_._1 == "direct")
     def minOf3(f: () => Double): Double =
-      (1 to 3).map(_ => try f() catch { case _: Throwable => -1.0 })
+      (1 to 3).map(_ => try f() catch { case NonFatal(e) => warn("HARNESS FAIL", e); -1.0 })
         .filter(_ >= 0) match {
           case Nil => -1.0
           case ts  => ts.min
@@ -152,7 +156,7 @@ object Bench {
     val hbDirect = if (wantsDirect)
       minOf3(() => { val v = graft.streaming.EventStream
         .harnessBaselineDirect(spark, sfDir); cleanup(); v }) else -1.0
-    val streamSplit = SparkEntry.streamHarness.toSeq.sorted.flatMap {
+    val streamSplit = harness.toSeq.sorted.flatMap {
       case (n, (kind, cycles)) =>
         val hb = if (kind == "fed") hbFed else hbDirect
         resultMap.get(n).filter(_ >= 0).filter(_ => hb >= 0).map { t =>
@@ -166,7 +170,7 @@ object Bench {
       .mkString("{", ",", "}")
     // at-rest artifact build entries for THIS sf dir (keys are
     // canonical-dir-prefixed; strip to the variant tag for the report)
-    val atRest = graft.operators.ArtifactTimes.snapshot.toSeq
+    val atRest = graft.operators.AtRest.buildTimes.toSeq
       .filter(_._1.startsWith(sfCanon + ":")).sortBy(_._1)
       .map { case (k, v) =>
         "\"atrest:" + k.substring(sfCanon.length + 1) + "\":{\"build\":" +
@@ -203,14 +207,14 @@ object Bench {
     // full map so a later lower-core run can't overwrite the 32-core
     // per-query data (r15 verdict item 2: per-query round-over-round
     // and scaling ratios need both files to survive)
-    try {
+    if (only.isEmpty) try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_self.json"),
         (line + "\n").getBytes("UTF-8"))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"bench_self_c$cpus.json"),
         (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => warn("bench_self write failed", e) }
     // slowest list ranks by OPERATOR time (streaming machinery
     // constants split out — full raw map + stream_split are in
     // bench_self.json): a regression check cares about operator cost,
@@ -223,6 +227,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + ms3(v) }
       .mkString("{", ",", "}")
     spark.stop()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","valid":$valid,"reps":$reps,"passes":2,"n_queries":${results.size},"slowest_operator":$slow,"harness_per_drain":{"fed":${ms3(hbFed)},"direct":${ms3(hbDirect)}},"failed":$failed,"sf":"$sfDir"}""")
+    if (only.nonEmpty) println(line)
+    else println(s"""{"metric":"total","value":$total,"unit":"sec","valid":$valid,"reps":$reps,"passes":2,"n_queries":${results.size},"slowest_operator":$slow,"harness_per_drain":{"fed":${ms3(hbFed)},"direct":${ms3(hbDirect)}},"failed":$failed,"sf":"$sfDir"}""")
   }
 }

@@ -10,18 +10,25 @@ import java.nio.file.{Files, Paths}
   * Usage: runMain graft.DumpOracles [outPath]
   */
 object DumpOracles {
-  def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("tools/oracles.json")
+  /** A string map as a JSON object, one key per line, sorted. Escapes
+    * backslash, quote and ALL control chars (< 0x20): a tab or CR in
+    * oracle SQL would otherwise break the reader's `json.load`.
+    */
+  def render(m: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+    m.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }
       .mkString("{\n", ",\n", "\n}")
-    Files.writeString(Paths.get(out), json)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val out = args.headOption.getOrElse("tools/oracles.json")
+    Files.writeString(Paths.get(out), render(SparkEntry.oracleSql))
     println(s"[dump-oracles] ${SparkEntry.oracleSql.size} oracles -> $out")
   }
 }

@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextEmbed, TextExprs, TextFuncs}
-import graft.operators.{Ann, AsOf, Dedup, Knn, Skew}
+import graft.operators.{Ann, AsOf, AtRest, Dedup, Knn, Skew}
 
 /** Head-to-head timings + recall for the engine's design choices,
   * written to docs/PERF.md. Usage: runMain graft.Microbench [sfDir].
@@ -22,18 +22,13 @@ object Microbench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus
+    val spark = Session(cpus)
 
     val e = Tables.load(spark, sfDir, "embeddings")
     val docs = Tables.load(spark, sfDir, "documents")
     val sb = new StringBuilder
-    sb ++= s"# Microbenchmarks ($sfDir, local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}], median-ish of 3 after warmup)\n\n"
+    sb ++= s"# Microbenchmarks ($sfDir, local[$cpus], median-ish of 3 after warmup)\n\n"
 
     // 1. batch kNN: TopKPairs aggregate vs rank window vs LSH-bucketed
     //    approximate join, growing q
@@ -698,7 +693,7 @@ object Microbench {
           // pruning) — the production path, not the in-memory build
           val idxDir = java.nio.file.Files
             .createTempDirectory("graft_mb_graph").toString
-          graft.operators.GraphIndexCache.deleteOnExit(idxDir)
+          AtRest.deleteOnExit(idxDir)
           KnnGraph.writeIndex(build, idxDir)
           val loaded = KnnGraph.loadIndex(spark, idxDir)
           val qs = loaded.vecs.where(col("id") < 10)
@@ -773,10 +768,7 @@ object Microbench {
       }
 
       // best-effort temp cleanup
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(scaleDir)) catch { case _: Throwable => () }
+      AtRest.deleteTree(scaleDir)
     }
 
     // 9. AQE skew join vs salted join, measured (SURVEY §5 calls the
@@ -895,10 +887,7 @@ object Microbench {
       sb ++= "replication); saltedJoin remains for a-priori-known skew,\n"
       sb ++= "non-sort-merge joins, and deterministic at-rest layouts\n"
       sb ++= "(Skew.scala scaladoc).\n"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(tmp)) catch { case _: Throwable => () }
+      AtRest.deleteTree(tmp)
     }
 
     // Connected components: label propagation vs star contraction.

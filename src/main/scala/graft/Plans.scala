@@ -1,16 +1,29 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-/** Dumps formatted physical plans of the headline queries to a file —
-  * the evidence trail for the scale claims in SURVEY.md §5 (pushdown,
-  * broadcasts, partial aggregation, TakeOrderedAndProject).
-  *
-  * Usage: runMain graft.Explain [sfDir] [outFile]
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SimpleMode
+
+/** Plan and job evidence for named queries, on the [[Session]] the
+  * bench and the correctness dump run on. Each query executes ONCE at
+  * the bench SF (`SPARK_GRAFT_SF_DIR`, as for [[Bench]]):
+  *   - its executed physical plan goes to the output file — after the
+  *     action, so AdaptiveSparkPlan prints the final (`isFinalPlan=true`)
+  *     plan with AQE's runtime join and coalescing decisions;
+  *   - every Spark job it submitted goes to stdout with its wall time,
+  *     stage/task counts and call site, marked `build` (submitted while
+  *     the DataFrame was constructed: schema inference, at-rest artifact
+  *     builds, eager checkpoints), `action`, or `other` (a thread that
+  *     carries neither mark).
+  * Query names come from `SPARK_GRAFT_QUERIES` (default: [[headline]]).
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.Plans [outFile]
+  * (default docs/PLANS.md)
   */
-object Explain {
+object Plans {
   val headline = Seq(
     "knn_cosine", "knn_join", "q1_agg", "q3_join", "q5_join", "q9_profit",
     "meta_filter", "dedup_minhash", "dedup_jaccard", "dedup_embedding",
@@ -106,19 +119,48 @@ object Explain {
     "vector_sql_ann_dml_delete", "vector_sql_ann_dml_update",
     "vector_sql_ann_cosine_recall", "vector_sql_ann_count")
 
+  /** Local property carrying the phase a job is submitted in. */
+  private val Phase = "graft.plans.phase"
+
+  private final case class Job(id: Int, phase: String, t0: Long,
+      site: String, stages: Int, tasks: Int) { @volatile var t1 = 0L }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("docs/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val out = args.headOption.getOrElse("docs/PLANS.md")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to the bench SF directory"))
+    val names = sys.env.get("SPARK_GRAFT_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(headline)
+    val cpus = Session.cpus
+    val spark = Session(cpus)
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentHashMap[Int, Job]()
+    // the listener bus is asynchronous: a "flush" job's end event is
+    // delivered after every event of the query's own jobs
+    @volatile var flushed = new CountDownLatch(1)
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val site = e.stageInfos.map(si =>
+            si.name.take(40) + "@" + si.details.linesIterator
+              .filter(_.contains("graft")).take(1).mkString.trim.take(80))
+          .mkString(" | ").take(300)
+        jobs.put(e.jobId, Job(e.jobId,
+          Option(e.properties).flatMap(p => Option(p.getProperty(Phase)))
+            .getOrElse("other"), e.time,
+          site, e.stageInfos.size, e.stageInfos.map(_.numTasks).sum))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobs.get(e.jobId)).foreach { j =>
+          j.t1 = e.time
+          if (j.phase == "flush") flushed.countDown()
+        }
+    })
     val sb = new StringBuilder
     sb ++= "# Physical plans of headline queries\n\n"
-    sb ++= s"Generated by `graft.Explain` on `$sfDir`. What to look for:\n"
+    sb ++= s"Generated by `graft.Plans` on `$sfDir`, on `graft.Session`\n"
+    sb ++= s"(`local[$cpus]`, GraftExtensions on) — the session `graft.Bench`\n"
+    sb ++= "and `graft.Verify` run on. What to look for:\n"
     sb ++= "`PushedFilters` at the scans, `BroadcastHashJoin` for dims,\n"
     sb ++= "`partial_topk_pairs` before the exchange in knn_join,\n"
     sb ++= "`TakeOrderedAndProject` for every top-k, and `*(n)` marking\n"
@@ -129,14 +171,33 @@ object Explain {
     sb ++= "tables that scale with SF (customer/part/supplier); a\n"
     sb ++= "BroadcastHashJoin there is AQE's small-SF decision, not a\n"
     sb ++= "forced hint that would OOM at 100x.\n"
-    headline.foreach { name =>
+    names.foreach { name =>
+      jobs.clear()
+      flushed = new CountDownLatch(1)
+      val t0 = System.nanoTime()
+      sc.setLocalProperty(Phase, "build")
       val df = SparkEntry.queries(name)(spark, sfDir)
+      val t1 = System.nanoTime()
+      sc.setLocalProperty(Phase, "action")
       // run THIS dataset's own query execution (count() would plan a
-      // separate agg query) so AdaptiveSparkPlan reports the FINAL plan
+      // separate aggregate) so AdaptiveSparkPlan reports the FINAL plan
       df.collect()
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-      sb ++= s"\n## $name\n\n```\n$plan```\n"
+      val t2 = System.nanoTime()
+      sc.setLocalProperty(Phase, "flush")
+      sc.parallelize(Seq(0), 1).count()
+      sc.setLocalProperty(Phase, null)
+      flushed.await()
+      sb ++= s"\n## $name\n\n```\n${df.queryExecution.explainString(SimpleMode)}```\n"
+      val js = jobs.values.asScala.toSeq.filter(_.phase != "flush").sortBy(_.id)
+      println(f"PLANS $name total=${(t2 - t0) / 1e9}%.2fs " +
+        f"build=${(t1 - t0) / 1e9}%.2fs jobs=${js.size}")
+      js.foreach { j =>
+        val d = if (j.t1 == 0) -1.0 else (j.t1 - j.t0) / 1e3
+        println(f"  job=${j.id}%-4d ${j.phase}%-6s ${d}%6.3fs " +
+          f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d ${j.site}")
+      }
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     // streaming_search executes inside foreachBatch, so its evidence
     // is the PER-MICRO-BATCH probe plan: replay one batch statically
@@ -154,8 +215,7 @@ object Explain {
       val probe = graft.operators.Ann.searchIvfBatch(
         tagged, cents, batch, "vec_id", "embedding", "cosine", 10, 2)
       probe.collect()
-      val plan = probe.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
+      val plan = probe.queryExecution.explainString(SimpleMode)
       sb ++= s"\n## streaming_search (per-micro-batch probe)\n\n```\n$plan```\n"
     }
     // streaming_late_audit: the EXECUTED streaming plan of the

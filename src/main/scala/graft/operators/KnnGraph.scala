@@ -888,56 +888,13 @@ object KnnGraph {
   * bit-identical to an in-query rebuild and every DuckDB oracle —
   * which replays the build chain textually — still matches.
   *
-  * Scope: one temp directory per JVM (the Verify/Bench process), so a
-  * single gate or bench run amortizes the build across all graph
-  * consumers while separate runs stay hermetic. Keys embed the
-  * canonical data dir, a corpus-variant tag and the build degree, so
-  * different SFs / base-subset builds never collide.
+  * Scope: the per-JVM [[AtRest]] store, so a single gate or bench run
+  * amortizes the build across all graph consumers while separate runs
+  * stay hermetic. Keys embed the canonical data dir, a corpus-variant
+  * tag and the build degree, so different SFs / base-subset builds
+  * never collide.
   */
 object GraphIndexCache {
-
-  /** Recursively delete `path` at JVM exit — the shared cleanup for
-    * per-JVM at-rest artifacts (this cache's root, SparkEntry's SQL
-    * IVF index dir): repeated gate/bench JVMs would otherwise
-    * accumulate corpus-sized /tmp garbage until the disk fills.
-    */
-  def deleteOnExit(path: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(path)) catch { case _: Throwable => () }
-    }))
-
-  private lazy val root: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_graph_static").toString
-    deleteOnExit(dir)
-    dir
-  }
-
-  /** At-rest location for `key` (md5-hashed: keys carry paths). */
-  private def dirFor(key: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"$root/$md"
-  }
-
-  private def marker(dir: String) = java.nio.file.Paths.get(dir, "_COMPLETE")
-
-  private def isBuilt(dir: String): Boolean =
-    java.nio.file.Files.exists(marker(dir))
-
-  /** Per-(key, degree) build monitors: concurrent callers building
-    * DIFFERENT indexes proceed in parallel; only same-key callers
-    * serialize (an object-wide lock would stall every graph consumer
-    * behind one unrelated NN-descent build + parquet write).
-    */
-  private val keyLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def lockFor(cacheKey: String): Object =
-    keyLocks.computeIfAbsent(cacheKey, _ => new Object)
 
   /** The at-rest index path for (`key`, `degree`), building and
     * persisting via `corpus` on first use — the streaming serve
@@ -948,18 +905,11 @@ object GraphIndexCache {
     * column must be dense longs in [0, n) — the KnnGraph contract.
     */
   def ensurePath(key: String, degree: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding")(corpus: => DataFrame): String = {
-    val cacheKey = s"$key#$degree"
-    lockFor(cacheKey).synchronized {
-      val dir = dirFor(cacheKey)
-      if (!isBuilt(dir)) ArtifactTimes.timed(cacheKey) {
-        KnnGraph.writeIndex(
-          KnnGraph.nnDescentBuild(corpus, idCol, vecCol, degree), dir)
-        java.nio.file.Files.createFile(marker(dir))
-      }
-      dir
+      vecCol: String = "embedding")(corpus: => DataFrame): String =
+    AtRest.dir(s"$key#$degree") { dir =>
+      KnnGraph.writeIndex(
+        KnnGraph.nnDescentBuild(corpus, idCol, vecCol, degree), dir)
     }
-  }
 
   /** The loaded at-rest [[KnnGraph.Build]] for (`key`, `degree`),
     * building once on first use. `rounds` holds only the final graph
@@ -976,14 +926,6 @@ object GraphIndexCache {
     * the build-audit query's hook, so a full run pays the NN-descent
     * cost exactly once no matter which graph query runs first.
     */
-  def seed(build: KnnGraph.Build, key: String, degree: Int): Unit = {
-    val cacheKey = s"$key#$degree"
-    lockFor(cacheKey).synchronized {
-      val dir = dirFor(cacheKey)
-      if (!isBuilt(dir)) ArtifactTimes.timed(cacheKey) {
-        KnnGraph.writeIndex(build, dir)
-        java.nio.file.Files.createFile(marker(dir))
-      }
-    }
-  }
+  def seed(build: KnnGraph.Build, key: String, degree: Int): Unit =
+    AtRest.dir(s"$key#$degree")(KnnGraph.writeIndex(build, _))
 }

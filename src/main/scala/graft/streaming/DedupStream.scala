@@ -99,10 +99,7 @@ object DedupStream {
           .orderBy(col("doc_a"), col("doc_b"))
           .localCheckpoint(eager = true) // detach from the temp dir
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(tmp)) catch { case _: Throwable => () }
+      graft.operators.AtRest.deleteTree(tmp)
     }
   }
 
@@ -158,10 +155,7 @@ object DedupStream {
         .orderBy(col("event_type"))
         .localCheckpoint(eager = true) // detach from the temp dir
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(tmp)) catch { case _: Throwable => () }
+      graft.operators.AtRest.deleteTree(tmp)
     }
   }
 }

@@ -233,7 +233,7 @@ object EventStream {
     * iff its window END is <= that watermark.
     */
   /** The watermarked hourly aggregation the late-audit stream runs per
-    * micro-batch — split out so Explain can dump its EXECUTED plan.
+    * micro-batch — split out so graft.Plans can dump its EXECUTED plan.
     */
   private[graft] def lateAgg(src: DataFrame, delay: String): DataFrame =
     src.withColumn("event_ts", tsCol)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{Ann, KnnGraph}
+import graft.operators.{Ann, AtRest, KnnGraph}
+import scala.util.control.NonFatal
 
 /** Streaming SEARCH over an at-rest index — the serving mirror of
   * StreamIngestSpec's ingest direction (there: vectors stream INTO a
@@ -76,16 +77,13 @@ object SearchStream {
           .localCheckpoint(eager = true)
     } finally {
       hot.foreach(df => try df.unpersist(false)
-        catch { case _: Throwable => () })
+        catch { case NonFatal(e) =>
+          System.err.println(s"[stream] unpersist failed: ${e.getClass.getName}: ${e.getMessage}")
+        })
       // best-effort temp cleanup of the drain output only — idxDir is
       // the SHARED at-rest index (GraphIndexCache owns its lifetime);
       // the checkpoint above owns the result rows
-      try {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(new java.io.File(outDir))
-      } catch { case _: Throwable => () }
+      AtRest.deleteTree(outDir)
     }
   }
 
@@ -133,10 +131,7 @@ object SearchStream {
     } finally {
       tagged.unpersist(false)
       // best-effort temp cleanup; the checkpoint above owns the rows
-      try {
-        val d = new java.io.File(outDir)
-        Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      } catch { case _: Throwable => () }
+      AtRest.deleteTree(outDir)
     }
   }
 }

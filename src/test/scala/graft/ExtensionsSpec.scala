@@ -34,6 +34,73 @@ class ExtensionsSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows == Seq(("a", 3L, 0L), ("b", 1L, 0L), ("c", 1L, 0L)))
   }
+
+  test("Session: extensions on, shuffle partitions = cpus, UTC") {
+    val s = Session(cpus = 4)
+    assert(s.sql("SELECT vec_l2(array(0.0F), array(2.0F))").head().getDouble(0) == 2.0)
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
+  test("DumpOracles.render round-trips control chars, quotes and backslashes") {
+    val m = Map("k\t1" -> "a\tb\rc\nd\"e\\f\u0001g", "plain" -> "SELECT 1")
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(DumpOracles.render(m), classOf[java.util.Map[String, String]])
+    import scala.jdk.CollectionConverters._
+    assert(back.asScala.toMap == m)
+  }
+
+  test("src/main: one session factory, no swallowed Throwable") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val catchAll = """case\s+\w+\s*:\s*Throwable\b""".r
+    val bad = files(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.toSeq.flatMap { case (line, i) =>
+        val code = line.trim
+        val doc = code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")
+        val session = !doc && code.contains("SparkSession.builder()") &&
+          f.getName != "Session.scala"
+        if (session || catchAll.findFirstIn(code).nonEmpty)
+          Some(s"${f.getPath}:${i + 1}: $code")
+        else None
+      } finally src.close()
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+}
+
+class AtRestSpec extends AnyFunSuite {
+  import java.nio.file.{Files, Paths}
+  import graft.operators.AtRest
+
+  test("AtRest.dir: a write that throws leaves no marker; the next call rebuilds") {
+    val key = s"atrest-spec-${System.nanoTime()}"
+    var builds = 0
+    intercept[IllegalStateException] {
+      AtRest.dir(key) { p =>
+        builds += 1
+        Files.createDirectories(Paths.get(p))
+        Files.writeString(Paths.get(p, "partial"), "x")
+        throw new IllegalStateException("write failed")
+      }
+    }
+    def ok(p: String): Unit = {
+      builds += 1
+      Files.createDirectories(Paths.get(p))
+      Files.writeString(Paths.get(p, "part-0"), "ok")
+    }
+    val dir = AtRest.dir(key)(ok)
+    assert(Files.exists(Paths.get(dir, "_COMPLETE")))
+    assert(Files.exists(Paths.get(dir, "part-0")))
+    assert(!Files.exists(Paths.get(dir, "partial")))
+    assert(AtRest.dir(key)(ok) == dir)
+    assert(builds == 2)
+    assert(AtRest.buildTimes.contains(key))
+  }
 }
 
 class ImportExportSpec extends AnyFunSuite {

@@ -10,16 +10,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 object SparkTestSession {
-  // built withExtensions so the suite dogfoods the production session
-  // wiring (ExtensionsSpec asserts the injected functions resolve)
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+  // the production session factory, so the suite dogfoods the session
+  // wiring every main runs on (ExtensionsSpec asserts what it promises)
+  lazy val spark: SparkSession = Session(cpus = 4)
 }
 
 class VectorExprsSpec extends AnyFunSuite {

@@ -16,8 +16,8 @@ import pyarrow.parquet as pq
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 SKIP_RUN = os.environ.get("SKIP_RUN") == "1"
-# QUERIES=a,b,c gates only the named queries, via graft.RunOne
-# (seconds instead of the ~10-minute full Verify)
+# QUERIES=a,b,c gates only the named queries: graft.Verify's optional
+# name list runs just those (seconds instead of the ~10-minute full run)
 ONLY = [q for q in os.environ.get("QUERIES", "").split(",") if q]
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -25,8 +25,7 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 if not SKIP_RUN:
     r = subprocess.run(
         ["sbt", "-batch",
-         f'runMain graft.RunOne {",".join(ONLY)} {SF} {OUT}' if ONLY
-         else f'runMain graft.Verify {SF} {OUT}'],
+         f'runMain graft.Verify {SF} {OUT} {",".join(ONLY)}'.rstrip()],
         capture_output=True, text=True, cwd="/root/repo")
     sys.stdout.write("\n".join(l for l in r.stdout.splitlines()
                                if "error" in l.lower() or "failed" in l.lower()) + "\n")
