@@ -12,18 +12,39 @@ import org.apache.spark.sql.functions._
   * bytes per touched row. At rest the codes are partitioned by
   * cluster: probing = partition-pruned scan of nprobe directories.
   *
-  * This variant PQ-encodes the raw vectors (IVF-Flat-PQ). Classic
-  * IVF-PQ encodes residuals (x - centroid) for tighter quantization;
-  * that swaps one `transform` into the encode input and a query-side
-  * per-cluster ADC table. Both forms are DuckDB-oracled end to end —
+  * Encode and scoring are Pq's codegen'd kernels: build and append
+  * run `pq_encode` over the cluster-tagged frame they already hold
+  * (no join back on id), and search is a broadcast probe join, a
+  * broadcast cross join with the query and `pq_adc` under one top-k —
+  * no explode, no codebook join, no shuffle after routing.
+  *
+  * [[build]] PQ-encodes the raw vectors (IVF-Flat-PQ). Classic
+  * IVF-PQ encodes residuals (x - centroid) for tighter quantization
+  * ([[buildResidual]]); that swaps the encode input and scores each
+  * probed cluster against its own residual query. Both forms are
+  * DuckDB-oracled end to end —
   * static centroids (`ann_ivfpq_static`) and TRAINED, raw
   * (`ann_ivfpq`) and residual (`ann_ivfpq_residual`), via the
   * 1e-6-snapped unrolled k-means chains.
   */
 object IvfPq {
 
-  /** codes: (idCol, cluster, codes array<int>). */
+  /** codes: (idCol, codes array<int>, cluster). */
   case class Index(centroids: DataFrame, model: Pq.Model, codes: DataFrame)
+
+  /** (idCol, codes, cluster) from a frame that already carries `cluster`. */
+  private def encodeTagged(model: Pq.Model, tagged: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    tagged.select(col(idCol), Pq.pq_encode(model, col(vecCol)).as("codes"),
+      col("cluster"))
+
+  /** (idCol, cluster, _r = x - centroid(x) as doubles) of tagged rows. */
+  private def residuals(tagged: DataFrame, centroids: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    tagged.join(broadcast(centroids), Seq("cluster"))
+      .select(col(idCol), col("cluster"),
+        zip_with(col(vecCol), col("centroid"),
+          (x, c) => x.cast("double") - c).as("_r"))
 
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, kClusters: Int = 16, ivfIters: Int = 3,
@@ -33,9 +54,7 @@ object IvfPq {
       corpus, idCol, vecCol, kClusters, ivfIters, trainSampleMod)
     val model = Pq.train(corpus, idCol, vecCol, dim, m, kCodes, pqIters,
       trainSampleMod)
-    Index(centroids, model,
-      Pq.encode(model, corpus, idCol, vecCol)
-        .join(tagged.select(col(idCol), col("cluster")), Seq(idCol)))
+    Index(centroids, model, encodeTagged(model, tagged, idCol, vecCol))
   }
 
   /** Deterministic variant for oracles/tests: centroids = first
@@ -48,13 +67,12 @@ object IvfPq {
         transform(col(vecCol), _.cast("double")).as("centroid"))
     val tagged = Ann.tagCorpus(corpus, idCol, vecCol, cents)
     val model = Pq.staticCodebooks(corpus, idCol, vecCol, dim, m, kCodes)
-    Index(cents, model,
-      Pq.encode(model, corpus, idCol, vecCol)
-        .join(tagged.select(col(idCol), col("cluster")), Seq(idCol)))
+    Index(cents, model, encodeTagged(model, tagged, idCol, vecCol))
   }
 
-  /** Probe nprobe clusters, ADC-score only their codes. Fully lazy
-    * (query stays a broadcast one-row frame with `qvec`).
+  /** Probe nprobe clusters, ADC-score only their codes with
+    * `pq_adc`. No action on the query path beyond the model's one-time
+    * codebook collect (query stays a broadcast one-row frame with `qvec`).
     */
   def search(index: Index, query: DataFrame, idCol: String,
       topK: Int, nprobe: Int = 2): DataFrame = {
@@ -78,56 +96,38 @@ object IvfPq {
       trainSampleMod: Long = 1): Index = {
     val (tagged, centroids) = Ann.buildIvf(
       corpus, idCol, vecCol, kClusters, ivfIters, trainSampleMod)
-    val resid = tagged.join(broadcast(centroids), Seq("cluster"))
-      .select(col(idCol), col("cluster"),
-        zip_with(col(vecCol), col("centroid"),
-          (x, c) => x.cast("double") - c).as("_r"))
+    val resid = residuals(tagged, centroids, idCol, vecCol)
       .localCheckpoint(true) // encode + train both consume it
     val sample =
       if (trainSampleMod > 1) resid.where(col(idCol) % trainSampleMod === 0)
       else resid
     val model = Pq.train(sample, idCol, "_r", dim, m, kCodes, pqIters)
-    Index(centroids, model,
-      Pq.encode(model, resid, idCol, "_r")
-        .join(resid.select(col(idCol), col("cluster")), Seq(idCol)))
+    Index(centroids, model, encodeTagged(model, resid, idCol, "_r"))
   }
 
   /** Search a residual index: every probed cluster gets its own
-    * residual query (q - centroid), and ADC scores each candidate's
-    * codes against its cluster's residual. Same join shape as the
-    * raw-vector path — one extra tiny (nprobe-row) broadcast.
+    * residual query (q - centroid), and `pq_adc` scores each
+    * candidate's codes against its cluster's residual. Same shape as
+    * the raw-vector path — the query side is one tiny (nprobe-row)
+    * broadcast instead of the one-row query.
     */
   def searchResidual(index: Index, query: DataFrame, idCol: String,
       topK: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame = {
-    val m = index.model
     val qc = Ann.nearestClusters(index.centroids, query, nprobe)
     val qres = qc.join(broadcast(index.centroids), Seq("cluster"))
       .crossJoin(broadcast(query))
       .select(col("cluster"),
         zip_with(col("qvec"), col("centroid"),
           (x, c) => x.cast("double") - c).as("qres"))
-    val exploded = index.codes
-      .join(broadcast(qres), Seq("cluster")) // partition-prunes at rest
-      .select(col(idCol), col("qres"),
-        posexplode(col("codes")).as(Seq("grp", "code")))
-    val qsub = slice(col("qres"), col("grp") * m.subDim + 1, lit(m.subDim))
-    val pd = aggregate(
-      zip_with(qsub, col("centroid"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    exploded
-      .join(broadcast(m.codebooks), Seq("grp", "code"))
-      .withColumn("_pd", pd)
-      .groupBy(col(idCol))
-      .agg(sum(col("_pd")).as("_s"))
-      .select(col(idCol), round(sqrt(col("_s")), roundTo).as("score"))
-      .orderBy(col("score"), col(idCol))
-      .limit(topK)
+    Pq.adcTopK(index.model,
+      index.codes.join(broadcast(qres), Seq("cluster")), // partition-prunes at rest
+      "qres", idCol, topK, roundTo)
   }
 
   /** Live-index insert for the composed index: route each new vector
     * through the FROZEN coarse quantizer (argmin-l2 centroid), encode
-    * with the FROZEN codebooks, union — map-only against the new batch
-    * plus one tiny broadcast, no retrain, no touch of existing codes.
+    * the routed rows with the FROZEN codebooks, union — no retrain, no
+    * touch of existing codes; the routing is the only shuffle.
     * `residual = true` encodes x - centroid(x) instead of x, matching
     * a [[buildResidual]] index (the append must mirror the encode the
     * index was built with or ADC scores are garbage).
@@ -136,16 +136,10 @@ object IvfPq {
       vecCol: String, residual: Boolean = false): Index = {
     val tagged = Ann.tagCorpus(newRows, idCol, vecCol, index.centroids)
     val newCodes =
-      if (residual) {
-        val resid = tagged.join(broadcast(index.centroids), Seq("cluster"))
-          .select(col(idCol), col("cluster"),
-            zip_with(col(vecCol), col("centroid"),
-              (x, c) => x.cast("double") - c).as("_r"))
-        Pq.encode(index.model, resid, idCol, "_r")
-          .join(resid.select(col(idCol), col("cluster")), Seq(idCol))
-      } else
-        Pq.encode(index.model, newRows, idCol, vecCol)
-          .join(tagged.select(col(idCol), col("cluster")), Seq(idCol))
+      if (residual)
+        encodeTagged(index.model,
+          residuals(tagged, index.centroids, idCol, vecCol), idCol, "_r")
+      else encodeTagged(index.model, tagged, idCol, vecCol)
     Index(index.centroids, index.model, index.codes.unionByName(newCodes))
   }
 

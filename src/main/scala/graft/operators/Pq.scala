@@ -1,28 +1,209 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions
+
+/** Static kernels for PQ encode and ADC scoring over a flat codebook
+  * table: entry (g, c) — subspace g, code c — holds subDim doubles
+  * starting at (g * k + c) * subDim. Both keep the op order of the SQL
+  * formulation the DuckDB oracle replays, so results are bit-identical
+  * to it (same ops, same order, IEEE 754):
+  *
+  *   encode: code_g = argmin_c sqrt(sum_i (x_i - e_gc,i)^2), the sum a
+  *           fold from 0.0 in index order (vec_l2's loop, floats read
+  *           as doubles); ties go to the lower code and NaN ranks above
+  *           every number — Spark's min_by((distance, code)) ordering
+  *   adc:    sum_g sum_i (q_i - e_g,code_g,i)^2, each inner sum a fold
+  *           from 0.0 in index order, groups added in order 0..m-1
+  *           (the oracle's list_sum). Squared: callers take the sqrt.
+  */
+object PqKernels {
+  /** A null vector encodes to m zero codes: every distance is null,
+    * so the (distance, code) minimum is the lowest code. */
+  def encode(vec: ArrayData, isFloat: Boolean, m: Int, k: Int, subDim: Int,
+      table: Array[Double]): ArrayData = {
+    val out = new Array[Int](m)
+    if (vec != null) {
+      val n = vec.numElements()
+      if (n != m * subDim) throw new IllegalArgumentException(
+        s"pq_encode: dimension mismatch: vector has $n elements, " +
+          s"the model expects ${m * subDim} (m=$m x subDim=$subDim)")
+      val x = new Array[Double](n)
+      var j = 0
+      while (j < n) {
+        x(j) = if (isFloat) vec.getFloat(j).toDouble else vec.getDouble(j)
+        j += 1
+      }
+      var g = 0
+      while (g < m) {
+        val off = g * subDim
+        var best = 0; var bestD = 0.0
+        var c = 0
+        while (c < k) {
+          val base = (g * k + c) * subDim
+          var s = 0.0; var i = 0
+          while (i < subDim) { val d = x(off + i) - table(base + i); s += d * d; i += 1 }
+          val dist = math.sqrt(s)
+          if (c == 0 || dist < bestD || (bestD.isNaN && !dist.isNaN)) {
+            best = c; bestD = dist
+          }
+          c += 1
+        }
+        out(g) = best
+        g += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  def adc(codes: ArrayData, q: ArrayData, qIsFloat: Boolean, m: Int, k: Int,
+      subDim: Int, table: Array[Double]): Double = {
+    if (codes.numElements() != m) throw new IllegalArgumentException(
+      s"pq_adc: ${codes.numElements()} codes, the model has m=$m subspaces")
+    if (q.numElements() != m * subDim) throw new IllegalArgumentException(
+      s"pq_adc: dimension mismatch: query has ${q.numElements()} elements, " +
+        s"the model expects ${m * subDim} (m=$m x subDim=$subDim)")
+    var total = 0.0; var g = 0
+    while (g < m) {
+      val c = codes.getInt(g)
+      if (c < 0 || c >= k) throw new IllegalArgumentException(
+        s"pq_adc: code $c out of range [0, $k) in subspace $g")
+      val base = (g * k + c) * subDim; val off = g * subDim
+      var s = 0.0; var i = 0
+      while (i < subDim) {
+        val d = (if (qIsFloat) q.getFloat(off + i).toDouble else q.getDouble(off + i)) -
+          table(base + i)
+        s += d * d
+        i += 1
+      }
+      total += s
+      g += 1
+    }
+    total
+  }
+}
+
+/** pq_encode(vec): vector -> m codes (array<int>), never null. Codegen'd
+  * call into the static kernel with the codebook table attached as a
+  * referenced object (model-sized: m*k*subDim doubles).
+  */
+case class PqEncodeExpr(child: Expression, m: Int, k: Int, subDim: Int,
+    table: Array[Double]) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "pq_encode"
+  // plans print the model shape, not the table's identity hash
+  override protected def stringArgs: Iterator[Any] = Iterator(child, m, k, subDim)
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<float|double>, got ${t.catalogString}")
+  }
+  private def isFloat: Boolean = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
+  override def eval(input: InternalRow): Any =
+    PqKernels.encode(child.eval(input).asInstanceOf[ArrayData], isFloat, m, k,
+      subDim, table)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = child.genCode(ctx)
+    val tRef = ctx.addReferenceObj("pqTable", table, "double[]")
+    ev.copy(code = code"""
+      |${v.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  graft.operators.PqKernels.encode(${v.isNull} ? null : ${v.value},
+      |    $isFloat, $m, $k, $subDim, $tRef);""".stripMargin, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+/** pq_adc(codes, qvec): squared ADC distance between a code row and a
+  * full-precision query — the PQ serving scan, map-only (no explode,
+  * no codebook join, no shuffle before the top-k heap).
+  */
+case class PqAdcExpr(left: Expression, right: Expression, m: Int, k: Int,
+    subDim: Int, table: Array[Double]) extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "pq_adc"
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right, m, k, subDim)
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(IntegerType, _), ArrayType(FloatType | DoubleType, _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (array<int>, array<float|double>), got " +
+        s"(${l.catalogString}, ${r.catalogString})")
+  }
+  private def qIsFloat: Boolean = right.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    PqKernels.adc(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
+      qIsFloat, m, k, subDim, table)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tRef = ctx.addReferenceObj("pqTable", table, "double[]")
+    defineCodeGen(ctx, ev, (c, q) =>
+      s"graft.operators.PqKernels.adc($c, $q, $qIsFloat, $m, $k, $subDim, $tRef)")
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
 
 /** Product Quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the classic vector-DB
   * compression: split each d-dim vector into `m` subvectors, k-means
   * each subspace to `k` codes, store only the m code ids (d floats ->
   * m small ints; 64 floats -> 8 bytes at k<=256). Search scores a
-  * query against the codes via an Asymmetric Distance Computation
-  * table without touching the original vectors.
+  * query against the codes via Asymmetric Distance Computation
+  * without touching the original vectors.
   *
   * Spark-first shape: all m subspace k-means run as ONE grouped
-  * pipeline per iteration (group = subspace id), not m driver loops;
-  * the ADC table (m*k doubles) is collected once per query and folded
-  * into a literal-array column expression, so scoring is a codegen'd
-  * per-row lookup-sum with no join against the table.
+  * pipeline per iteration (group = subspace id), not m driver loops.
+  * Encode and ADC scoring are codegen'd per-row kernels
+  * ([[PqKernels]]: `pq_encode`, `pq_adc`) over the flat codebook table
+  * the model collects once — map-only, with no explode, no join
+  * against the codebooks and no shuffle.
   */
 object Pq {
 
-  case class Model(m: Int, k: Int, subDim: Int, codebooks: DataFrame)
+  case class Model(m: Int, k: Int, subDim: Int, codebooks: DataFrame) {
+    /** The codebooks as [[PqKernels]]' flat table, collected once per
+      * model instance: m*k*subDim doubles, model-sized like Sq.Model's
+      * ranges. Every (grp, code) in [0, m) x [0, k) must appear once.
+      */
+    lazy val table: Array[Double] = {
+      val rows = codebooks.select(col("grp"), col("code"), col("centroid")).collect()
+      val t = new Array[Double](m * k * subDim)
+      val seen = new Array[Boolean](m * k)
+      rows.foreach { r =>
+        val g = r.getInt(0); val c = r.getInt(1); val e = r.getSeq[Double](2)
+        require(g >= 0 && g < m && c >= 0 && c < k && !seen(g * k + c),
+          s"pq: codebook entry (grp $g, code $c) is out of range or repeated")
+        require(e.length == subDim,
+          s"pq: codebook entry (grp $g, code $c) has ${e.length} elements, subDim is $subDim")
+        seen(g * k + c) = true
+        e.copyToArray(t, (g * k + c) * subDim)
+      }
+      require(rows.length == m * k,
+        s"pq: ${rows.length} codebook entries, expected m*k = ${m * k}")
+      t
+    }
+  }
 
   /** Grouped Lloyd's: one k-means per `grp` value, all groups in the
     * same jobs. Input: (grp: int, _id: long, _v: array<double>).
@@ -169,7 +350,7 @@ object Pq {
     * vector table — at 100 TB this is the ONLY full-corpus artifact a
     * search scans, 32x smaller than the vectors), `path`/codebooks
     * (m*k tiny rows) and `path`/params. The at-rest serving layout
-    * for [[searchAdc]]'s map-only scoring.
+    * for [[searchAdcJoin]]'s map-only scoring.
     */
   def writeIndex(model: Model, codes: DataFrame, path: String): Unit = {
     codes.write.mode("overwrite").parquet(s"$path/codes")
@@ -193,21 +374,24 @@ object Pq {
   }
 
   /** Load a persisted PQ index: (model, codes). Codebooks stay a
-    * DataFrame (collected lazily by the serving path that needs the
-    * literal table).
+    * DataFrame, collected into [[Model.table]] the first time a
+    * kernel needs it.
     */
   def loadIndex(spark: SparkSession, path: String): (Model, DataFrame) =
     (loadModel(spark, path), spark.read.parquet(s"$path/codes"))
 
-  /** Encode: (id, codes array<int> of length m). */
+  def pq_encode(model: Model, vec: Column): Column =
+    Shims.column(PqEncodeExpr(Shims.expression(vec),
+      model.m, model.k, model.subDim, model.table))
+
+  /** Squared ADC distance of `codes` to `qvec`; score with sqrt. */
+  def pq_adc(model: Model, codes: Column, qvec: Column): Column =
+    Shims.column(PqAdcExpr(Shims.expression(codes), Shims.expression(qvec),
+      model.m, model.k, model.subDim, model.table))
+
+  /** Map-only encode: (idCol, codes array<int> of length m). */
   def encode(model: Model, corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
-    assignCodes(
-      subvectors(corpus, idCol, vecCol, model.m, model.subDim), model.codebooks)
-      .groupBy(col("_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("grp"), col("code")))),
-        s => s.getField("code")).as("codes"))
-      .select(col("_id").as(idCol), col("codes"))
+    corpus.select(col(idCol), pq_encode(model, col(vecCol)).as("codes"))
 
   /** Live-index insert: encode new rows with the FROZEN codebooks and
     * union — map-only, no retrain (the storage-Insert path; same
@@ -227,93 +411,36 @@ object Pq {
       doomed: DataFrame): DataFrame =
     codes.join(doomed.select(col(idCol)), Seq(idCol), "left_anti")
 
-  /** ADC top-k: squared-l2 lookup table folded into a literal array;
-    * score(row) = sum_g table[g*k + codes[g]]. Returns (id, score)
-    * ascending — approximate distances, exact ordering by the codes.
-    */
-  def searchAdc(model: Model, codes: DataFrame, queryVec: Array[Float],
-      idCol: String, topK: Int, roundTo: Int = 4): DataFrame = {
-    val q = queryVec.map(_.toDouble)
-    val table: Array[Double] = model.codebooks
-      .collect() // m*k rows of subDim doubles — tiny, driver-side by design
-      .map { r =>
-        val g = r.getAs[Int]("grp"); val c = r.getAs[Int]("code")
-        val cent = r.getSeq[Double](r.fieldIndex("centroid"))
-        var s = 0.0
-        var i = 0
-        while (i < model.subDim) {
-          val dji = q(g * model.subDim + i) - cent(i); s += dji * dji; i += 1
-        }
-        (g * model.k + c, s)
-      }.sortBy(_._1).map(_._2)
-    val tLit = typedLit(table.toSeq)
-    val score = aggregate(
-      zip_with(col("codes"), sequence(lit(0), lit(model.m - 1)),
-        (code, g) => element_at(tLit, (g * model.k + code).cast("int") + 1)),
-      lit(0.0), (a, x) => a + x)
-    codes.select(col(idCol), round(sqrt(score), roundTo).as("score"))
-      .orderBy(col("score"), col(idCol))
-      .limit(topK)
-  }
-
-  /** ADC top-k with NO driver-side action on the query path: the
-    * query vector stays a (broadcast) one-row DataFrame with column
-    * `qvec`, codes are exploded to (id, grp, code) and broadcast-
-    * joined to the codebooks, and the per-id score is a map-side-
-    * combined sum of per-subspace squared distances. Same answer as
-    * [[searchAdc]]; use this form inside composed query plans, the
-    * literal-table form for interactive single queries.
+  /** ADC top-k: the query stays a (broadcast) one-row DataFrame with
+    * column `qvec` — no driver-side action on the query path beyond
+    * the model's one-time codebook collect — and each code row is
+    * scored by the `pq_adc` kernel, topped by TakeOrderedAndProject.
+    * Returns (id, score) ascending: approximate distances, exact
+    * ordering by the codes.
     */
   def searchAdcJoin(model: Model, codes: DataFrame, query: DataFrame,
-      idCol: String, topK: Int, roundTo: Int = 4): DataFrame = {
-    val exploded = codes.select(col(idCol),
-      posexplode(col("codes")).as(Seq("grp", "code")))
-    // squared sub-distance as an in-index-order fold (mirrors the
-    // DuckDB oracle's list_sum(list_transform(...)) exactly)
-    val qsub = transform(
-      slice(col("qvec"), col("grp") * model.subDim + 1, lit(model.subDim)),
-      _.cast("double"))
-    val pd = aggregate(
-      zip_with(qsub, col("centroid"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    exploded
-      .join(broadcast(model.codebooks), Seq("grp", "code"))
-      .crossJoin(broadcast(query))
-      .withColumn("_pd", pd)
-      .groupBy(col(idCol))
-      .agg(sum(col("_pd")).as("_s"))
-      .select(col(idCol), round(sqrt(col("_s")), roundTo).as("score"))
+      idCol: String, topK: Int, roundTo: Int = 4): DataFrame =
+    adcTopK(model, codes.crossJoin(broadcast(query)), "qvec", idCol, topK, roundTo)
+
+  /** Score rows holding `codes` and a query column `qCol` with
+    * round(sqrt(pq_adc), roundTo); (id, score) top-k ascending. Rows
+    * with null codes are skipped.
+    */
+  private[operators] def adcTopK(model: Model, rows: DataFrame, qCol: String,
+      idCol: String, topK: Int, roundTo: Int): DataFrame =
+    rows.where(col("codes").isNotNull)
+      .select(col(idCol),
+        round(sqrt(pq_adc(model, col("codes"), col(qCol))), roundTo).as("score"))
       .orderBy(col("score"), col(idCol))
       .limit(topK)
-  }
 
   /** ADC shortlist + exact re-rank: scan the 8-byte codes for
     * `candidates` approximate nearest, then compute true distances
     * for only those rows. The production pattern: the full-precision
     * corpus is touched for C rows, not |corpus| — at 100 TB the codes
-    * (32x smaller) are the only full scan.
-    */
-  def searchWithRerank(
-      model: Model, codes: DataFrame, corpus: DataFrame,
-      queryVec: Array[Float], idCol: String, vecCol: String,
-      metric: String, topK: Int, candidates: Int = 100): DataFrame = {
-    val shortlist = searchAdc(model, codes, queryVec, idCol, candidates)
-      .select(col(idCol))
-    val d = VectorFunctions.forMetric(metric)(
-      col(vecCol), typedLit(queryVec.toSeq))
-    corpus
-      .join(broadcast(shortlist), Seq(idCol)) // semi-scan of C ids only
-      .select(col(idCol), round(d, 4).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
-  }
-
-  /** Shortlist + re-rank with the query vector staying a (broadcast)
-    * one-row DataFrame — fully lazy, no driver-side action anywhere on
-    * the query path (the composed-plan twin of [[searchWithRerank]],
-    * same relationship searchAdcJoin has to searchAdc). With static
-    * codebooks the whole plan is deterministic and DuckDB-oracled
-    * (`ann_pq_rerank`).
+    * (32x smaller) are the only full scan. The query stays a
+    * (broadcast) one-row DataFrame; with static codebooks the whole
+    * plan is deterministic and DuckDB-oracled (`ann_pq_rerank`).
     */
   def searchWithRerankJoin(
       model: Model, codes: DataFrame, corpus: DataFrame,

@@ -167,22 +167,12 @@ object Recall {
       m = 8, k = 16)
     val codes = Pq.encode(pqModel, corpus, idCol, vecCol)
       .localCheckpoint(eager = false)
-    // per-(qid, id) ADC score, mirroring Pq.searchAdcJoin's op order
-    val adcScores = {
-      val qsub = transform(
-        slice(col("qvec"), col("grp") * pqModel.subDim + 1, lit(pqModel.subDim)),
-        _.cast("double"))
-      val pd = aggregate(
-        zip_with(qsub, col("centroid"), (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x)
-      codes.select(col(idCol), posexplode(col("codes")).as(Seq("grp", "code")))
-        .join(broadcast(pqModel.codebooks), Seq("grp", "code"))
-        .crossJoin(broadcast(q))
-        .withColumn("_pd", pd)
-        .groupBy(col("qid"), col(idCol))
-        .agg(round(sqrt(sum(col("_pd"))), 4).as("_s"))
-        .localCheckpoint(eager = false)
-    }
+    // per-(qid, id) ADC score: the pq_adc kernel and rounding of
+    // Pq.searchAdcJoin
+    val adcScores = codes.crossJoin(broadcast(q))
+      .select(col("qid"), col(idCol),
+        round(sqrt(Pq.pq_adc(pqModel, col("codes"), col("qvec"))), 4).as("_s"))
+      .localCheckpoint(eager = false)
     val pqAdc = recallRow(exactEuc, topPairs(adcScores, idCol, k),
       idCol, "pq", "adc")
 

@@ -1,9 +1,15 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Pq
+import graft.functions.VectorFunctions
+import graft.operators.{Ann, IvfPq, Pq}
 
 class PqSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -12,6 +18,89 @@ class PqSpec extends AnyFunSuite {
   private lazy val e = Tables.load(spark, sf, "embeddings")
   private lazy val model = Pq.train(e, "vec_id", "embedding", dim = 64, m = 8, k = 16, iters = 2)
   private lazy val codes = Pq.encode(model, e, "vec_id", "embedding").cache()
+  private lazy val static =
+    Pq.staticCodebooks(e, "vec_id", "embedding", dim = 64, m = 8, k = 16)
+  private lazy val q0 = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
+
+  /** The explode + codebook-join + shuffled `min_by` encode that the
+    * pq_encode kernel replaced: the reference it must equal. */
+  private def refEncode(m: Pq.Model, corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("_id"),
+        explode(transform(sequence(lit(0), lit(m.m - 1)), g =>
+          struct(g.as("grp"),
+            transform(slice(col("embedding"), g * m.subDim + 1, lit(m.subDim)),
+              _.cast("double")).as("sv")))).as("e"))
+      .select(col("e.grp").as("grp"), col("_id"), col("e.sv").as("_v"))
+      .join(broadcast(m.codebooks), Seq("grp"))
+      .withColumn("_d", VectorFunctions.vec_l2(col("_v"), col("centroid")))
+      .groupBy(col("grp"), col("_id"))
+      .agg(min_by(col("code"), struct(col("_d"), col("code"))).as("code"))
+      .groupBy(col("_id"))
+      .agg(transform(array_sort(collect_list(struct(col("grp"), col("code")))),
+        s => s.getField("code")).as("codes"))
+      .select(col("_id").as("vec_id"), col("codes"))
+
+  /** The explode + codebook-join + shuffled sum ADC that the pq_adc
+    * kernel replaced: (vec_id, squared distance). */
+  private def refAdc(m: Pq.Model, codes: DataFrame, query: DataFrame): DataFrame = {
+    val qsub = transform(
+      slice(col("qvec"), col("grp") * m.subDim + 1, lit(m.subDim)), _.cast("double"))
+    codes.select(col("vec_id"), posexplode(col("codes")).as(Seq("grp", "code")))
+      .join(broadcast(m.codebooks), Seq("grp", "code"))
+      .crossJoin(broadcast(query))
+      .withColumn("_pd", aggregate(
+        zip_with(qsub, col("centroid"), (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, x) => acc + x))
+      .groupBy(col("vec_id"))
+      .agg(sum(col("_pd")).as("_s"))
+  }
+
+  private def codeMap(df: DataFrame): Map[Long, Seq[Int]] =
+    df.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+
+  /** vec_id -> raw bits of the double, so NaN == NaN and 0.0 != -0.0. */
+  private def bitsMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) ->
+      java.lang.Double.doubleToLongBits(r.getDouble(1))).toMap
+
+  /** Seeded random corpus of `n` float vectors (`vec_id`, `embedding`). */
+  private def randomCorpus(seed: Long, n: Int, dim: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val ss = spark; import ss.implicits._
+    (0 until n).map(i => (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+
+  private def vecFrame(rows: (Long, Seq[Float])*): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, v) => Row(id, v) }),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+
+  private def codesFrame(rows: (Long, Seq[Int])*): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, c) => Row(id, c) }),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("codes", ArrayType(IntegerType)))))
+
+  /** The IllegalArgumentException somewhere in a failed job's causes. */
+  private def iae(f: => Any): IllegalArgumentException = {
+    val t = intercept[Exception](f)
+    Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+      .getOrElse(fail(s"no IllegalArgumentException in $t"))
+  }
+
+  /** Every node of the executed (AQE-final) plan, after running it. */
+  private def executed(df: DataFrame): Seq[SparkPlan] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
 
   test("train: m*k codebook entries of subDim each") {
     assert(model.codebooks.count() == 8 * 16)
@@ -33,66 +122,144 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("ADC search: self-query ranks the encoded vector at/near the top, recall reasonable") {
-    val qvec = e.where(col("vec_id") === 0)
-      .head().getSeq[Float](1).toArray
-    val approx = Pq.searchAdc(model, codes, qvec, "vec_id", topK = 20)
+    val approx = Pq.searchAdcJoin(model, codes, q0, "vec_id", topK = 20)
       .collect().map(_.getLong(0))
     assert(approx.take(5).contains(0L), s"query vector not in top-5: ${approx.toSeq}")
     // recall@10 of PQ-ADC (8 bytes/vector) vs exact l2 top-10
-    val q = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
-    val exact = graft.operators.Knn.topK(e, q, "vec_id", "embedding", "euclidean", 10)
+    val exact = graft.operators.Knn.topK(e, q0, "vec_id", "embedding", "euclidean", 10)
       .collect().map(_.getLong(0)).toSet
     val recall = (exact intersect approx.take(10).toSet).size / 10.0
     assert(recall >= 0.2, s"recall $recall")
   }
 
-  test("searchAdc (literal table) == searchAdcJoin (explode+join), incl. at rest") {
-    // static codebooks: both paths fully deterministic
-    val sm = Pq.staticCodebooks(e, "vec_id", "embedding", dim = 64, m = 8, k = 16)
-    val sc = Pq.encode(sm, e, "vec_id", "embedding").localCheckpoint(true)
-    val qvec = e.where(col("vec_id") === 0).head().getSeq[Float](1).toArray
-    val qdf = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
-
-    val lit = Pq.searchAdc(sm, sc, qvec, "vec_id", topK = 10)
+  test("pq_adc kernel search == explode + join reference, incl. at rest") {
+    // static codebooks: both formulations fully deterministic
+    val sc = Pq.encode(static, e, "vec_id", "embedding").localCheckpoint(true)
+    assert(codeMap(sc) == codeMap(refEncode(static, e)))
+    val kernel = Pq.searchAdcJoin(static, sc, q0, "vec_id", topK = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val join = Pq.searchAdcJoin(sm, sc, qdf, "vec_id", topK = 10)
+    val ref = refAdc(static, sc, q0)
+      .select(col("vec_id"), round(sqrt(col("_s")), 4).as("score"))
+      .orderBy(col("score"), col("vec_id")).limit(10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(lit.sameElements(join),
-      s"literal=${lit.toSeq} join=${join.toSeq}")
+    assert(kernel.sameElements(ref), s"kernel=${kernel.toSeq} ref=${ref.toSeq}")
 
     // at-rest round trip: write codes+codebooks+params, load, same top-k
     val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
-    Pq.writeIndex(sm, sc, dir)
+    Pq.writeIndex(static, sc, dir)
     val (rm, rc) = Pq.loadIndex(spark, dir)
-    assert(rm.m == sm.m && rm.k == sm.k && rm.subDim == sm.subDim)
-    val rest = Pq.searchAdc(rm, rc, qvec, "vec_id", topK = 10)
+    assert(rm.m == static.m && rm.k == static.k && rm.subDim == static.subDim)
+    val rest = Pq.searchAdcJoin(rm, rc, q0, "vec_id", topK = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(rest.sameElements(lit))
+    assert(rest.sameElements(kernel))
   }
 
-  test("searchAdc at rest is map-only: no exchange before TakeOrdered") {
-    val sm = Pq.staticCodebooks(e, "vec_id", "embedding", dim = 64, m = 8, k = 16)
-    val sc = Pq.encode(sm, e, "vec_id", "embedding")
+  test("kernels == explode + join reference on seeded random data: ties, NaN, Inf") {
+    // m=4 x subDim=4, k=8 codebooks from corpus rows 0..7, with code 5
+    // a copy of code 2 in every subspace: exact distance ties, which
+    // the lower code must win
+    val (m, k, sub) = (4, 8, 4)
+    for (seed <- Seq(11L, 12L)) {
+      val base = randomCorpus(seed, 300, m * sub)
+      val rows = base.where(col("vec_id") < k).collect()
+        .map(r => r.getLong(0).toInt -> r.getSeq[Float](1).map(_.toDouble)).toMap
+      val ss = spark; import ss.implicits._
+      val cb = (for (g <- 0 until m; c <- 0 until k) yield
+        (g, c, rows(if (c == 5) 2 else c).slice(g * sub, (g + 1) * sub)))
+        .toDF("grp", "code", "centroid")
+      val pm = Pq.Model(m, k, sub, cb)
+      val v = base.where(col("vec_id") === 20).head().getSeq[Float](1)
+      val corpus = base.unionByName(vecFrame(
+        1000L -> v.updated(5, Float.NaN),               // NaN in subspace 1
+        1001L -> v.updated(9, Float.PositiveInfinity),  // +Inf in subspace 2
+        1002L -> Seq.fill(m * sub)(Float.NaN)))
+      val kernel = codeMap(Pq.encode(pm, corpus, "vec_id", "embedding"))
+      assert(kernel == codeMap(refEncode(pm, corpus)), s"seed $seed")
+      assert(kernel.values.forall(!_.contains(5)), "a tie must go to the lower code")
+      assert(kernel(2L) == Seq(2, 2, 2, 2))
+      assert(kernel(1000L)(1) == 0 && kernel(1001L)(2) == 0)
+      assert(kernel(1002L) == Seq(0, 0, 0, 0))
+      // double-typed input (the residual path) encodes the same
+      val dbl = corpus.select(col("vec_id"),
+        transform(col("embedding"), _.cast("double")).as("embedding"))
+      assert(codeMap(Pq.encode(pm, dbl, "vec_id", "embedding")) == kernel)
+
+      val cs = Pq.encode(pm, corpus, "vec_id", "embedding")
+      for (qid <- Seq(3L, 1000L)) { // an ordinary query and a NaN one
+        val q = corpus.where(col("vec_id") === qid).select(col("embedding").as("qvec"))
+        val got = bitsMap(cs.crossJoin(broadcast(q))
+          .select(col("vec_id"), Pq.pq_adc(pm, col("codes"), col("qvec"))))
+        assert(got == bitsMap(refAdc(pm, cs, q)), s"seed $seed query $qid")
+      }
+    }
+  }
+
+  test("pq_encode of a null vector is m zero codes, as the explode + join encode gave") {
+    // every sub-distance is null, so the (distance, code) minimum is
+    // code 0 in each subspace; ADC skips rows whose codes are null
+    val got = codeMap(Pq.encode(static, vecFrame(7L -> null), "vec_id", "embedding"))
+    assert(got == Map(7L -> Seq.fill(8)(0)))
+    val top = Pq.searchAdcJoin(static, codesFrame(1L -> null, 2L -> Seq.fill(8)(3)),
+      q0, "vec_id", topK = 10).collect().map(_.getLong(0))
+    assert(top.toSeq == Seq(2L))
+  }
+
+  test("dimension mismatch and out-of-range codes raise IllegalArgumentException") {
+    val v = e.where(col("vec_id") === 0).head().getSeq[Float](1)
+    for (bad <- Seq(v.take(60), v ++ v.take(8))) {
+      val x = iae(Pq.encode(static, vecFrame(1L -> bad), "vec_id", "embedding").collect())
+      assert(x.getMessage.contains("pq_encode: dimension mismatch"), x.getMessage)
+    }
+    def search(codes: DataFrame, query: DataFrame): Any =
+      Pq.searchAdcJoin(static, codes, query, "vec_id", topK = 10).collect()
+    val ok = Seq.fill(8)(1)
+    val shortQ = vecFrame(0L -> v.take(60)).select(col("embedding").as("qvec"))
+    assert(iae(search(codesFrame(1L -> ok), shortQ)).getMessage
+      .contains("pq_adc: dimension mismatch"))
+    assert(iae(search(codesFrame(1L -> ok.take(3)), q0)).getMessage
+      .contains("pq_adc: 3 codes"))
+    for (c <- Seq(16, -1)) {
+      val x = iae(search(codesFrame(1L -> ok.updated(7, c)), q0))
+      assert(x.getMessage.contains(s"pq_adc: code $c out of range [0, 16)"), x.getMessage)
+    }
+  }
+
+  test("PQ encode, search and append plans are map-only: no Exchange, no Generate") {
+    def shuffles(df: DataFrame): Int = executed(df).count(_.isInstanceOf[ShuffleExchangeLike])
+    def generates(df: DataFrame): Int = executed(df).count(_.isInstanceOf[GenerateExec])
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_plan").toString
-    Pq.writeIndex(sm, sc, dir)
+    Pq.writeIndex(static, Pq.encode(static, e, "vec_id", "embedding"), dir)
     val (rm, rc) = Pq.loadIndex(spark, dir)
-    val qvec = e.where(col("vec_id") === 0).head().getSeq[Float](1).toArray
-    val plan = Pq.searchAdc(rm, rc, qvec, "vec_id", topK = 10)
-      .queryExecution.executedPlan.toString
-    // the serving scan: parquet codes -> codegen'd literal-table score
-    // -> per-partition heap. Any Exchange here would be a full-corpus
-    // shuffle per query (what searchAdcJoin pays for composability).
-    assert(!plan.contains("Exchange"), plan)
-    assert(plan.contains("TakeOrderedAndProject"), plan)
+    val ivfDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_plan").toString
+    IvfPq.writeIndex(IvfPq.staticIndex(e, "vec_id", "embedding", dim = 64), ivfDir)
+    val idx = IvfPq.loadIndex(spark, ivfDir)
+
+    // the serving scan: parquet codes -> codegen'd pq_adc -> top-k heap
+    val adc = Pq.searchAdcJoin(rm, rc, q0, "vec_id", topK = 10)
+    assert(executed(adc).exists(_.nodeName == "TakeOrderedAndProject"))
+    for ((name, df) <- Seq(
+        "Pq.encode" -> Pq.encode(rm, e, "vec_id", "embedding"),
+        "Pq.searchAdcJoin" -> adc,
+        "IvfPq.search" -> IvfPq.search(idx, q0, "vec_id", topK = 10, nprobe = 2))) {
+      assert(shuffles(df) == 0, s"$name shuffles")
+      assert(generates(df) == 0, s"$name generates")
+    }
+    // append: the coarse routing (Ann.tagCorpus's min_by) is the only
+    // shuffle left; the encode adds none, raw or residual
+    val add = e.where(col("vec_id") >= 400)
+    val routing = shuffles(Ann.tagCorpus(add, "vec_id", "embedding", idx.centroids))
+    for (residual <- Seq(false, true)) {
+      val appended = IvfPq.appendToIndex(idx, add, "vec_id", "embedding", residual).codes
+      assert(shuffles(appended) == routing, s"residual=$residual")
+      assert(generates(appended) == 0, s"residual=$residual")
+    }
   }
 
   test("ADC + exact re-rank recovers near-perfect recall") {
-    val qvec = e.where(col("vec_id") === 0).head().getSeq[Float](1).toArray
-    val reranked = Pq.searchWithRerank(model, codes, e, qvec,
+    val reranked = Pq.searchWithRerankJoin(model, codes, e, q0,
       "vec_id", "embedding", "euclidean", topK = 10, candidates = 100)
       .collect().map(_.getLong(0)).toSet
-    val q = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
-    val exact = graft.operators.Knn.topK(e, q, "vec_id", "embedding", "euclidean", 10)
+    val exact = graft.operators.Knn.topK(e, q0, "vec_id", "embedding", "euclidean", 10)
       .collect().map(_.getLong(0)).toSet
     val recall = (exact intersect reranked).size / 10.0
     assert(recall >= 0.7, s"rerank recall $recall")
@@ -112,7 +279,7 @@ class PqSpec extends AnyFunSuite {
     // reconstruction SSE at the same m/k/iters budget is at worst
     // plain PQ's (equal on a perfectly isotropic cloud, better the
     // more the per-dim variances spread)
-    def sse(corpus: org.apache.spark.sql.DataFrame): Double = {
+    def sse(corpus: DataFrame): Double = {
       val m = Pq.train(corpus, "vec_id", "embedding", dim = 64,
         m = 8, k = 16, iters = 2)
       val sub = corpus.select(col("vec_id"),
