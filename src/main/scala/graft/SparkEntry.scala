@@ -50,15 +50,15 @@ object SparkEntry {
     * needed): seed = first `k` sample vectors in id order; each
     * iteration assigns by unrounded argmin-L2 with (dist, cluster)
     * ties and recenters with round(avg, 6) — the same 1e-6 centroid
-    * snap Ann.lloyd applies, which is what keeps both engines in
-    * lockstep across iterations. Exposes `sv` (the training sample)
+    * snap Ann.lloyd (the one Lloyd's loop) applies, which keeps both
+    * engines in lockstep across iterations. Exposes `sv` (the training sample)
     * and `c{iters}` (the final centroids).
     */
   /** Unrounded L2 over two double-list SQL expressions, elementwise in
     * index order — the assignment/tie-break distance every k-means
-    * oracle CTE shares. ONE definition: the chains replay Ann.lloyd /
-    * Pq.groupedKmeans bit-for-bit only while every usage stays
-    * byte-identical, so never inline a copy.
+    * oracle CTE shares. ONE definition: the chains replay Ann.lloyd
+    * (IVF and, grouped by subspace, PQ training) bit-for-bit only
+    * while every usage stays byte-identical, so never inline a copy.
     */
   private def sqlL2(vec: String, cent: String): String =
     s"sqrt(list_sum(list_transform($vec, (x, j) -> (x - $cent[j]) * (x - $cent[j]))))"

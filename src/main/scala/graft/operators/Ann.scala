@@ -19,6 +19,12 @@ import graft.functions.{TopKAgg, VectorFunctions}
   *    is a partition-pruned scan, not a full read.
   *  - IVF: k-means coarse quantizer (Lloyd's over DataFrames, all
   *    reduces map-side-combined), then nprobe-nearest-cluster search.
+  *
+  * One Lloyd's loop ([[lloyd]]) and one argmin assignment ([[assign]])
+  * serve every quantizer: IVF k-means, multi-k sweeps, compaction,
+  * corpus tagging and PQ codebook training (grouped by subspace), so
+  * the seed rule, tie-break and 1e-6 centroid snap the DuckDB oracle
+  * replays hold for all of them by construction.
   */
 object Ann {
 
@@ -179,145 +185,128 @@ object Ann {
 
   // ---- IVF ---------------------------------------------------------------
 
-  /** Lloyd's k-means over DataFrames. Deterministic: seeded from the
-    * first k vectors in id order; each iteration is one broadcast
-    * cross-join (assign) + one partial-aggregated shuffle (recenter).
-    * Returns (cluster: int, centroid: array<double>).
-    *
-    * `trainSampleMod > 1` trains on the deterministic id-mod sample
-    * (`id % trainSampleMod == 0`): centroids need ~100k vectors, so
-    * iterating Lloyd's over a full 100 TB corpus is pure waste — train
-    * on the sample, then tag/encode the FULL corpus (one map-side
-    * pass). The id-mod sample (not `.sample()`) keeps the result
-    * reproducible across runs for the driver's rows-only check.
+  /** (_id, _v as array<double>, metaCols…) of `corpus`; with
+    * `sampleMod > 1`, only the deterministic `_id % sampleMod == 0`
+    * training sample. Centroids need ~100k vectors, so iterating
+    * Lloyd's over a full 100 TB corpus is pure waste — train on the
+    * sample, then tag/encode the FULL corpus (one map-side pass). The
+    * id-mod sample (not `.sample()`) keeps the result reproducible
+    * across runs, as the oracle check needs.
     */
-  /** Multi-k Lloyd's: train EVERY k in `ks` inside the same jobs —
-    * per iteration ONE sample scan against a k-tagged centroid
-    * broadcast (assignment groups by (k, id), recentering by (k,
-    * cluster, pos)), instead of |ks| sequential training chains.
-    * Numerically identical per k to [[kmeans]] at the same
-    * iters/sample: same first-k-by-id seed rule, same (distance,
-    * cluster) tie-break, same per-iteration 1e-6 centroid snap — a
-    * model-selection sweep (cluster_elbow) trains its whole k grid
-    * for the wall-clock of one chain. Returns (k, cluster, centroid).
+  private def vectors(corpus: DataFrame, idCol: String, vecCol: String,
+      sampleMod: Long = 1, metaCols: Seq[String] = Nil): DataFrame = {
+    val all = corpus.select((col(idCol).as("_id") +:
+      transform(col(vecCol), _.cast("double")).as("_v") +:
+      metaCols.map(col)): _*)
+    if (sampleMod > 1) all.where(col("_id") % sampleMod === 0) else all
+  }
+
+  /** Seed centroids (cluster, centroid): the first k vectors in id order. */
+  private def firstK(vecs: DataFrame, k: Int): DataFrame =
+    vecs.orderBy(col("_id")).limit(k)
+      .select(
+        (row_number().over(org.apache.spark.sql.expressions.Window
+          .orderBy(col("_id"))) - 1).as("cluster"),
+        col("_v").as("centroid"))
+
+  /** Lloyd's k-means over DataFrames: seeded from the first k vectors
+    * in id order; each iteration is one broadcast join (assign) + one
+    * partial-aggregated shuffle (recenter). `trainSampleMod > 1`
+    * trains on the id-mod sample ([[vectors]]). Returns (cluster: int,
+    * centroid: array<double>).
+    */
+  def kmeans(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      k: Int, iters: Int = 5, trainSampleMod: Long = 1): DataFrame = {
+    val vecs = vectors(corpus, idCol, vecCol, trainSampleMod)
+    lloyd(vecs, firstK(vecs, k), iters)
+  }
+
+  /** Multi-k Lloyd's: train EVERY k in `ks` inside the same jobs — the
+    * sample is tagged with each k once and [[lloyd]] runs grouped by
+    * k, so per iteration ONE sample scan meets a k-tagged centroid
+    * broadcast instead of |ks| sequential training chains. The same
+    * loop and seed rule as [[kmeans]], so each k is numerically
+    * identical to it — a model-selection sweep (cluster_elbow) trains
+    * its whole k grid for the wall-clock of one chain. Returns (k,
+    * cluster, centroid).
     */
   def kmeansMulti(
       corpus: DataFrame, idCol: String, vecCol: String,
       ks: Seq[Int], iters: Int = 5, trainSampleMod: Long = 1): DataFrame = {
     require(ks.nonEmpty, "kmeansMulti needs at least one k")
     import corpus.sparkSession.implicits._
-    val all = corpus.select(col(idCol).as("_id"),
-      transform(col(vecCol), _.cast("double")).as("_v"))
-    val vecs =
-      if (trainSampleMod > 1) all.where(col("_id") % trainSampleMod === 0)
-      else all
-    val seedBase = vecs.orderBy(col("_id")).limit(ks.max)
-      .select(
-        (row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("_id"))) - 1).as("cluster"),
-        col("_v").as("centroid"))
-    var cents = ks.toDF("k").crossJoin(seedBase)
+    val vecs = vectors(corpus, idCol, vecCol, trainSampleMod)
+    val seed = ks.toDF("k").crossJoin(firstK(vecs, ks.max))
       .where(col("cluster") < col("k"))
       .select(col("k"), col("cluster"), col("centroid"))
       .coalesce(1).localCheckpoint(eager = false)
-    for (_ <- 0 until iters) {
-      val assigned = vecs.crossJoin(broadcast(cents))
-        .withColumn("_d", VectorFunctions.vec_l2(col("_v"), col("centroid")))
-        .groupBy(col("k"), col("_id"))
-        .agg(min_by(struct(col("cluster"), col("_v")),
-          struct(col("_d"), col("cluster"))).as("_m"))
-        .select(col("k"), col("_m.cluster").as("cluster"),
-          col("_m._v").as("_v"))
-      cents = assigned
-        .select(col("k"), col("cluster"), posexplode(col("_v")))
-        .groupBy(col("k"), col("cluster"), col("pos"))
-        .agg(round(avg(col("col")), 6).as("m"))
-        .groupBy(col("k"), col("cluster"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("centroid"))
-        .coalesce(1).localCheckpoint(eager = false)
-    }
-    cents
+    lloyd(vecs.withColumn("k", explode(typedLit(ks))), seed, iters, Seq("k"))
   }
 
-  def kmeans(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int = 5, trainSampleMod: Long = 1): DataFrame = {
-    val all = corpus.select(col(idCol).as("_id"),
-      transform(col(vecCol), _.cast("double")).as("_v"))
-    val vecs =
-      if (trainSampleMod > 1) all.where(col("_id") % trainSampleMod === 0)
-      else all
-    val seed = vecs.orderBy(col("_id")).limit(k)
-      .select(
-        (row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("_id"))) - 1)
-          .as("cluster"),
-        col("_v").as("centroid"))
-    lloyd(vecs, seed, iters)
-  }
-
-  /** Lloyd's iterations from a given centroid seed (also the
-    * compaction path: re-seed from a live index's current centroids).
-    * Each iteration: map-side-combined assign + recenter; clusters
-    * with no members drop out.
+  /** THE Lloyd's loop — IVF k-means, multi-k sweeps, compaction and
+    * PQ codebook training all run it. Vectors are (group…, _id, _v),
+    * centroids (group…, cluster, centroid); one independent k-means
+    * per value of `groupCols` (`k` for multi-k, `grp` for a PQ
+    * subspace, none for one IVF k), all in the same jobs. Each
+    * iteration: [[assign]], then recenter; clusters with no members
+    * drop out.
     *
     * Centroid means round to 6 dp each iteration: partition-order fp
     * drift in the mean (~1e-13) would otherwise accumulate across
     * iterations and make the result engine-specific; snapped to the
     * 1e-6 grid, any engine computing the same algorithm lands on
     * bit-identical centroids, which is what lets the driver oracle
-    * the ITERATIVE ann_ivf/ann_pq queries (unrolled CTE chain in
-    * SparkEntry.kmeansCtes), not just their static-centroid variants.
-    * Quantizing a coarse quantizer at 1e-6 costs nothing: centroids
-    * are cluster means, not data.
+    * the ITERATIVE ann_ivf/ann_pq queries (unrolled CTE chains in
+    * SparkEntry), not just their static-centroid variants. Quantizing
+    * a quantizer at 1e-6 costs nothing: centroids are cluster means,
+    * not data.
     */
-  private def lloyd(vecs: DataFrame, init: DataFrame, iters: Int): DataFrame = {
-    var centroids = init
-    for (_ <- 0 until iters) {
-      val assigned = assign(vecs, centroids)
-      centroids = assigned
-        .select(col("cluster"), posexplode(col("_v")))
-        .groupBy(col("cluster"), col("pos"))
+  private[operators] def lloyd(vecs: DataFrame, seed: DataFrame, iters: Int,
+      groupCols: Seq[String] = Nil): DataFrame = {
+    val g = groupCols.map(col)
+    (0 until iters).foldLeft(seed) { (centroids, _) =>
+      assign(vecs, centroids, groupCols)
+        .select((g :+ col("cluster") :+ posexplode(col("_v"))): _*)
+        .groupBy((g :+ col("cluster") :+ col("pos")): _*)
         .agg(round(avg(col("col")), 6).as("m"))
-        .groupBy(col("cluster"))
+        .groupBy((g :+ col("cluster")): _*)
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m")).as("centroid"))
-      // cut lineage per iteration; the frame is k rows, so collapse to
-      // ONE partition first — a 32-partition checkpoint of 8 rows costs
-      // 32 scheduled tasks per iteration for nothing
-      centroids = centroids.coalesce(1).localCheckpoint(eager = false)
+        // cut lineage per iteration; the frame is centroid-sized, so
+        // collapse to ONE partition first — a 32-partition checkpoint
+        // of 8 rows costs 32 scheduled tasks per iteration for nothing
+        .coalesce(1).localCheckpoint(eager = false)
     }
-    centroids
   }
 
-  /** Argmin-centroid assignment via broadcast cross-join + `min_by`
-    * aggregation. The aggregate gets map-side partial aggregation, so
-    * the exchange carries n rows — NOT the n×k candidate rows a
-    * row_number() window would shuffle (the round-1 scale-killer).
-    * Ties break like the old window did: (distance, cluster) ascending.
+  /** THE argmin-centroid assignment: (group…, _id, cluster, _v,
+    * metaCols…) for vectors (group…, _id, _v, metaCols…) against
+    * centroids (group…, cluster, centroid), joined on the group
+    * columns (a cross join when there are none) under a broadcast,
+    * then a `min_by` aggregation per (group…, _id). The aggregate gets
+    * map-side partial aggregation, so the exchange carries one row per
+    * vector — NOT the ×k candidate rows a row_number() window would
+    * shuffle (the round-1 scale-killer). Ties break by (distance,
+    * cluster) ascending.
     *
-    * Boundary contract: rows whose vector is null (or whose distance
-    * evaluates to null, e.g. a malformed/mismatched-length vector with
-    * null elements) are EXCLUDED from the output — `min_by` skips
-    * null ordering keys, so such rows vanish from kmeans/tagCorpus
-    * rather than surfacing. Callers feeding untrusted data should
-    * filter/assert non-null fixed-length vectors first (the parquet
-    * test tables guarantee this by schema).
+    * Boundary contract: the distance is vec_l2, so a vector whose
+    * length differs from the centroids' raises
+    * IllegalArgumentException. Degenerate vectors are pinned in
+    * AnnScaleSpec.
     */
   private def assign(vecs: DataFrame, centroids: DataFrame,
-      metaCols: Seq[String] = Nil): DataFrame = {
+      groupCols: Seq[String], metaCols: Seq[String] = Nil): DataFrame = {
     val payload = struct(
       (col("cluster") +: col("_v") +: metaCols.map(col)): _*)
-    vecs.crossJoin(broadcast(centroids))
+    vecs.join(broadcast(centroids), groupCols)
       .withColumn("_d", VectorFunctions.vec_l2(col("_v"), col("centroid")))
-      .groupBy(col("_id"))
+      .groupBy((groupCols :+ "_id").map(col): _*)
       .agg(min_by(payload, struct(col("_d"), col("cluster"))).as("_m"))
-      .select(
-        (col("_id") +: col("_m.cluster").as("cluster") +:
-          col("_m._v").as("_v") +:
-          metaCols.map(c => col(s"_m.$c").as(c))): _*)
+      .select((groupCols.map(col) ++ Seq(col("_id"),
+        col("_m.cluster").as("cluster"), col("_m._v").as("_v")) ++
+        metaCols.map(c => col(s"_m.$c").as(c))): _*)
   }
 
   /** IVF index: corpus rows tagged with their cluster id. At scale,
@@ -342,20 +331,19 @@ object Ann {
     * the probed clusters — without a join back to the base table.
     * They ride the min_by payload struct: no extra shuffle.
     *
-    * Null contract (surfaced from the private assignment kernel):
-    * rows with a null vector — or one whose distance evaluates null,
-    * e.g. malformed length with null elements — are silently DROPPED
-    * from the tagged index, not errored. Filter/assert non-null
+    * Degenerate rows (pinned in AnnScaleSpec): a null vector is KEPT,
+    * tagged cluster-lowest with a null vector — a null distance ranks
+    * first in the (distance, cluster) minimum; a vector with a NaN
+    * element has NaN distances, which rank above every number, so it
+    * too lands in the lowest cluster; a length mismatch raises
+    * IllegalArgumentException. Filter/assert non-null, finite,
     * fixed-length vectors first when the corpus is untrusted.
     */
   def tagCorpus(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, metaCols: Seq[String] = Nil): DataFrame = {
-    val vecs = corpus.select(
-      (col(idCol).as("_id") +:
-        transform(col(vecCol), _.cast("double")).as("_v") +:
-        metaCols.map(col)): _*)
-    assign(vecs, centroids, metaCols)
+    assign(vectors(corpus, idCol, vecCol, metaCols = metaCols), centroids,
+      Nil, metaCols)
       .select(
         (col("_id").as(idCol) +: col("_v").as(vecCol) +:
           col("cluster") +: metaCols.map(col)): _*)
@@ -412,9 +400,7 @@ object Ann {
     val worst = if (statRow.isNullAt(0)) 0.0 else statRow.getDouble(0)
     if (worst <= maxShare) (tagged, centroids)
     else {
-      val vecs = tagged.select(col(idCol).as("_id"),
-        transform(col(vecCol), _.cast("double")).as("_v"))
-      val newCents = lloyd(vecs, centroids, iters)
+      val newCents = lloyd(vectors(tagged, idCol, vecCol), centroids, iters)
       (tagCorpus(tagged.drop("cluster"), idCol, vecCol, newCents), newCents)
     }
   }
@@ -448,15 +434,28 @@ object Ann {
   def searchIvf(
       tagged: DataFrame, centroids: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, metric: String, k: Int,
-      nprobe: Int = 2, roundTo: Int = 4): DataFrame = {
-    val qc = nearestClusters(centroids, query, nprobe)
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    tagged
-      .join(broadcast(qc), Seq("cluster")) // partition-prunes when bucketed at rest
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(d, roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
+      nprobe: Int = 2, roundTo: Int = 4): DataFrame =
+    Knn.topK( // the probe join partition-prunes when bucketed at rest
+      tagged.join(broadcast(nearestClusters(centroids, query, nprobe)),
+        Seq("cluster")),
+      query, idCol, vecCol, metric, k, roundTo)
+
+  /** (qid, qvec, cluster) for each query of a (qid, qvec) batch and
+    * each of its `nprobe` l2-nearest clusters, ties to the lower
+    * cluster — [[nearestClusters]] per query. Shared by
+    * [[searchIvfBatch]] and the recall matrix's IVF rows.
+    */
+  private[operators] def routeBatch(
+      queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    queries.crossJoin(broadcast(centroids))
+      .select(col("qid"), col("qvec"), col("cluster"),
+        VectorFunctions.vec_l2(
+          transform(col("qvec"), _.cast("double")), col("centroid")).as("_d"))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("_d"), col("cluster"))))
+      .where(col("_rn") <= nprobe)
+      .select(col("qid"), col("qvec"), col("cluster"))
   }
 
   /** Batch form of [[searchIvf]]: many queries at once, each routed
@@ -473,22 +472,41 @@ object Ann {
       idCol: String, vecCol: String, metric: String, k: Int,
       nprobe: Int = 2, roundTo: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val routed = queries.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qvec"), col("cluster"),
-        VectorFunctions.vec_l2(
-          transform(col("qvec"), _.cast("double")), col("centroid")).as("_d"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("_d"), col("cluster"))))
-      .where(col("_rn") <= nprobe)
-      .select(col("qid"), col("qvec"), col("cluster"))
     val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    tagged
-      .join(broadcast(routed), Seq("cluster")) // partition-prunes at rest
+    tagged // the join partition-prunes at rest
+      .join(broadcast(routeBatch(queries, centroids, nprobe)), Seq("cluster"))
       .select(col("qid"), col(idCol), round(d, roundTo).as("dist"))
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))))
       .where(col("_rn") <= k)
       .select(col("qid"), col(idCol), col("dist"))
+  }
+
+  /** The two rankings both LSH audits compare, for each query
+    * (`idCol` → qid, `vecCol` → qvec): the exact top-k (qid, id) over
+    * the whole corpus and the bucketed top-k (qid, id, rn) within the
+    * query's signature bucket, as [[searchLsh]] serves it. Both round
+    * to 4 dp and tie-break by id, so the audits are deterministic and
+    * engine-portable.
+    */
+  private def lshRankings(
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      metric: String, k: Int, numPlanes: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
+    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
+    val byQuery = Window.partitionBy(col("qid"))
+      .orderBy(col("dist"), col(idCol))
+    def topK(pairs: DataFrame): DataFrame = pairs
+      .select(col("qid"), col(idCol), round(d, 4).as("dist"))
+      .withColumn("rn", row_number().over(byQuery))
+      .where(col("rn") <= k)
+      .select(col("qid"), col(idCol), col("rn"))
+    val exact = topK(corpus.join(broadcast(q), lit(true)))
+      .select(col("qid"), col(idCol))
+    val bucketed = corpus.withColumn("bucket", lshSignature(col(vecCol), numPlanes))
+    val qb = q.withColumn("qbucket", lshSignature(col("qvec"), numPlanes))
+    (exact, topK(bucketed.join(broadcast(qb), col("bucket") === col("qbucket"))))
   }
 
   /** Recall@k self-report for the LSH index: for each query vector,
@@ -497,31 +515,15 @@ object Ann {
     * deployment runs after (re)build — recall is measured on a SAMPLE
     * of queries, so the exact side's query×corpus scoring is bounded
     * by the sample size, not the corpus; candidates on the LSH side
-    * stay bucket-bounded as in [[searchLsh]]. Both rankings round to
-    * 4 dp and tie-break by id, making the report deterministic and
-    * engine-portable.
+    * stay bucket-bounded as in [[searchLsh]].
     */
   def lshRecallReport(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       metric: String, k: Int, numPlanes: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    val byQuery = Window.partitionBy(col("qid"))
-      .orderBy(col("dist"), col(idCol))
-    val exact = corpus.join(broadcast(q), lit(true))
-      .select(col("qid"), col(idCol), round(d, 4).as("dist"))
-      .withColumn("rn", row_number().over(byQuery))
-      .where(col("rn") <= k)
-      .select(col("qid"), col(idCol))
-    val bucketed = corpus.withColumn("bucket", lshSignature(col(vecCol), numPlanes))
-    val qb = q.withColumn("qbucket", lshSignature(col("qvec"), numPlanes))
-    val approx = bucketed.join(broadcast(qb), col("bucket") === col("qbucket"))
-      .select(col("qid"), col(idCol), round(d, 4).as("dist"))
-      .withColumn("rn", row_number().over(byQuery))
-      .where(col("rn") <= k)
-      .select(col("qid"), col(idCol), lit(1L).as("hit"))
-    exact.join(approx, Seq("qid", idCol), "left_outer")
+    val (exact, approx) =
+      lshRankings(corpus, queries, idCol, vecCol, metric, k, numPlanes)
+    exact.join(approx.select(col("qid"), col(idCol), lit(1L).as("hit")),
+        Seq("qid", idCol), "left_outer")
       .groupBy(col("qid"))
       .agg(coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
       .orderBy(col("qid"))
@@ -533,29 +535,13 @@ object Ann {
     * surviving doc's APPROX position; IDCG is the all-relevant
     * prefix). Recall counts the survivors — nDCG also asks how HIGH
     * they rank, which is what a retrieval eval set actually consumes.
-    * Same shapes and bounds as [[lshRecallReport]]: exact side
-    * bounded by the query sample, approx side bucket-bounded.
+    * Same rankings and bounds as [[lshRecallReport]].
     */
   def lshNdcgReport(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       metric: String, k: Int, numPlanes: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    val byQuery = Window.partitionBy(col("qid"))
-      .orderBy(col("dist"), col(idCol))
-    val exact = corpus.join(broadcast(q), lit(true))
-      .select(col("qid"), col(idCol), round(d, 4).as("dist"))
-      .withColumn("rn", row_number().over(byQuery))
-      .where(col("rn") <= k)
-      .select(col("qid"), col(idCol))
-    val bucketed = corpus.withColumn("bucket", lshSignature(col(vecCol), numPlanes))
-    val qb = q.withColumn("qbucket", lshSignature(col("qvec"), numPlanes))
-    val approx = bucketed.join(broadcast(qb), col("bucket") === col("qbucket"))
-      .select(col("qid"), col(idCol), round(d, 4).as("dist"))
-      .withColumn("rn", row_number().over(byQuery))
-      .where(col("rn") <= k)
-      .select(col("qid"), col(idCol), col("rn"))
+    val (exact, approx) =
+      lshRankings(corpus, queries, idCol, vecCol, metric, k, numPlanes)
     // both engines build IDCG from the same ascending fold, so the
     // quotient's operands are op-for-op identical
     val idcg = expr(

@@ -252,13 +252,8 @@ object Bq {
       query: DataFrame, idCol: String, vecCol: String, metric: String,
       topK: Int, candidates: Int, roundTo: Int = 4): DataFrame = {
     val short = search(model, codes, query, idCol, topK = candidates)
-    corpus.join(broadcast(short.select(col(idCol))), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.forMetric(metric)(
-          col(vecCol), col("qvec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
+    Knn.topK(corpus.join(broadcast(short.select(col(idCol))), Seq(idCol)),
+      query, idCol, vecCol, metric, topK, roundTo)
   }
 
   /** Live-index insert: encode new rows with the FROZEN thresholds
@@ -303,26 +298,16 @@ object Bq {
       encodeIvf(model, Ann.tagCorpus(newRows, idCol, vecCol, centroids),
         idCol, vecCol))
 
+  /** IVF-BQ serving: [[searchWithRerank]] over the codes of the
+    * query's `nprobe` nearest clusters only. */
   def searchIvfBq(model: Model, clusterCodes: DataFrame,
       centroids: DataFrame, corpus: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, metric: String, topK: Int,
-      candidates: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame = {
-    val qc = Ann.nearestClusters(centroids, query, nprobe)
-    val short = clusterCodes
-      .join(broadcast(qc), Seq("cluster")) // partition-prunes at rest
-      .crossJoin(broadcast(
-        query.select(bq_encode(model, col("qvec")).as("qcode"))))
-      .select(col(idCol), hamming(col("code"), col("qcode")).as("ham"))
-      .orderBy(col("ham"), col(idCol))
-      .limit(candidates)
-    corpus.join(broadcast(short.select(col(idCol))), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.forMetric(metric)(
-          col(vecCol), col("qvec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
-  }
+      candidates: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame =
+    searchWithRerank(model, // the probe join partition-prunes at rest
+      clusterCodes.join(broadcast(Ann.nearestClusters(centroids, query, nprobe)),
+        Seq("cluster")),
+      corpus, query, idCol, vecCol, metric, topK, candidates, roundTo)
 
   /** Persist the index: 8-byte codes table + dim-row threshold table. */
   def writeIndex(model: Model, codes: DataFrame, dir: String): Unit = {

@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
-import graft.functions.VectorFunctions
-
 /** Static kernels for PQ encode and ADC scoring over a flat codebook
   * table: entry (g, c) — subspace g, code c — holds subDim doubles
   * starting at (g * k + c) * subDim. Both keep the op order of the SQL
@@ -173,7 +171,8 @@ case class PqAdcExpr(left: Expression, right: Expression, m: Int, k: Int,
   * without touching the original vectors.
   *
   * Spark-first shape: all m subspace k-means run as ONE grouped
-  * pipeline per iteration (group = subspace id), not m driver loops.
+  * pipeline per iteration — [[Ann.lloyd]] grouped by subspace id, the
+  * loop IVF k-means runs — not m sequential loops.
   * Encode and ADC scoring are codegen'd per-row kernels
   * ([[PqKernels]]: `pq_encode`, `pq_adc`) over the flat codebook table
   * the model collects once — map-only, with no explode, no join
@@ -205,52 +204,6 @@ object Pq {
     }
   }
 
-  /** Grouped Lloyd's: one k-means per `grp` value, all groups in the
-    * same jobs. Input: (grp: int, _id: long, _v: array<double>).
-    * Output: (grp, code, centroid).
-    */
-  private def groupedKmeans(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
-    val seedW = Window.partitionBy(col("grp")).orderBy(col("_id"))
-    var centroids = vecs
-      .withColumn("_rn", row_number().over(seedW))
-      .where(col("_rn") <= k)
-      .select(col("grp"), (col("_rn") - 1).as("code"), col("_v").as("centroid"))
-    for (_ <- 0 until iters) {
-      val assigned = assignCodes(vecs, centroids)
-      // round(…, 6) snaps codebook entries to the 1e-6 grid each
-      // iteration so partition-order fp drift can't accumulate — the
-      // same engine-portability contract as Ann.lloyd, which is what
-      // lets ann_pq be oracled via SparkEntry.pqKmeansCtes
-      centroids = assigned
-        .select(col("grp"), col("code"), posexplode(col("_v")))
-        .groupBy(col("grp"), col("code"), col("pos"))
-        .agg(round(avg(col("col")), 6).as("mval"))
-        .groupBy(col("grp"), col("code"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("mval")))),
-          s => s.getField("mval")).as("centroid"))
-      // m*k rows -> ONE partition before the per-iteration checkpoint
-      // (32 near-empty checkpoint tasks per iteration otherwise)
-      centroids = centroids.coalesce(1).localCheckpoint(eager = false)
-    }
-    centroids
-  }
-
-  /** Argmin-centroid code per (grp, _id) via broadcast join + `min_by`
-    * aggregation: map-side partial agg shrinks the exchange from
-    * n×m×k candidate rows (the row_number() window form) to n×m.
-    * Ties break as before: (distance, code) ascending.
-    */
-  private def assignCodes(vecs: DataFrame, centroids: DataFrame): DataFrame =
-    vecs.join(broadcast(centroids), Seq("grp"))
-      .withColumn("_d", VectorFunctions.vec_l2(col("_v"), col("centroid")))
-      .groupBy(col("grp"), col("_id"))
-      .agg(min_by(
-        struct(col("code"), col("_v")),
-        struct(col("_d"), col("code"))).as("_m"))
-      .select(col("grp"), col("_id"),
-        col("_m.code").as("code"), col("_m._v").as("_v"))
-
   /** Rows of (grp, _id, subvector) for every subspace. */
   private def subvectors(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, subDim: Int): DataFrame =
@@ -261,8 +214,11 @@ object Pq {
               _.cast("double")).as("sv")))).as("e"))
       .select(col("e.grp").as("grp"), col("_id"), col("e.sv").as("_v"))
 
-  /** Train codebooks. Deterministic: seeded from the first k vectors
-    * per subspace in id order. `trainSampleMod > 1` runs Lloyd's on
+  /** Train codebooks with [[Ann.lloyd]] grouped by subspace — the
+    * same loop, assignment and 1e-6 snap as IVF k-means, which is what
+    * lets ann_pq be oracled via SparkEntry.pqKmeansCtes. Deterministic:
+    * seeded from the first k vectors per subspace in id order; the
+    * loop's `cluster` is the code. `trainSampleMod > 1` runs Lloyd's on
     * the deterministic `id % trainSampleMod == 0` sample only —
     * codebooks need ~100k training vectors, so at 100 TB the sample is
     * the difference between a feasible build and a non-starter; the
@@ -276,7 +232,14 @@ object Pq {
     val sample =
       if (trainSampleMod > 1) corpus.where(col(idCol) % trainSampleMod === 0)
       else corpus
-    val cb = groupedKmeans(subvectors(sample, idCol, vecCol, m, subDim), k, iters)
+    val vecs = subvectors(sample, idCol, vecCol, m, subDim)
+    val seed = vecs
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("grp")).orderBy(col("_id"))))
+      .where(col("_rn") <= k)
+      .select(col("grp"), (col("_rn") - 1).as("cluster"), col("_v").as("centroid"))
+    val cb = Ann.lloyd(vecs, seed, iters, Seq("grp"))
+      .select(col("grp"), col("cluster").as("code"), col("centroid"))
     Model(m, k, subDim, cb.coalesce(1).localCheckpoint(eager = false))
   }
 
@@ -447,13 +410,7 @@ object Pq {
       query: DataFrame, idCol: String, vecCol: String,
       metric: String, topK: Int, candidates: Int = 100): DataFrame = {
     val shortlist = searchAdcJoin(model, codes, query, idCol, candidates)
-      .select(col(idCol))
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    corpus
-      .join(broadcast(shortlist), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(d, 4).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
+    Knn.topK(corpus.join(broadcast(shortlist.select(col(idCol))), Seq(idCol)),
+      query, idCol, vecCol, metric, topK)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TopKAgg, VectorFunctions}
@@ -147,18 +146,10 @@ object Recall {
         transform(col(vecCol), _.cast("double")).as("centroid"))
     val tagged = Ann.tagCorpus(corpus, idCol, vecCol, cents)
       .localCheckpoint(eager = false)
-    def route(nprobe: Int): DataFrame =
-      q.crossJoin(broadcast(cents))
-        .select(col("qid"), col("qvec"), col("cluster"),
-          VectorFunctions.vec_l2(
-            transform(col("qvec"), _.cast("double")), col("centroid")).as("_d"))
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("_d"), col("cluster"))))
-        .where(col("_rn") <= nprobe)
-        .select(col("qid"), col("qvec"), col("cluster"))
     def ivf(nprobe: Int): DataFrame =
       recallRow(exactCos,
-        topPairs(scored(tagged.join(broadcast(route(nprobe)), Seq("cluster")),
+        topPairs(scored(tagged.join(
+          broadcast(Ann.routeBatch(q, cents, nprobe)), Seq("cluster")),
           "cosine"), idCol, k),
         idCol, "ivf", s"nprobe=$nprobe")
 
@@ -234,8 +225,8 @@ object Recall {
     // -- composed IVF-PQ (static): ADC restricted to routed clusters --
     def ivfpq(nprobe: Int): DataFrame = {
       val routed = tagged.select(col(idCol), col("cluster"))
-        .join(broadcast(route(nprobe).select(col("qid"), col("cluster"))),
-          Seq("cluster"))
+        .join(broadcast(Ann.routeBatch(q, cents, nprobe)
+          .select(col("qid"), col("cluster"))), Seq("cluster"))
         .select(col("qid"), col(idCol))
       recallRow(exactEuc,
         topPairs(adcScores.join(routed, Seq("qid", idCol)), idCol, k),

@@ -282,13 +282,8 @@ object Sq {
       topK: Int, candidates: Int, roundTo: Int = 4): DataFrame = {
     val short = search(model, codes, query, idCol, topK = candidates,
       roundTo = roundTo)
-    corpus.join(broadcast(short.select(col(idCol))), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.forMetric(metric)(
-          col(vecCol), col("qvec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
+    Knn.topK(corpus.join(broadcast(short.select(col(idCol))), Seq(idCol)),
+      query, idCol, vecCol, metric, topK, roundTo)
   }
 
   def sq4_encode(model: Model, vec: Column): Column =
@@ -323,13 +318,8 @@ object Sq {
       topK: Int, candidates: Int, roundTo: Int = 4): DataFrame = {
     val short = search4(model, codes, query, idCol, topK = candidates,
       roundTo = roundTo)
-    corpus.join(broadcast(short.select(col(idCol))), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.forMetric(metric)(
-          col(vecCol), col("qvec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
+    Knn.topK(corpus.join(broadcast(short.select(col(idCol))), Seq(idCol)),
+      query, idCol, vecCol, metric, topK, roundTo)
   }
 
   /** Cluster-tagged encode for the composed IVF-SQ8 index: same
@@ -341,30 +331,19 @@ object Sq {
       sq8_encode(model, col(vecCol)).as("codes"))
 
   /** Composed IVF-SQ8 serving — completes the composed-family matrix
-    * next to IVF-PQ and IVF-BQ: coarse route to nprobe clusters,
-    * dequantized-L2 scan over their 1/4-size codes ONLY (at rest the
-    * join is a partition prune), exact re-rank touches just the
-    * `candidates` survivors via a broadcast semi-join. */
+    * next to IVF-PQ and IVF-BQ: [[searchWithRerank]] over the codes of
+    * the query's nprobe nearest clusters ONLY (at rest the probe join
+    * is a partition prune), so the dequantized-L2 scan reads 1/4-size
+    * codes of nprobe/k of the corpus and the exact re-rank touches
+    * just the `candidates` survivors. */
   def searchIvfSq(model: Model, clusterCodes: DataFrame,
       centroids: DataFrame, corpus: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, metric: String, topK: Int,
-      candidates: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame = {
-    val qc = Ann.nearestClusters(centroids, query, nprobe)
-    val short = clusterCodes
-      .join(broadcast(qc), Seq("cluster"))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(sq8_l2(model, col("codes"), col("qvec")), roundTo).as("ad"))
-      .orderBy(col("ad"), col(idCol))
-      .limit(candidates)
-    corpus.join(broadcast(short.select(col(idCol))), Seq(idCol))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(graft.functions.VectorFunctions.forMetric(metric)(
-          col(vecCol), col("qvec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
-  }
+      candidates: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame =
+    searchWithRerank(model,
+      clusterCodes.join(broadcast(Ann.nearestClusters(centroids, query, nprobe)),
+        Seq("cluster")),
+      corpus, query, idCol, vecCol, metric, topK, candidates, roundTo)
 
   /** Live-index insert: encode new rows with the FROZEN model and
     * union — map-only, no retrain, the storage-Insert path every

@@ -265,10 +265,7 @@ object EventStream {
       bos.toString("UTF-8")
     } finally {
       q.stop()
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(tmp)) catch { case _: java.io.IOException => () }
+      graft.operators.AtRest.deleteTree(tmp)
     }
   }
 
@@ -318,10 +315,7 @@ object EventStream {
       spark.catalog.dropTempView(name)
       out
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(tmp)) catch { case _: java.io.IOException => () }
+      graft.operators.AtRest.deleteTree(tmp)
     }
   }
 
@@ -454,10 +448,7 @@ object EventStream {
       named.foreach { case (name, _) => spark.catalog.dropTempView(name) }
       out
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(tmp)) catch { case _: java.io.IOException => () }
+      graft.operators.AtRest.deleteTree(tmp)
     }
   }
 
@@ -552,10 +543,7 @@ object EventStream {
       } finally q.stop()
       spark.table(name).count()
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      try rm(new java.io.File(tmp)) catch { case _: java.io.IOException => () }
+      graft.operators.AtRest.deleteTree(tmp)
     }
     (System.nanoTime() - t0) / 1e9
   }

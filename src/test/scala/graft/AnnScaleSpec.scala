@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Ann
+import graft.operators.{Ann, Pq}
 
 class AnnScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -265,6 +265,19 @@ class AnnScaleSpec extends AnyFunSuite {
       s"no partition pruning in plan:\n$plan")
   }
 
+  test("tagCorpus plan: a broadcast nested-loop join and one exchange, on _id") {
+    val e = Tables.load(spark, sf, "embeddings")
+    val cents = e.where(col("vec_id") < 4)
+      .select(col("vec_id").cast("int").as("cluster"),
+        transform(col("embedding"), _.cast("double")).as("centroid"))
+    val p = Ann.tagCorpus(e, "vec_id", "embedding", cents)
+      .queryExecution.executedPlan.toString
+    val exchanges = p.linesIterator.filter(l => l.contains("Exchange ") &&
+      !l.contains("BroadcastExchange")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(_id"), p)
+    assert(p.contains("BroadcastNestedLoopJoin"), p)
+  }
+
   test("tagCorpus metaCols ride the index; filtered probe == filter-then-search") {
     val e = Tables.load(spark, sf, "embeddings")
     val cents = e.where(col("vec_id") < 4)
@@ -285,5 +298,110 @@ class AnnScaleSpec extends AnyFunSuite {
       Ann.tagCorpus(e.where(col("label") === 3), "vec_id", "embedding", cents),
       cents, q, "vec_id", "embedding", "cosine", 10, nprobe = 2).collect().toSeq
     assert(a == b)
+  }
+
+  // ---- degenerate input to the shared k-means / assignment ----------
+  // Six 4-dim vectors in two tight groups; `cents` is the first of each.
+  private val base: Seq[(Long, Seq[Double])] = Seq(
+    0L -> Seq(0.0, 0, 0, 0), 1L -> Seq(10.0, 10, 10, 10),
+    2L -> Seq(1.0, 0, 0, 0), 3L -> Seq(9.0, 10, 10, 10),
+    4L -> Seq(0.0, 1, 0, 0), 5L -> Seq(10.0, 9, 10, 10))
+  private def frame(rows: Seq[(Long, Seq[Double])]) = {
+    val s = spark; import s.implicits._
+    rows.toDF("id", "v")
+  }
+  private def cents = {
+    val s = spark; import s.implicits._
+    Seq((0, Seq(0.0, 0, 0, 0)), (1, Seq(10.0, 10, 10, 10))).toDF("cluster", "centroid")
+  }
+  /** tagCorpus as id -> (cluster, vector or null). */
+  private def tags(c: Seq[(Long, Seq[Double])]): Map[Long, (Int, Seq[Double])] =
+    Ann.tagCorpus(frame(c), "id", "v", cents).collect()
+      .map(r => r.getLong(0) -> (r.getInt(2), Option(r.getSeq[Double](1)).orNull)).toMap
+  private def kmeans(c: Seq[(Long, Seq[Double])], k: Int): Map[Int, Seq[Double]] =
+    Ann.kmeans(frame(c), "id", "v", k = k, iters = 2).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+  private def pq(c: Seq[(Long, Seq[Double])], k: Int): Pq.Model =
+    Pq.train(frame(c), "id", "v", dim = 4, m = 2, k = k, iters = 2)
+  /** Codebooks as (grp, code) -> entry. */
+  private def book(model: Pq.Model): Map[(Int, Int), Seq[Double]] =
+    model.codebooks.collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
+  private val third = 0.333333
+  private val twoGroups = Map(0 -> Seq(third, third, 0.0, 0.0),
+    1 -> Seq(9.666667, 9.666667, 10.0, 10.0))
+
+  test("degenerate input: a null vector is tagged to cluster 0; a null seed takes every vector") {
+    val nul = null.asInstanceOf[Seq[Double]]
+    val t = tags(base :+ (6L -> nul))
+    assert(t(6L) == ((0, null)))
+    assert(t.size == 7 && t(1L)._1 == 1)
+    // not a seed: assigned, but posexplode(null) adds nothing to a mean
+    assert(kmeans(base :+ (6L -> nul), 2) == twoGroups)
+    assert(book(pq(base :+ (6L -> nul), 2)) == Map(
+      (0, 0) -> Seq(third, third), (0, 1) -> Seq(9.666667, 9.666667),
+      (1, 0) -> Seq(0.0, 0.0), (1, 1) -> Seq(10.0, 10.0)))
+    // a seed: every distance to it is null, and a null distance ranks
+    // first in the (distance, cluster) minimum
+    assert(kmeans((-1L -> nul) +: base, 2) == Map(0 -> Seq(5.0, 5.0, 5.0, 5.0)))
+    assert(book(pq((-1L -> nul) +: base, 2)) == Map(
+      (0, 0) -> Seq(5.0, 5.0), (1, 0) -> Seq(5.0, 5.0)))
+  }
+
+  test("degenerate input: a NaN element ranks above every distance; its cluster mean goes NaN") {
+    val nan = 6L -> Seq(Double.NaN, 0, 0, 0)
+    assert(tags(base :+ nan)(6L)._1 == 0) // all distances NaN: lowest cluster
+    val km = kmeans(base :+ nan, 2)
+    assert(km(0).head.isNaN && km(0).tail == Seq(0.0, 0.0, 0.0))
+    assert(km(1) == Seq(5.0, 5.0, 5.0, 5.0)) // the rest move off the NaN centroid
+    val b = book(pq(base :+ nan, 2))
+    assert(b((0, 0)).head.isNaN && b((0, 0))(1) == 0.0)
+    assert(b - ((0, 0)) == Map((0, 1) -> Seq(5.0, 5.0),
+      (1, 0) -> Seq(0.0, 0.0), (1, 1) -> Seq(10.0, 10.0)))
+  }
+
+  test("degenerate input: dimension mismatch raises; PQ training ignores extra elements") {
+    def iae(f: => Any): IllegalArgumentException = {
+      val t = intercept[Exception](f)
+      Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x }
+        .getOrElse(fail(s"no IllegalArgumentException in $t"))
+    }
+    for (bad <- Seq(Seq(0.0, 0, 0), Seq(0.0, 0, 0, 0, 0))) {
+      val c = base :+ (6L -> bad)
+      for (x <- Seq(iae(tags(c)), iae(kmeans(c, 2))))
+        assert(x.getMessage.contains("vec_l2: dimension mismatch"), x.getMessage)
+    }
+    assert(iae(book(pq(base :+ (6L -> Seq(0.0, 0, 0)), 2)))
+      .getMessage.contains("vec_l2: dimension mismatch"))
+    // subvectors slice m x subDim elements: a 5th one is never read
+    assert(book(pq(base :+ (6L -> Seq(0.0, 0, 0, 0, 7)), 2)) ==
+      book(pq(base :+ (6L -> Seq(0.0, 0, 0, 0)), 2)))
+  }
+
+  test("degenerate input: an empty corpus gives empty tags, centroids and codebooks") {
+    assert(tags(Nil).isEmpty)
+    assert(kmeans(Nil, 2).isEmpty)
+    assert(Ann.kmeansMulti(frame(Nil), "id", "v", Seq(2, 3), iters = 2).count() == 0)
+    val model = pq(Nil, 2)
+    assert(model.codebooks.count() == 0)
+    intercept[IllegalArgumentException](model.table)
+  }
+
+  test("degenerate input: k > n seeds n clusters; duplicate PQ seeds lose their members") {
+    val small = base.take(3)
+    assert(kmeans(small, 10) == small.map(_._2).zipWithIndex.map(_.swap).toMap)
+    val multi = Ann.kmeansMulti(frame(small), "id", "v", Seq(2, 10), iters = 2)
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
+    assert(multi == Seq(2, 10).flatMap(k =>
+      kmeans(small, k).map { case (c, v) => (k, c) -> v }).toMap)
+    // subspace 1 of ids 0 and 2 is (0, 0) twice: the tie goes to code
+    // 0, so code 2 has no members and drops out
+    val model = pq(small, 10)
+    assert(book(model) == Map(
+      (0, 0) -> Seq(0.0, 0.0), (0, 1) -> Seq(10.0, 10.0), (0, 2) -> Seq(1.0, 0.0),
+      (1, 0) -> Seq(0.0, 0.0), (1, 1) -> Seq(10.0, 10.0)))
+    // a kernel needs every (grp, code): the table refuses a short book
+    intercept[IllegalArgumentException](model.table)
   }
 }
