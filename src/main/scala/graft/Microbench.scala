@@ -215,13 +215,19 @@ object Microbench {
     val tPq = time() {
       graft.operators.Pq.searchAdcJoin(restModel, restCodes, qdf0, "vec_id", 10).collect()
     }
-    sb ++= "\n## PQ serving path (at-rest codes, single query)\n\n"
-    sb ++= "| form | sec/query | shuffle |\n|---|---|---|\n"
-    sb ++= f"| searchAdcJoin (pq_adc kernel per code row, map-only scan) | $tPq%.3f | none |\n"
-    sb ++= "\nThe codebooks are collected once per model into the kernel's\n"
-    sb ++= "table; a query is one codes scan topped by TakeOrdered, with no\n"
-    sb ++= "explode, no codebook join and no shuffle (PqSpec asserts the plan\n"
-    sb ++= "and the equality with the explode + join formulation).\n"
+    // the IVF coarse assignment: the whole corpus through ivf_assign
+    val tIvf = time() {
+      Ann.tagCorpus(e, "vec_id", "embedding", cents).agg(sum(col("cluster"))).collect()
+    }
+    sb ++= "\n## Kernel layer: PQ serving and IVF assignment\n\n"
+    sb ++= "| form | sec/call | shuffle |\n|---|---|---|\n"
+    sb ++= f"| searchAdcJoin (pq_adc kernel per code row, map-only scan, one query) | $tPq%.3f | none |\n"
+    sb ++= f"| tagCorpus (ivf_assign kernel per vector, k=16, whole corpus) | $tIvf%.3f | none |\n"
+    sb ++= "\nThe codebooks (centroids) are collected once per model (call)\n"
+    sb ++= "into the kernel's table; a query is one codes scan topped by\n"
+    sb ++= "TakeOrdered and a tagging is one projection, with no explode, no\n"
+    sb ++= "join and no shuffle (PqSpec and AnnScaleSpec assert the plans and\n"
+    sb ++= "the equality with the join + min_by formulations).\n"
 
     // 5. SQ8: recall + serving cost of the deterministic index family
     val sqModel = graft.operators.Sq.train(e, "embedding", 64)

@@ -5912,8 +5912,9 @@ object SparkEntry {
     // -- FILTERED ANN: metadata predicate applied INSIDE the probed
     //    clusters (the hard case real vector stores special-case —
     //    filter-then-search, not search-then-filter, so top-k is never
-    //    starved). The tagged index carries `label` via the min_by
-    //    payload, so serving needs no join back to the base table --
+    //    starved). The tagged index carries `label` through the
+    //    map-only tagging, so serving needs no join back to the base
+    //    table --
     "ann_ivf_filtered" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val cents = e.where(col("vec_id") < 8)

@@ -1,9 +1,142 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.types._
 
 import graft.functions.{TopKAgg, VectorFunctions}
+import graft.sources.VectorStore
+
+/** The centroid set of one IVF assignment, flattened for [[IvfKernels]]:
+  * centroids sorted by (group, cluster); the slice of group
+  * `groups(s)` is [starts(s), starts(s + 1)). Centroid c has cluster id
+  * `clusters(c)` and, unless `nulls(c)`, the doubles
+  * values[offsets(c), offsets(c + 1)). Centroid-sized by construction.
+  */
+final class IvfTable(val groups: Array[Int], val starts: Array[Int],
+    val clusters: Array[Int], val nulls: Array[Boolean],
+    val offsets: Array[Int], val values: Array[Double]) extends Serializable
+
+object IvfTable {
+  /** Collect (group, cluster, centroid) rows — one job, the one the
+    * old centroid broadcast paid. Groups are ints (`k`, `grp`); with
+    * no group column every centroid is in group 0. Rows with a null
+    * group never match a vector (as in an inner join on the group) and
+    * are left out; a null cluster id is refused.
+    */
+  def collect(centroids: DataFrame, group: Option[String]): IvfTable = {
+    val rows = centroids
+      .select(group.fold(lit(0))(col).as("g"), col("cluster"),
+        transform(col("centroid"), _.cast("double")))
+      .where(col("g").isNotNull)
+      .collect()
+    rows.foreach(r => require(!r.isNullAt(1), "ivf_assign: a centroid has a null cluster id"))
+    val sorted = rows.sortBy(r => (r.getInt(0), r.getInt(1)))
+    val vecs = sorted.map(r => Option(r.getSeq[Double](2)).fold(Array.emptyDoubleArray)(_.toArray))
+    val firsts = sorted.indices.filter(c => c == 0 || sorted(c).getInt(0) != sorted(c - 1).getInt(0))
+    new IvfTable(firsts.map(sorted(_).getInt(0)).toArray, (firsts :+ sorted.length).toArray,
+      sorted.map(_.getInt(1)), sorted.map(_.isNullAt(2)), vecs.scanLeft(0)(_ + _.length),
+      vecs.flatten)
+  }
+}
+
+/** Static kernel for IVF coarse assignment: the cluster of the
+  * l2-nearest centroid in the vector's group slice. The distance is
+  * vec_l2's, op for op (elements read as doubles, x - c squared and
+  * summed from 0.0 in index order, then sqrt), and the minimum is
+  * taken over (distance, cluster) in Spark's ordering — the join +
+  * `min_by` formulation the DuckDB oracle replays:
+  *   - a null distance (null vector or null centroid) ranks first;
+  *   - NaN ranks above every number;
+  *   - ties go to the lower cluster;
+  *   - a length mismatch raises IllegalArgumentException, as vec_l2.
+  */
+object IvfKernels {
+  def assign(vec: ArrayData, isFloat: Boolean, group: Int, t: IvfTable): Int = {
+    val s = java.util.Arrays.binarySearch(t.groups, group)
+    if (s < 0) throw new IllegalStateException(s"ivf_assign: no centroids in group $group")
+    val n = if (vec == null) 0 else vec.numElements()
+    val x = new Array[Double](n)
+    var j = 0
+    while (j < n) {
+      x(j) = if (isFloat) vec.getFloat(j).toDouble else vec.getDouble(j)
+      j += 1
+    }
+    val lo = t.starts(s); val hi = t.starts(s + 1)
+    var best = lo; var bestNull = false; var bestD = 0.0
+    var c = lo
+    while (c < hi) {
+      val isNull = vec == null || t.nulls(c)
+      var dist = 0.0
+      if (!isNull) {
+        val base = t.offsets(c); val len = t.offsets(c + 1) - base
+        if (n != len) throw new IllegalArgumentException(
+          s"vec_l2: dimension mismatch $n vs $len")
+        var sum = 0.0; var i = 0
+        while (i < n) { val d = x(i) - t.values(base + i); sum += d * d; i += 1 }
+        dist = math.sqrt(sum)
+      }
+      if (c == lo || (!bestNull && (isNull || dist < bestD || (bestD.isNaN && !dist.isNaN)))) {
+        best = c; bestNull = isNull; bestD = dist
+      }
+      c += 1
+    }
+    t.clusters(best)
+  }
+}
+
+/** ivf_assign(vec, group): the assigned cluster (int), never null — a
+  * codegen'd call into [[IvfKernels.assign]] with the centroid table
+  * attached as a referenced object. `group` must be non-null and have
+  * centroids; [[Ann]]'s assignment filters the vectors to those groups.
+  */
+case class IvfAssignExpr(left: Expression, right: Expression, table: IvfTable)
+    extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+  override def prettyName: String = "ivf_assign"
+  // plans print the table size, not its identity hash
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(left, right, table.clusters.length)
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(FloatType | DoubleType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects (array<float|double>, int), got " +
+        s"(${l.catalogString}, ${r.catalogString})")
+  }
+  private def isFloat: Boolean = left.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
+  override def eval(input: InternalRow): Any = {
+    val g = right.eval(input)
+    if (g == null) throw new IllegalStateException("ivf_assign: null group")
+    IvfKernels.assign(left.eval(input).asInstanceOf[ArrayData], isFloat,
+      g.asInstanceOf[Int], table)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = left.genCode(ctx)
+    val g = right.genCode(ctx)
+    val tRef = ctx.addReferenceObj("ivfTable", table, "graft.operators.IvfTable")
+    ev.copy(code = code"""
+      |${v.code}
+      |${g.code}
+      |if (${g.isNull}) throw new IllegalStateException("ivf_assign: null group");
+      |int ${ev.value} = graft.operators.IvfKernels.assign(
+      |  ${v.isNull} ? null : ${v.value}, $isFloat, ${g.value}, $tRef);""".stripMargin,
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
 
 /** Approximate nearest neighbour — the batch/scale replacement for the
   * reference's HNSW graph (/root/reference/pkg/index/hnsw/hnsw.go).
@@ -20,11 +153,12 @@ import graft.functions.{TopKAgg, VectorFunctions}
   *  - IVF: k-means coarse quantizer (Lloyd's over DataFrames, all
   *    reduces map-side-combined), then nprobe-nearest-cluster search.
   *
-  * One Lloyd's loop ([[lloyd]]) and one argmin assignment ([[assign]])
-  * serve every quantizer: IVF k-means, multi-k sweeps, compaction,
-  * corpus tagging and PQ codebook training (grouped by subspace), so
-  * the seed rule, tie-break and 1e-6 centroid snap the DuckDB oracle
-  * replays hold for all of them by construction.
+  * One Lloyd's loop ([[lloyd]]) and one argmin assignment ([[assign]],
+  * the map-only `ivf_assign` kernel) serve every quantizer: IVF
+  * k-means, multi-k sweeps, compaction, corpus tagging and PQ codebook
+  * training (grouped by subspace), so the seed rule, tie-break and
+  * 1e-6 centroid snap the DuckDB oracle replays hold for all of them
+  * by construction.
   */
 object Ann {
 
@@ -210,10 +344,11 @@ object Ann {
         col("_v").as("centroid"))
 
   /** Lloyd's k-means over DataFrames: seeded from the first k vectors
-    * in id order; each iteration is one broadcast join (assign) + one
+    * in id order; each iteration is one map-only assignment (the
+    * collected centroids in the `ivf_assign` kernel) + one
     * partial-aggregated shuffle (recenter). `trainSampleMod > 1`
     * trains on the id-mod sample ([[vectors]]). Returns (cluster: int,
-    * centroid: array<double>).
+    * centroid: array<double>); `k = 0` returns no centroids.
     */
   def kmeans(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -224,8 +359,8 @@ object Ann {
 
   /** Multi-k Lloyd's: train EVERY k in `ks` inside the same jobs — the
     * sample is tagged with each k once and [[lloyd]] runs grouped by
-    * k, so per iteration ONE sample scan meets a k-tagged centroid
-    * broadcast instead of |ks| sequential training chains. The same
+    * k, so per iteration ONE sample scan meets a k-sliced centroid
+    * table instead of |ks| sequential training chains. The same
     * loop and seed rule as [[kmeans]], so each k is numerically
     * identical to it — a model-selection sweep (cluster_elbow) trains
     * its whole k grid for the wall-clock of one chain. Returns (k,
@@ -241,7 +376,7 @@ object Ann {
       .where(col("cluster") < col("k"))
       .select(col("k"), col("cluster"), col("centroid"))
       .coalesce(1).localCheckpoint(eager = false)
-    lloyd(vecs.withColumn("k", explode(typedLit(ks))), seed, iters, Seq("k"))
+    lloyd(vecs.withColumn("k", explode(typedLit(ks))), seed, iters, Some("k"))
   }
 
   /** THE Lloyd's loop — IVF k-means, multi-k sweeps, compaction and
@@ -263,10 +398,10 @@ object Ann {
     * not data.
     */
   private[operators] def lloyd(vecs: DataFrame, seed: DataFrame, iters: Int,
-      groupCols: Seq[String] = Nil): DataFrame = {
-    val g = groupCols.map(col)
+      group: Option[String] = None): DataFrame = {
+    val g = group.map(col).toSeq
     (0 until iters).foldLeft(seed) { (centroids, _) =>
-      assign(vecs, centroids, groupCols)
+      assign(vecs, centroids, group)
         .select((g :+ col("cluster") :+ posexplode(col("_v"))): _*)
         .groupBy((g :+ col("cluster") :+ col("pos")): _*)
         .agg(round(avg(col("col")), 6).as("m"))
@@ -281,32 +416,34 @@ object Ann {
     }
   }
 
-  /** THE argmin-centroid assignment: (group…, _id, cluster, _v,
-    * metaCols…) for vectors (group…, _id, _v, metaCols…) against
-    * centroids (group…, cluster, centroid), joined on the group
-    * columns (a cross join when there are none) under a broadcast,
-    * then a `min_by` aggregation per (group…, _id). The aggregate gets
-    * map-side partial aggregation, so the exchange carries one row per
-    * vector — NOT the ×k candidate rows a row_number() window would
-    * shuffle (the round-1 scale-killer). Ties break by (distance,
-    * cluster) ascending.
+  /** THE argmin-centroid assignment: (group?, _id, cluster, _v,
+    * metaCols…) for vectors (group?, _id, _v, metaCols…) against
+    * centroids (group?, cluster, centroid), one independent argmin per
+    * int `group` value. The centroids are collected once into an
+    * [[IvfTable]] (one job, where a broadcast used to be) and each
+    * vector is tagged by the `ivf_assign` kernel in a projection: map-
+    * only, no join, no exchange, one output row per input row.
+    * Vectors of a group with no centroids are dropped (decided on the
+    * driver: an empty centroid set gives an empty result), as an inner
+    * join on the group would.
     *
-    * Boundary contract: the distance is vec_l2, so a vector whose
-    * length differs from the centroids' raises
-    * IllegalArgumentException. Degenerate vectors are pinned in
-    * AnnScaleSpec.
+    * Boundary contract ([[IvfKernels]], pinned in AnnScaleSpec): the
+    * distance is vec_l2's, ties break by (distance, cluster)
+    * ascending, a null distance ranks first and NaN last, and a vector
+    * whose length differs from a centroid's raises
+    * IllegalArgumentException.
     */
   private def assign(vecs: DataFrame, centroids: DataFrame,
-      groupCols: Seq[String], metaCols: Seq[String] = Nil): DataFrame = {
-    val payload = struct(
-      (col("cluster") +: col("_v") +: metaCols.map(col)): _*)
-    vecs.join(broadcast(centroids), groupCols)
-      .withColumn("_d", VectorFunctions.vec_l2(col("_v"), col("centroid")))
-      .groupBy((groupCols :+ "_id").map(col): _*)
-      .agg(min_by(payload, struct(col("_d"), col("cluster"))).as("_m"))
-      .select((groupCols.map(col) ++ Seq(col("_id"),
-        col("_m.cluster").as("cluster"), col("_m._v").as("_v")) ++
-        metaCols.map(c => col(s"_m.$c").as(c))): _*)
+      group: Option[String], metaCols: Seq[String] = Nil): DataFrame = {
+    val t = IvfTable.collect(centroids, group)
+    val keep =
+      if (t.groups.isEmpty) lit(false)
+      else group.fold(lit(true))(g => col(g).isin(t.groups.toSeq: _*))
+    val cluster = Shims.column(IvfAssignExpr(Shims.expression(col("_v")),
+      Shims.expression(group.fold(lit(0))(col)), t))
+    vecs.where(keep)
+      .select((group.map(col).toSeq ++ Seq(col("_id"), cluster.as("cluster"),
+        col("_v")) ++ metaCols.map(col)): _*)
   }
 
   /** IVF index: corpus rows tagged with their cluster id. At scale,
@@ -329,9 +466,11 @@ object Ann {
     * tenant ids …) to carry through onto the tagged rows, so an
     * at-rest index can serve FILTERED ANN — predicate applied inside
     * the probed clusters — without a join back to the base table.
-    * They ride the min_by payload struct: no extra shuffle.
+    * They pass through the same map-only projection.
     *
-    * Degenerate rows (pinned in AnnScaleSpec): a null vector is KEPT,
+    * One output row per input row: duplicate ids are tagged
+    * independently, not merged. Degenerate rows (pinned in
+    * AnnScaleSpec): a null vector is KEPT,
     * tagged cluster-lowest with a null vector — a null distance ranks
     * first in the (distance, cluster) minimum; a vector with a NaN
     * element has NaN distances, which rank above every number, so it
@@ -343,7 +482,7 @@ object Ann {
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, metaCols: Seq[String] = Nil): DataFrame = {
     assign(vectors(corpus, idCol, vecCol, metaCols = metaCols), centroids,
-      Nil, metaCols)
+      None, metaCols)
       .select(
         (col("_id").as(idCol) +: col("_v").as(vecCol) +:
           col("cluster") +: metaCols.map(col)): _*)
@@ -351,22 +490,24 @@ object Ann {
 
   /** Incremental maintenance: new vectors join an existing IVF index
     * by centroid assignment only (no retrain) — the insert path of a
-    * live index (reference storage.go Insert + hnsw.go Add).
+    * live index (reference storage.go Insert + hnsw.go Add). Map-only:
+    * [[tagCorpus]] and a union. An empty centroid set appends nothing.
     */
   def appendToIvf(
       tagged: DataFrame, centroids: DataFrame,
       newRows: DataFrame, idCol: String, vecCol: String): DataFrame =
     tagged.unionByName(tagCorpus(newRows, idCol, vecCol, centroids))
 
-  /** Delete ids from a live IVF index: a left-anti join against the
-    * doomed-id set (reference storage.go Delete; HNSW instead has to
-    * unlink graph nodes). No rebuild, no retag — remaining rows keep
-    * their cluster, so an at-rest partitionBy("cluster") layout stays
-    * valid and only rewritten partitions change.
+  /** Delete ids from a live IVF index: [[VectorStore.delete]]'s
+    * broadcast batch anti-join (reference storage.go Delete; HNSW
+    * instead has to unlink graph nodes). No rebuild, no retag —
+    * remaining rows keep their cluster, so an at-rest
+    * partitionBy("cluster") layout stays valid and only rewritten
+    * partitions change.
     */
   def deleteFromIvf(
       tagged: DataFrame, idCol: String, doomed: DataFrame): DataFrame =
-    tagged.join(doomed.select(col(idCol)), Seq(idCol), "left_anti")
+    VectorStore.delete(tagged, idCol, doomed)
 
   /** Per-cluster occupancy: (cluster, n, share). k rows — the input
     * to the retag-when-skewed decision and to at-rest partition-size

@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
+import graft.sources.VectorStore
+
 /** Static kernel for binary (sign-bit) quantization: one bit per
   * dimension against a per-dimension midrange threshold, packed into a
   * single 64-bit word (dim <= 64). Bit i is set iff x_i > thr_i.
@@ -266,10 +268,11 @@ object Bq {
       idCol: String, vecCol: String): DataFrame =
     codes.unionByName(encode(model, newRows, idCol, vecCol))
 
-  /** Live-index delete: anti-join the doomed ids out of the codes. */
+  /** Live-index delete: [[VectorStore.delete]]'s
+    * broadcast batch anti-join of the doomed ids. */
   def deleteFromIndex(codes: DataFrame, idCol: String,
       doomed: DataFrame): DataFrame =
-    codes.join(doomed.select(col(idCol)), Seq(idCol), "left_anti")
+    VectorStore.delete(codes, idCol, doomed)
 
   /** Composed IVF-BQ: coarse quantizer routes the query to `nprobe`
     * clusters, the hamming scan touches only THEIR 8-byte codes, and
@@ -286,8 +289,9 @@ object Bq {
 
   /** Live-index insert for the composed IVF-BQ index: route the new
     * batch through the FROZEN coarse quantizer, sign-encode with the
-    * FROZEN thresholds, union — map-only plus one tiny centroid
-    * broadcast; existing cluster partitions are untouched.
+    * FROZEN thresholds, union — map-only: the centroids ride the
+    * `ivf_assign` kernel as a collected table, no broadcast and no
+    * shuffle; existing cluster partitions are untouched.
     * Deletes need no composed variant: [[deleteFromIndex]] anti-joins
     * clusterCodes by id and rows keep their cluster.
     */

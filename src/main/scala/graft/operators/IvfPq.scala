@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.VectorStore
+
 /** IVF-PQ: the composed production vector index (Jégou et al. 2011,
   * the FAISS `IVFx,PQy` family; the HNSW-replacement pairing of the
   * reference's index surface at batch scale). A coarse k-means
@@ -125,9 +127,11 @@ object IvfPq {
   }
 
   /** Live-index insert for the composed index: route each new vector
-    * through the FROZEN coarse quantizer (argmin-l2 centroid), encode
-    * the routed rows with the FROZEN codebooks, union — no retrain, no
-    * touch of existing codes; the routing is the only shuffle.
+    * through the FROZEN coarse quantizer (the `ivf_assign` kernel),
+    * encode the routed rows with the FROZEN codebooks, union — no
+    * retrain, no touch of existing codes, and no shuffle: routing and
+    * encode are both map-only (the residual form adds one centroid
+    * broadcast).
     * `residual = true` encodes x - centroid(x) instead of x, matching
     * a [[buildResidual]] index (the append must mirror the encode the
     * index was built with or ADC scores are garbage).
@@ -143,15 +147,16 @@ object IvfPq {
     Index(index.centroids, index.model, index.codes.unionByName(newCodes))
   }
 
-  /** Live-index delete: anti-join the doomed ids out of the codes.
-    * Remaining rows keep their cluster, so an at-rest
-    * partitionBy("cluster") layout stays valid (only rewritten
-    * partitions change) — same contract as Ann.deleteFromIvf.
+  /** Live-index delete: [[VectorStore.delete]]'s
+    * broadcast batch anti-join of the doomed ids. Remaining rows keep
+    * their cluster, so an at-rest partitionBy("cluster") layout stays
+    * valid (only rewritten partitions change) — same contract as
+    * Ann.deleteFromIvf.
     */
   def deleteFromIndex(index: Index, idCol: String,
       doomed: DataFrame): Index =
     Index(index.centroids, index.model,
-      index.codes.join(doomed.select(col(idCol)), Seq(idCol), "left_anti"))
+      VectorStore.delete(index.codes, idCol, doomed))
 
   /** At-rest layout: codes partitionBy(cluster) + centroids +
     * codebooks/params (reusing the PQ index layout for the latter).

@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
+import graft.sources.VectorStore
+
 /** Static kernels for PQ encode and ADC scoring over a flat codebook
   * table: entry (g, c) — subspace g, code c — holds subDim doubles
   * starting at (g * k + c) * subDim. Both keep the op order of the SQL
@@ -238,7 +240,7 @@ object Pq {
         Window.partitionBy(col("grp")).orderBy(col("_id"))))
       .where(col("_rn") <= k)
       .select(col("grp"), (col("_rn") - 1).as("cluster"), col("_v").as("centroid"))
-    val cb = Ann.lloyd(vecs, seed, iters, Seq("grp"))
+    val cb = Ann.lloyd(vecs, seed, iters, Some("grp"))
       .select(col("grp"), col("cluster").as("code"), col("centroid"))
     Model(m, k, subDim, cb.coalesce(1).localCheckpoint(eager = false))
   }
@@ -369,10 +371,11 @@ object Pq {
       idCol: String, vecCol: String): DataFrame =
     codes.unionByName(encode(model, newRows, idCol, vecCol))
 
-  /** Live-index delete: anti-join the doomed ids out of the codes. */
+  /** Live-index delete: [[VectorStore.delete]]'s
+    * broadcast batch anti-join of the doomed ids. */
   def deleteFromIndex(codes: DataFrame, idCol: String,
       doomed: DataFrame): DataFrame =
-    codes.join(doomed.select(col(idCol)), Seq(idCol), "left_anti")
+    VectorStore.delete(codes, idCol, doomed)
 
   /** ADC top-k: the query stays a (broadcast) one-row DataFrame with
     * column `qvec` — no driver-side action on the query path beyond

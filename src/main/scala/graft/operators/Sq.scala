@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
+import graft.sources.VectorStore
+
 /** Static kernels for SQ8 scalar quantization. The arithmetic is
   * double-exact and ORDER-SENSITIVE on purpose: the DuckDB oracle
   * evaluates the textually identical formula, so both engines produce
@@ -354,10 +356,11 @@ object Sq {
       idCol: String, vecCol: String): DataFrame =
     codes.unionByName(encode(model, newRows, idCol, vecCol))
 
-  /** Live-index delete: anti-join the doomed ids out of the codes. */
+  /** Live-index delete: [[VectorStore.delete]]'s
+    * broadcast batch anti-join of the doomed ids. */
   def deleteFromIndex(codes: DataFrame, idCol: String,
       doomed: DataFrame): DataFrame =
-    codes.join(doomed.select(col(idCol)), Seq(idCol), "left_anti")
+    VectorStore.delete(codes, idCol, doomed)
 
   /** Retrain trigger: fraction of vector components falling OUTSIDE
     * the frozen per-dim [mn,mx] ranges (those clamp to 0/255 and

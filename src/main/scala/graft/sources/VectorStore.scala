@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * A "collection" is a parquet directory (or any DataFrame). Point
   * mutations become set operations that stay fully distributed:
-  * insert = union, delete = left_anti join, update (upsert) =
-  * left_anti + union. Persisting is a parquet write; at scale the
+  * insert = union, delete = broadcast left_anti join, update (upsert)
+  * = delete + union. Persisting is a parquet write; at scale the
   * write is partitioned/bucketed by the key for downstream pruning.
   */
 object VectorStore {
@@ -18,13 +18,23 @@ object VectorStore {
   def insert(store: DataFrame, rows: DataFrame): DataFrame =
     store.unionByName(rows)
 
+  /** THE batch delete every live index uses (Ann.deleteFromIvf and
+    * the Pq/IvfPq/Sq/Bq `deleteFromIndex`): `store` minus the rows
+    * whose key is in `keys`. A delete is a batch of ids and is
+    * broadcast, so the store is never shuffled — the doomed ids
+    * usually come without size statistics, and a plain anti-join
+    * would plan a sort-merge join that shuffles the whole store on
+    * every batch. A delete larger than a broadcast belongs in a
+    * rebuild (or Ann.compactIvf), not here. Duplicate keys delete
+    * once; a null key deletes nothing (and a null-keyed store row is
+    * never deleted).
+    */
   def delete(store: DataFrame, keyCol: String, keys: DataFrame): DataFrame =
-    store.join(keys, Seq(keyCol), "left_anti")
+    store.join(broadcast(keys.select(keyCol)), Seq(keyCol), "left_anti")
 
   /** Upsert: rows in `updates` replace store rows with the same key. */
   def update(store: DataFrame, keyCol: String, updates: DataFrame): DataFrame =
-    store.join(updates.select(keyCol), Seq(keyCol), "left_anti")
-      .unionByName(updates)
+    delete(store, keyCol, updates).unionByName(updates)
 
   def get(store: DataFrame, keyCol: String, key: Any): DataFrame =
     store.where(col(keyCol) === lit(key))

@@ -1,9 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Ann, Pq}
+import graft.functions.VectorFunctions
+import graft.operators.{Ann, Bq, IvfAssignExpr, IvfPq, IvfTable, Pq, Sq}
+import graft.sources.VectorStore
 
 class AnnScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -265,17 +272,123 @@ class AnnScaleSpec extends AnyFunSuite {
       s"no partition pruning in plan:\n$plan")
   }
 
-  test("tagCorpus plan: a broadcast nested-loop join and one exchange, on _id") {
+  test("tagCorpus plan is map-only: no Exchange, no join") {
     val e = Tables.load(spark, sf, "embeddings")
     val cents = e.where(col("vec_id") < 4)
       .select(col("vec_id").cast("int").as("cluster"),
         transform(col("embedding"), _.cast("double")).as("centroid"))
-    val p = Ann.tagCorpus(e, "vec_id", "embedding", cents)
-      .queryExecution.executedPlan.toString
-    val exchanges = p.linesIterator.filter(l => l.contains("Exchange ") &&
-      !l.contains("BroadcastExchange")).toSeq
-    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(_id"), p)
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
+    val tagged = Ann.tagCorpus(e, "vec_id", "embedding", cents)
+    val nodes = SparkTestSession.executed(tagged)
+    assert(!nodes.exists(_.isInstanceOf[Exchange]), nodes.head.treeString)
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), nodes.head.treeString)
+    assert(tagged.queryExecution.executedPlan.toString.contains("ivf_assign"))
+  }
+
+  test("live-index delete + append plans are shuffle-free for every family") {
+    // the doomed ids come from an RDD, so Spark has no size statistics
+    // for them — the case where a plain anti-join plans a sort-merge
+    // join that shuffles the whole index
+    val e = Tables.load(spark, sf, "embeddings")
+    val base = e.where(col("vec_id") < 400).localCheckpoint()
+    val fresh = e.where(col("vec_id") >= 400)
+    val doomed = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L), Row(7L), Row(450L)), 1),
+      StructType(Seq(StructField("vec_id", LongType))))
+    val n = 398 + fresh.count() // 1 and 7 leave; 450 is appended after
+    val (tagged, cents) = Ann.buildIvf(base, "vec_id", "embedding", k = 4, iters = 1)
+    val ivfpq = IvfPq.staticIndex(base, "vec_id", "embedding", dim = 64)
+    val pq = Pq.staticCodebooks(base, "vec_id", "embedding", dim = 64)
+    val sq = Sq.train(base, "embedding", 64)
+    val bq = Bq.train(base, "embedding", 64)
+    def idx(df: DataFrame) = df.localCheckpoint()
+    val families = Seq(
+      "VectorStore" -> VectorStore.insert(
+        VectorStore.delete(base, "vec_id", doomed), fresh),
+      "VectorStore.update" -> VectorStore.update(
+        VectorStore.delete(base, "vec_id", doomed), "vec_id", fresh),
+      "Ann" -> Ann.appendToIvf(Ann.deleteFromIvf(idx(tagged), "vec_id", doomed),
+        cents, fresh, "vec_id", "embedding"),
+      "Pq" -> Pq.appendToIndex(pq, Pq.deleteFromIndex(
+        idx(Pq.encode(pq, base, "vec_id", "embedding")), "vec_id", doomed),
+        fresh, "vec_id", "embedding"),
+      "Sq" -> Sq.appendToIndex(sq, Sq.deleteFromIndex(
+        idx(Sq.encode(sq, base, "vec_id", "embedding")), "vec_id", doomed),
+        fresh, "vec_id", "embedding"),
+      "Bq" -> Bq.appendToIndex(bq, Bq.deleteFromIndex(
+        idx(Bq.encode(bq, base, "vec_id", "embedding")), "vec_id", doomed),
+        fresh, "vec_id", "embedding")) ++
+      Seq(false, true).map(residual => s"IvfPq residual=$residual" ->
+        IvfPq.appendToIndex(IvfPq.deleteFromIndex(
+          ivfpq.copy(codes = idx(ivfpq.codes)), "vec_id", doomed),
+          fresh, "vec_id", "embedding", residual).codes)
+    for ((name, df) <- families) {
+      val nodes = SparkTestSession.executed(df)
+      assert(nodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 0,
+        s"$name shuffles:\n${nodes.head.treeString}")
+      assert(df.count() == n, name)
+    }
+  }
+
+  /** The join + shuffled `min_by` assignment the ivf_assign kernel
+    * replaced, per (group, _id): the reference it must equal. */
+  private def refAssign(vecs: DataFrame, cents: DataFrame,
+      group: Option[String]): DataFrame =
+    vecs.join(broadcast(cents), group.toSeq)
+      .withColumn("_d", VectorFunctions.vec_l2(col("_v"), col("centroid")))
+      .groupBy((group.toSeq :+ "_id").map(col): _*)
+      .agg(min_by(col("cluster"), struct(col("_d"), col("cluster"))).as("cluster"))
+
+  test("ivf_assign kernel == join + min_by reference: ties, NaN, Inf, nulls, groups") {
+    val rnd = new scala.util.Random(20261018L)
+    // elements from a 3-value grid, so distance ties are common
+    def elem(): Double = rnd.nextInt(40) match {
+      case 0 => Double.NaN
+      case 1 => Double.PositiveInfinity
+      case 2 => Double.NegativeInfinity
+      case i => (i % 3 - 1).toDouble
+    }
+    def vec(): Seq[Double] = if (rnd.nextInt(25) == 0) null else Seq.fill(4)(elem())
+    for ((group, values) <- Seq(None -> Seq(0), Some("k") -> Seq(2, 3, 5),
+        Some("grp") -> Seq(0, 1, 2, 3))) {
+      val g = group.getOrElse("g")
+      // duplicate centroid rows: each vector twice, under clusters c and c + 7
+      val centRows = values.flatMap { v =>
+        (0 until 5).flatMap { c =>
+          // the last group's cluster 3 is null: it takes every vector
+          val x = if (group.nonEmpty && v == values.last && c == 3) null else vec()
+          if (c == 4 && v != values.last) Nil else Seq(Row(v, c, x), Row(v, c + 7, x))
+        }
+      }
+      // one group without centroids: its vectors are dropped by both
+      val vecRows = (0 until 300).map(i =>
+        Row(if (i % 50 == 0) 99 else values(i % values.length), i.toLong, vec()))
+      for (elemType <- Seq(DoubleType, FloatType)) {
+        val typed = vecRows.map(r =>
+          if (elemType == DoubleType || r.isNullAt(2)) r
+          else Row(r(0), r(1), r.getSeq[Double](2).map(_.toFloat)))
+        val vecs = spark.createDataFrame(spark.sparkContext.parallelize(typed, 3),
+          StructType(Seq(StructField(g, IntegerType), StructField("_id", LongType),
+            StructField("_v", ArrayType(elemType)))))
+        val cents = spark.createDataFrame(spark.sparkContext.parallelize(centRows, 1),
+          StructType(Seq(StructField(g, IntegerType), StructField("cluster", IntegerType),
+            StructField("centroid", ArrayType(DoubleType)))))
+        val t = IvfTable.collect(cents, group)
+        val kernel = vecs.where(col(g).isin(t.groups.toSeq: _*))
+          .select(col(g), col("_id"), Shims.column(IvfAssignExpr(
+            Shims.expression(col("_v")), Shims.expression(col(g)), t)).as("cluster"))
+        def tags(df: DataFrame) =
+          df.collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getInt(2)).toMap
+        val want = tags(refAssign(vecs, cents, Some(g)).select(col(g), col("_id"), col("cluster")))
+        val got = tags(kernel)
+        val wrong = (got.toSet diff want.toSet).take(5)
+        assert(got.size == 294 && want.size == 294 && wrong.isEmpty,
+          s"group=$group $elemType: kernel (group, id) -> cluster $wrong")
+        if (group.isEmpty) assert(Ann.tagCorpus(
+            vecs.where(col(g) === 0).withColumnRenamed("_v", "v"),
+            "_id", "v", cents.drop(g)).collect()
+          .map(r => (0, r.getLong(0)) -> r.getInt(2)).toMap == want)
+      }
+    }
   }
 
   test("tagCorpus metaCols ride the index; filtered probe == filter-then-search") {
@@ -403,5 +516,46 @@ class AnnScaleSpec extends AnyFunSuite {
       (1, 0) -> Seq(0.0, 0.0), (1, 1) -> Seq(10.0, 10.0)))
     // a kernel needs every (grp, code): the table refuses a short book
     intercept[IllegalArgumentException](model.table)
+  }
+
+  test("degenerate input: duplicate ids are tagged per row, not merged") {
+    // id 2 twice: once near cluster 0, once on cluster 1
+    val dup = base :+ (2L -> Seq(10.0, 10, 10, 10))
+    val rows = Ann.tagCorpus(frame(dup), "id", "v", cents).collect()
+      .map(r => r.getLong(0) -> r.getInt(2))
+    assert(rows.length == 7)
+    assert(rows.filter(_._1 == 2L).map(_._2).sorted.toSeq == Seq(0, 1))
+    val tagged = Ann.tagCorpus(frame(base), "id", "v", cents)
+    assert(Ann.appendToIvf(tagged, cents, frame(dup), "id", "v").count() == 13)
+    // both copies count in their cluster's mean
+    assert(kmeans(dup, 2) == Map(twoGroups.head, 1 -> Seq(9.75, 9.75, 10.0, 10.0)))
+  }
+
+  test("degenerate input: k = 0 trains no centroids; no centroids tag nothing") {
+    assert(kmeans(base, 0).isEmpty)
+    val multi = Ann.kmeansMulti(frame(base), "id", "v", Seq(0, 2), iters = 2)
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
+    assert(multi == twoGroups.map { case (c, v) => (2, c) -> v })
+    val none = cents.where(lit(false))
+    assert(tags(Nil).isEmpty && Ann.tagCorpus(frame(base), "id", "v", none).count() == 0)
+    val tagged = Ann.tagCorpus(frame(base), "id", "v", cents)
+    assert(Ann.appendToIvf(tagged, none, frame(base), "id", "v").count() == 6)
+  }
+
+  test("degenerate input: the shared delete drops each doomed id once; null ids match nothing") {
+    val s = spark; import s.implicits._
+    val store = Seq(Some(0L) -> "a", Some(1L) -> "b", Some(2L) -> "c", None -> "n")
+      .toDF("id", "x")
+    val doomed = Seq(Some(1L), Some(1L), None, Some(99L)).toDF("id")
+    val left = VectorStore.delete(store, "id", doomed).collect().map(r => Option(r.get(0)))
+    assert(left.length == 3 && left.toSet == Set(Some(0L), Some(2L), None))
+    // an upsert with a repeated key replaces the old row with both copies
+    assert(VectorStore.update(store, "id", Seq(Some(2L) -> "u", Some(2L) -> "v")
+      .toDF("id", "x")).where(col("id") === 2).as[(Long, String)].collect()
+      .map(_._2).sorted.toSeq == Seq("u", "v"))
+    val tagged = Ann.tagCorpus(frame(base), "id", "v", cents)
+    val after = Ann.deleteFromIvf(tagged, "id", doomed)
+    assert(after.select("id", "cluster").collect().toSet ==
+      tagged.where(col("id") =!= 1).select("id", "cluster").collect().toSet)
   }
 }

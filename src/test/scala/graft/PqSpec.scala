@@ -1,17 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions
-import graft.operators.{Ann, IvfPq, Pq}
+import graft.operators.{IvfPq, Pq}
 
 class PqSpec extends AnyFunSuite {
+  import SparkTestSession.executed
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
@@ -89,17 +89,6 @@ class PqSpec extends AnyFunSuite {
     Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
       .collectFirst { case x: IllegalArgumentException => x }
       .getOrElse(fail(s"no IllegalArgumentException in $t"))
-  }
-
-  /** Every node of the executed (AQE-final) plan, after running it. */
-  private def executed(df: DataFrame): Seq[SparkPlan] = {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => s +: nodes(s.plan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
-    df.collect()
-    nodes(df.queryExecution.executedPlan)
   }
 
   test("train: m*k codebook entries of subDim each") {
@@ -244,13 +233,12 @@ class PqSpec extends AnyFunSuite {
       assert(shuffles(df) == 0, s"$name shuffles")
       assert(generates(df) == 0, s"$name generates")
     }
-    // append: the coarse routing (Ann.tagCorpus's min_by) is the only
-    // shuffle left; the encode adds none, raw or residual
+    // append: the coarse routing (the ivf_assign kernel) and the
+    // encode are both map-only, raw or residual
     val add = e.where(col("vec_id") >= 400)
-    val routing = shuffles(Ann.tagCorpus(add, "vec_id", "embedding", idx.centroids))
     for (residual <- Seq(false, true)) {
       val appended = IvfPq.appendToIndex(idx, add, "vec_id", "embedding", residual).codes
-      assert(shuffles(appended) == routing, s"residual=$residual")
+      assert(shuffles(appended) == 0, s"residual=$residual")
       assert(generates(appended) == 0, s"residual=$residual")
     }
   }

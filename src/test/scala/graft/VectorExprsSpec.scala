@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +15,17 @@ object SparkTestSession {
   // the production session factory, so the suite dogfoods the session
   // wiring every main runs on (ExtensionsSpec asserts what it promises)
   lazy val spark: SparkSession = Session(cpus = 4)
+
+  /** Every node of the executed (AQE-final) plan, after running it. */
+  def executed(df: DataFrame): Seq[SparkPlan] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
 }
 
 class VectorExprsSpec extends AnyFunSuite {
