@@ -162,7 +162,7 @@ object Plans {
     sb ++= s"(`local[$cpus]`, GraftExtensions on) — the session `graft.Bench`\n"
     sb ++= "and `graft.Verify` run on. What to look for:\n"
     sb ++= "`PushedFilters` at the scans, `BroadcastHashJoin` for dims,\n"
-    sb ++= "`partial_topk_pairs` before the exchange in knn_join,\n"
+    sb ++= "`partial_knn_block` before the single-partition exchange in knn_join,\n"
     sb ++= "`TakeOrderedAndProject` for every top-k, and `*(n)` marking\n"
     sb ++= "whole-stage codegen around the distance expressions.\n"
     sb ++= "\nPlans are dumped AFTER execution (`isFinalPlan=true`), so\n"

@@ -3035,8 +3035,8 @@ object SparkEntry {
     //    full-width exact top-10 on a 20-query sample — the
     //    truncation-budget table an MRL-style serving tier reads
     //    before choosing how many dims to keep hot. Each budget is
-    //    one broadcast knnJoin (TopKPairs partials, no all-pairs
-    //    shuffle); recall reported as exact integer e4 --
+    //    one knnJoin (one knn_block corpus scan, no pair rows, no
+    //    all-pairs shuffle); recall reported as exact integer e4 --
     "recall_dim_budget" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       def top10(d: Option[Int]): DataFrame = {

@@ -47,42 +47,10 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
     case _                       => false
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements())
-      throw new IllegalArgumentException(
-        s"$prettyName: dimension mismatch ${n} vs ${b.numElements()}")
-    val af = isFloat(left); val bf = isFloat(right)
-    def av(i: Int): Double = if (af) a.getFloat(i).toDouble else a.getDouble(i)
-    def bv(i: Int): Double = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
-    metric match {
-      case "l2" =>
-        var s = 0.0; var i = 0
-        while (i < n) { val d = av(i) - bv(i); s += d * d; i += 1 }
-        math.sqrt(s)
-      case "l1" =>
-        var s = 0.0; var i = 0
-        while (i < n) { s += math.abs(av(i) - bv(i)); i += 1 }
-        s
-      case "dot" =>
-        var s = 0.0; var i = 0
-        while (i < n) { s += av(i) * bv(i); i += 1 }
-        -s
-      case "cosine" =>
-        var dp = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < n) {
-          val x = av(i); val y = bv(i)
-          dp += x * y; na += x * x; nb += y * y; i += 1
-        }
-        if (na == 0.0 || nb == 0.0) 1.0
-        else {
-          val sim = dp / (math.sqrt(na) * math.sqrt(nb))
-          1.0 - math.max(-1.0, math.min(1.0, sim))
-        }
-    }
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorDistance.distance(metric,
+      VectorDistance.doubles(l.asInstanceOf[ArrayData], isFloat(left)),
+      VectorDistance.doubles(r.asInstanceOf[ArrayData], isFloat(right)))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -148,6 +116,64 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
 
 object VectorDistance {
   val metrics: Set[String] = Set("l2", "cosine", "dot", "l1")
+
+  /** The kernel metric of a public metric name: euclidean -> l2,
+    * dotproduct -> dot, manhattan -> l1; kernel names pass through.
+    */
+  def kernelMetric(name: String): String = name match {
+    case "euclidean"  => "l2"
+    case "dotproduct" => "dot"
+    case "manhattan"  => "l1"
+    case other        => other
+  }
+
+  /** The elements of an array<float|double> as doubles. */
+  def doubles(a: ArrayData, isFloat: Boolean): Array[Double] =
+    if (!isFloat) a.toDoubleArray()
+    else {
+      val n = a.numElements()
+      val x = new Array[Double](n)
+      var i = 0
+      while (i < n) { x(i) = a.getFloat(i).toDouble; i += 1 }
+      x
+    }
+
+  /** THE four metric loops (the interpreted `vec_<metric>` and the
+    * `knn_block` aggregate both call this; the codegen'd form above
+    * emits the same ops in the same order). A length mismatch raises
+    * IllegalArgumentException naming `vec_<metric>`.
+    */
+  def distance(metric: String, a: Array[Double], b: Array[Double]): Double = {
+    val n = a.length
+    if (n != b.length)
+      throw new IllegalArgumentException(
+        s"vec_$metric: dimension mismatch $n vs ${b.length}")
+    metric match {
+      case "l2" =>
+        var s = 0.0; var i = 0
+        while (i < n) { val d = a(i) - b(i); s += d * d; i += 1 }
+        math.sqrt(s)
+      case "l1" =>
+        var s = 0.0; var i = 0
+        while (i < n) { s += math.abs(a(i) - b(i)); i += 1 }
+        s
+      case "dot" =>
+        var s = 0.0; var i = 0
+        while (i < n) { s += a(i) * b(i); i += 1 }
+        -s
+      case "cosine" =>
+        var dp = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+        while (i < n) {
+          val x = a(i); val y = b(i)
+          dp += x * y; na += x * x; nb += y * y; i += 1
+        }
+        if (na == 0.0 || nb == 0.0) 1.0
+        else {
+          val sim = dp / (math.sqrt(na) * math.sqrt(nb))
+          1.0 - math.max(-1.0, math.min(1.0, sim))
+        }
+    }
+  }
 }
 
 /** Column API + SQL registration for the vector functions. */
@@ -166,13 +192,8 @@ object VectorFunctions {
   /** Manhattan (L1) distance. */
   def vec_l1(a: Column, b: Column): Column = dist(a, b, "l1")
 
-  def forMetric(metric: String)(a: Column, b: Column): Column = metric match {
-    case "euclidean"  => vec_l2(a, b)
-    case "cosine"     => vec_cosine(a, b)
-    case "dotproduct" => vec_dot(a, b)
-    case "manhattan"  => vec_l1(a, b)
-    case other        => dist(a, b, other)
-  }
+  def forMetric(metric: String)(a: Column, b: Column): Column =
+    dist(a, b, VectorDistance.kernelMetric(metric))
 
   /** Registers vec_l2/vec_cosine/vec_dot/vec_l1 for Spark SQL use. */
   def register(spark: SparkSession): Unit = {

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
@@ -31,64 +31,101 @@ object IvfTable {
     * group never match a vector (as in an inner join on the group) and
     * are left out; a null cluster id is refused.
     */
-  def collect(centroids: DataFrame, group: Option[String]): IvfTable = {
-    val rows = centroids
+  def collect(centroids: DataFrame, group: Option[String]): IvfTable =
+    of(centroids
       .select(group.fold(lit(0))(col).as("g"), col("cluster"),
         transform(col("centroid"), _.cast("double")))
       .where(col("g").isNotNull)
       .collect()
-    rows.foreach(r => require(!r.isNullAt(1), "ivf_assign: a centroid has a null cluster id"))
-    val sorted = rows.sortBy(r => (r.getInt(0), r.getInt(1)))
-    val vecs = sorted.map(r => Option(r.getSeq[Double](2)).fold(Array.emptyDoubleArray)(_.toArray))
-    val firsts = sorted.indices.filter(c => c == 0 || sorted(c).getInt(0) != sorted(c - 1).getInt(0))
-    new IvfTable(firsts.map(sorted(_).getInt(0)).toArray, (firsts :+ sorted.length).toArray,
-      sorted.map(_.getInt(1)), sorted.map(_.isNullAt(2)), vecs.scanLeft(0)(_ + _.length),
+      .map { r =>
+        require(!r.isNullAt(1), "ivf_assign: a centroid has a null cluster id")
+        (r.getInt(0), r.getInt(1),
+          Option(r.getSeq[Double](2)).map(_.toArray).orNull)
+      })
+
+  /** The group-0 table of a centroid block ([[Ann.centroidBlock]]). */
+  def ofBlock(block: ArrayData): IvfTable =
+    of((0 until (if (block == null) 0 else block.numElements())).map { c =>
+      val r = block.getStruct(c, 2)
+      require(!r.isNullAt(0), "ivf_probe: a centroid has a null cluster id")
+      (0, r.getInt(0), if (r.isNullAt(1)) null else r.getArray(1).toDoubleArray())
+    })
+
+  /** The table of (group, cluster, centroid) entries; a null centroid
+    * has a null distance to every vector.
+    */
+  def of(entries: Seq[(Int, Int, Array[Double])]): IvfTable = {
+    val sorted = entries.sortBy(e => (e._1, e._2)).toArray
+    val vecs = sorted.map(e => Option(e._3).getOrElse(Array.emptyDoubleArray))
+    val firsts = sorted.indices.filter(c => c == 0 || sorted(c)._1 != sorted(c - 1)._1)
+    new IvfTable(firsts.map(sorted(_)._1).toArray, (firsts :+ sorted.length).toArray,
+      sorted.map(_._2), sorted.map(_._3 == null), vecs.scanLeft(0)(_ + _.length),
       vecs.flatten)
   }
 }
 
-/** Static kernel for IVF coarse assignment: the cluster of the
-  * l2-nearest centroid in the vector's group slice. The distance is
-  * vec_l2's, op for op (elements read as doubles, x - c squared and
-  * summed from 0.0 in index order, then sqrt), and the minimum is
-  * taken over (distance, cluster) in Spark's ordering — the join +
-  * `min_by` formulation the DuckDB oracle replays:
+/** Static kernels for IVF coarse assignment and probing: the clusters
+  * of the l2-nearest centroids in the vector's group slice. The
+  * distance is vec_l2's, op for op (elements read as doubles, x - c
+  * squared and summed from 0.0 in index order, then sqrt), and the
+  * ranking is over (distance, cluster) in Spark's ordering — the join
+  * + `min_by` / `row_number` formulations the DuckDB oracle replays:
   *   - a null distance (null vector or null centroid) ranks first;
   *   - NaN ranks above every number;
   *   - ties go to the lower cluster;
   *   - a length mismatch raises IllegalArgumentException, as vec_l2.
+  * One ranking ([[nearest]]) serves `ivf_assign` (the best one) and
+  * the `knn_block` probe (the best `nprobe`).
   */
 object IvfKernels {
   def assign(vec: ArrayData, isFloat: Boolean, group: Int, t: IvfTable): Int = {
     val s = java.util.Arrays.binarySearch(t.groups, group)
     if (s < 0) throw new IllegalStateException(s"ivf_assign: no centroids in group $group")
-    val n = if (vec == null) 0 else vec.numElements()
-    val x = new Array[Double](n)
-    var j = 0
-    while (j < n) {
-      x(j) = if (isFloat) vec.getFloat(j).toDouble else vec.getDouble(j)
-      j += 1
-    }
+    val x = if (vec == null) null else graft.functions.VectorDistance.doubles(vec, isFloat)
+    t.clusters(nearest(x, t, s, 1)(0))
+  }
+
+  /** The distinct clusters of the `nprobe` best group-0 centroids of
+    * `x` (null: a null vector), best first; none for an empty table.
+    */
+  def probe(x: Array[Double], t: IvfTable, nprobe: Int): Array[Int] =
+    if (t.groups.isEmpty) Array.emptyIntArray
+    else nearest(x, t, 0, nprobe).map(t.clusters(_)).distinct
+
+  /** Centroid indices of slice `s` (at most `n`), best first, for the
+    * vector `x` (null: a null vector).
+    */
+  def nearest(x: Array[Double], t: IvfTable, s: Int, n: Int): Array[Int] = {
     val lo = t.starts(s); val hi = t.starts(s + 1)
-    var best = lo; var bestNull = false; var bestD = 0.0
+    val m = math.max(0, math.min(n, hi - lo))
+    val best = new Array[Int](m)
+    val bestD = new Array[Double](m) // a null distance is kept as -Inf
+    var kept = 0
     var c = lo
     while (c < hi) {
-      val isNull = vec == null || t.nulls(c)
-      var dist = 0.0
-      if (!isNull) {
+      var dist = Double.NegativeInfinity
+      if (x != null && !t.nulls(c)) {
         val base = t.offsets(c); val len = t.offsets(c + 1) - base
-        if (n != len) throw new IllegalArgumentException(
-          s"vec_l2: dimension mismatch $n vs $len")
+        if (x.length != len) throw new IllegalArgumentException(
+          s"vec_l2: dimension mismatch ${x.length} vs $len")
         var sum = 0.0; var i = 0
-        while (i < n) { val d = x(i) - t.values(base + i); sum += d * d; i += 1 }
+        while (i < len) { val d = x(i) - t.values(base + i); sum += d * d; i += 1 }
         dist = math.sqrt(sum)
       }
-      if (c == lo || (!bestNull && (isNull || dist < bestD || (bestD.isNaN && !dist.isNaN)))) {
-        best = c; bestNull = isNull; bestD = dist
+      // insert after every kept entry that is not worse (ties keep
+      // the earlier, lower cluster); NaN is worse than every number
+      var p = kept
+      while (p > 0 && !dist.isNaN && (bestD(p - 1).isNaN || dist < bestD(p - 1))) p -= 1
+      if (p < m) {
+        val last = math.min(kept, m - 1)
+        System.arraycopy(best, p, best, p + 1, last - p)
+        System.arraycopy(bestD, p, bestD, p + 1, last - p)
+        best(p) = c; bestD(p) = dist
+        if (kept < m) kept += 1
       }
       c += 1
     }
-    t.clusters(best)
+    best
   }
 }
 
@@ -132,6 +169,33 @@ case class IvfAssignExpr(left: Expression, right: Expression, table: IvfTable)
       |int ${ev.value} = graft.operators.IvfKernels.assign(
       |  ${v.isNull} ? null : ${v.value}, $isFloat, ${g.value}, $tRef);""".stripMargin,
       isNull = FalseLiteral)
+  }
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** ivf_probe(vec, centroids): the clusters a query probes — the
+  * `nprobe` l2-nearest of a centroid block ([[Ann.centroidBlock]], a
+  * scalar subquery parsed once per task), best first, by
+  * [[IvfKernels.probe]], the routing `knn_block` runs. Explode it for
+  * (query, cluster) rows.
+  */
+case class IvfProbeExpr(left: Expression, right: Expression, nprobe: Int)
+    extends BinaryExpression with CodegenFallback {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "ivf_probe"
+  @transient private lazy val table = IvfTable.ofBlock(right.eval(null).asInstanceOf[ArrayData])
+  private def isFloat: Boolean = left.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
+  override def eval(input: InternalRow): Any = {
+    val v = left.eval(input).asInstanceOf[ArrayData]
+    new GenericArrayData(IvfKernels.probe(
+      if (v == null) null else graft.functions.VectorDistance.doubles(v, isFloat),
+      table, nprobe).map(c => c: Any))
   }
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -275,10 +339,10 @@ object Ann {
   }
 
   /** Batch APPROXIMATE kNN join — the many-queries scale pattern.
-    * Knn.knnJoin broadcasts the query set and scans q×|corpus| pairs;
-    * here BOTH sides get multi-table LSH buckets and candidates come
-    * from a (tbl, bucket) equi join, so the pair stream is only
-    * bucket-collisions — neither side needs to fit in a broadcast and
+    * Knn.knnJoin ships the query set in every task and scores
+    * q×|corpus| distances; here BOTH sides get multi-table LSH buckets
+    * and candidates come from a (tbl, bucket) equi join, so the pair
+    * stream is only bucket-collisions — neither side needs to fit in a task and
     * corpus-vs-corpus joins (global near-dup, all-pairs ANN) stay
     * shuffle-bounded. Per-query top-k is the TopKPairs bounded-heap
     * aggregate (map-side partial, exchange carries <= q*k*partitions
@@ -571,57 +635,58 @@ object Ann {
       .orderBy(col("_d"), col("cluster")).limit(nprobe)
       .select(col("cluster"))
 
-  /** Search an IVF index: probe the `nprobe` nearest clusters only. */
+  /** Search an IVF index: probe the `nprobe` nearest clusters only.
+    * The probe is a broadcast join on `cluster`; no plan has shown it
+    * pruning partitions of an at-rest `partitionBy("cluster")` index.
+    */
   def searchIvf(
       tagged: DataFrame, centroids: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, metric: String, k: Int,
       nprobe: Int = 2, roundTo: Int = 4): DataFrame =
-    Knn.topK( // the probe join partition-prunes when bucketed at rest
+    Knn.topK(
       tagged.join(broadcast(nearestClusters(centroids, query, nprobe)),
         Seq("cluster")),
       query, idCol, vecCol, metric, k, roundTo)
 
-  /** (qid, qvec, cluster) for each query of a (qid, qvec) batch and
-    * each of its `nprobe` l2-nearest clusters, ties to the lower
-    * cluster — [[nearestClusters]] per query. Shared by
-    * [[searchIvfBatch]] and the recall matrix's IVF rows.
-    */
-  private[operators] def routeBatch(
-      queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    queries.crossJoin(broadcast(centroids))
-      .select(col("qid"), col("qvec"), col("cluster"),
-        VectorFunctions.vec_l2(
-          transform(col("qvec"), _.cast("double")), col("centroid")).as("_d"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("_d"), col("cluster"))))
-      .where(col("_rn") <= nprobe)
-      .select(col("qid"), col("qvec"), col("cluster"))
-  }
-
   /** Batch form of [[searchIvf]]: many queries at once, each routed
     * to ITS `nprobe` nearest clusters and ranked independently —
-    * `queries` is a (qid, qvec) frame. One broadcast of the routed
-    * (qid, qvec, cluster) table replaces per-query driver loops, so a
-    * micro-batch of streamed queries costs ONE partition-pruned scan
-    * of the probed clusters' union, not |batch| jobs. Per-query
-    * results are identical to [[searchIvf]] (same routing ties, same
-    * rounded-distance + id ranking).
+    * `queries` is a (qid, qvec) frame, a micro-batch shipped inside
+    * each task (see [[Knn.knnJoin]]). One scan of `tagged` through the
+    * `knn_block` kernel: each task routes every query once (the
+    * `ivf_assign` ranking: vec_l2 on doubles, null first, NaN last,
+    * ties to the lower cluster) and scores a row only against the
+    * queries probing its cluster; rows of unprobed clusters are
+    * skipped. No join, no window, one single-partition exchange.
+    *
+    * Output (qid, id in its input type, dist), ordered by (qid, dist,
+    * id). Each query's results are [[searchIvf]]'s, under the
+    * [[Knn.knnJoin]] contract: one row per distinct id, null vectors
+    * and NaN distances skipped, query rows sharing a qid share one
+    * top-k. (Before the kernel, a null vector ranked first with a
+    * null dist, a NaN row was kept and a duplicate id came back once
+    * per copy.)
     */
   def searchIvfBatch(
       tagged: DataFrame, centroids: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, metric: String, k: Int,
-      nprobe: Int = 2, roundTo: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    tagged // the join partition-prunes at rest
-      .join(broadcast(routeBatch(queries, centroids, nprobe)), Seq("cluster"))
-      .select(col("qid"), col(idCol), round(d, roundTo).as("dist"))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))))
-      .where(col("_rn") <= k)
-      .select(col("qid"), col(idCol), col("dist"))
-  }
+      nprobe: Int = 2, roundTo: Int = 4): DataFrame =
+    Knn.searchBlock(tagged, idCol, vecCol, queries.select(col("qid"), col("qvec")),
+      Some((centroids, nprobe)), metric, k, excludeSelf = false, roundTo)
+      .select(col("qid"), col("id").cast(tagged.schema(idCol).dataType).as(idCol),
+        col("dist"))
+
+  /** A (cluster, centroid) frame as one array<struct<cluster: int,
+    * centroid: array<double>>> scalar subquery: computed once per
+    * action, no job while the DataFrame is built.
+    */
+  private[operators] def centroidBlock(centroids: DataFrame): Column =
+    Knn.onePartition(centroids).select(collect_list(struct(col("cluster").cast("int").as("cluster"),
+      transform(col("centroid"), _.cast("double")).as("centroid")))).scalar()
+
+  /** The `nprobe` clusters `qvec` probes (array<int>, best first). */
+  private[operators] def probe(qvec: Column, centroids: DataFrame, nprobe: Int): Column =
+    Shims.column(IvfProbeExpr(Shims.expression(qvec),
+      Shims.expression(centroidBlock(centroids)), nprobe))
 
   /** The two rankings both LSH audits compare, for each query
     * (`idCol` → qid, `vecCol` → qvec): the exact top-k (qid, id) over

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -103,12 +106,23 @@ object Knn {
 
   /** Batch kNN: every row of `queries` gets its own top-k from `corpus`.
     *
-    * The query set is broadcast (q << corpus); the corpus is scanned
-    * once. Per-query top-k goes through the TopKPairs
-    * TypedImperativeAggregate: each map task reduces its partition to
-    * <= k pairs per query BEFORE the shuffle, so the exchange carries
-    * q*k*partitions rows — not the q*|corpus| a rank window would
-    * shuffle. Output: (qid, id, dist, rank).
+    * One corpus scan through the `knn_block` aggregate
+    * ([[graft.functions.KnnBlock]]): each row is scored against the
+    * whole query block in the task, with no (query, row) pair rows,
+    * no join and no window; each task's partial is <= k pairs per
+    * query and the partials meet in one single-partition exchange.
+    * The query block is a micro-batch: `queries` is collected by a
+    * scalar subquery once per action (no job while the DataFrame is
+    * built) and shipped inside each task, so it must fit in a task.
+    *
+    * Output: (qid in its input type, integral; id as bigint; dist =
+    * `round(d, roundTo)`; rank from 1), ordered by (qid, rank). Per
+    * qid, the k smallest (dist, id) over distinct ids; rows with a
+    * null id or vector and NaN distances are skipped; query rows
+    * sharing a qid share one top-k; with `excludeSelf` an id equal to
+    * its qid (and every pair of a null qid) is skipped. `k <= 0`
+    * gives no rows and `k > n` gives n rows per qid. A length
+    * mismatch raises IllegalArgumentException ("vec_<metric>: …").
     */
   def knnJoin(
       corpus: DataFrame,
@@ -121,46 +135,49 @@ object Knn {
       k: Int,
       excludeSelf: Boolean = true,
       roundTo: Int = DefaultRound): DataFrame =
-    knnPairs(corpus, queries, idCol, vecCol, qidCol, qvecCol, metric,
-      excludeSelf, roundTo)
-      .groupBy(col(qidCol))
-      .agg(TopKAgg.topk_pairs(col("dist"), col(idCol), k).as("topk"))
-      .select(col(qidCol), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col(qidCol), col(s"pair.id").as(idCol),
-        col("pair.dist").as("dist"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col(qidCol), col("rank"))
+    searchBlock(corpus, idCol, vecCol,
+      queries.select(col(qidCol).as("qid"), col(qvecCol).as("qvec")), None,
+      metric, k, excludeSelf, roundTo)
+      .select(col("qid").as(qidCol), col("id").as(idCol), col("dist"), col("rank"))
 
-  /** Rank-window formulation of knnJoin — same semantics, shuffles
-    * every candidate pair; kept as the executable spec the aggregate
-    * version is tested against.
+  /** `df` coalesced to one partition when it provably is one already
+    * (projections and filters over a one-partition RDD or loaded cache,
+    * as a streamed micro-batch, a one-slice `createDataFrame` or a
+    * pinned centroid table), so a block's aggregate needs no exchange
+    * and its subquery is one job. Any other frame keeps its partitions
+    * and the aggregate its partial/final pair: a query frame is never
+    * scanned by one task.
     */
-  def knnJoinWindow(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      qidCol: String,
-      qvecCol: String,
-      metric: String,
-      k: Int,
-      excludeSelf: Boolean = true,
-      roundTo: Int = DefaultRound): DataFrame = {
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("dist"), col(idCol))
-    knnPairs(corpus, queries, idCol, vecCol, qidCol, qvecCol, metric,
-        excludeSelf, roundTo)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .orderBy(col(qidCol), col("rank"))
+  private[operators] def onePartition(df: DataFrame): DataFrame = {
+    def single(p: LogicalPlan): Boolean = p match {
+      case r: LogicalRDD => r.rdd.getNumPartitions == 1
+      case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded &&
+        m.cacheBuilder.cachedColumnBuffers.getNumPartitions == 1
+      case _: Project | _: Filter => single(p.children.head)
+      case _ => false
+    }
+    if (single(df.queryExecution.optimizedPlan)) df.coalesce(1) else df
   }
 
-  private def knnPairs(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      qidCol: String, qvecCol: String, metric: String,
+  /** THE batch search of [[knnJoin]] and [[Ann.searchIvfBatch]]: the
+    * `knn_block` result of a (qid, qvec) block over `corpus` as (qid,
+    * id, dist, rank) rows, ordered by (qid, rank) in the one partition
+    * the partials meet in. `probe` = (centroids, nprobe) scores each
+    * query against its `nprobe` nearest clusters' rows only.
+    */
+  private[operators] def searchBlock(
+      corpus: DataFrame, idCol: String, vecCol: String, queries: DataFrame,
+      probe: Option[(DataFrame, Int)], metric: String, k: Int,
       excludeSelf: Boolean, roundTo: Int): DataFrame = {
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col(qvecCol))
+    val block = onePartition(queries)
+      .select(collect_list(struct(col("qid"), col("qvec")))).scalar()
+    val ivf = probe.map { case (centroids, nprobe) =>
+      (col("cluster"), Ann.centroidBlock(centroids), nprobe)
+    }
     corpus
-      .crossJoin(broadcast(queries))
-      .where(if (excludeSelf) col(idCol) =!= col(qidCol) else lit(true))
-      .select(col(qidCol), col(idCol), round(d, roundTo).as("dist"))
+      .agg(TopKAgg.knn_block(col(idCol), col(vecCol), block, ivf, metric, k,
+        excludeSelf, roundTo).as("_kb"))
+      .select(inline(col("_kb")))
+      .orderBy(col("qid"), col("rank"))
   }
 }

@@ -148,9 +148,8 @@ object Recall {
       .localCheckpoint(eager = false)
     def ivf(nprobe: Int): DataFrame =
       recallRow(exactCos,
-        topPairs(scored(tagged.join(
-          broadcast(Ann.routeBatch(q, cents, nprobe)), Seq("cluster")),
-          "cosine"), idCol, k),
+        Ann.searchIvfBatch(tagged, cents, q, idCol, vecCol, "cosine", k, nprobe)
+          .select(col("qid"), col(idCol)),
         idCol, "ivf", s"nprobe=$nprobe")
 
     // -- PQ (static codebooks): batch ADC over every (query, code) ----
@@ -225,8 +224,8 @@ object Recall {
     // -- composed IVF-PQ (static): ADC restricted to routed clusters --
     def ivfpq(nprobe: Int): DataFrame = {
       val routed = tagged.select(col(idCol), col("cluster"))
-        .join(broadcast(Ann.routeBatch(q, cents, nprobe)
-          .select(col("qid"), col("cluster"))), Seq("cluster"))
+        .join(broadcast(q.select(col("qid"), Ann.probe(col("qvec"), cents, nprobe).as("_p"))
+          .select(col("qid"), explode(col("_p")).as("cluster"))), Seq("cluster"))
         .select(col("qid"), col(idCol))
       recallRow(exactEuc,
         topPairs(adcScores.join(routed, Seq("qid", idCol)), idCol, k),
@@ -267,8 +266,8 @@ object Recall {
     * before trusting embeddings for retrieval or classification.
     *
     * Scale shape: cost is bounded by the QUERY SAMPLE — one batch kNN
-    * join (TopKPairs partial aggregate, k rows per query per
-    * partition pre-shuffle), then the bounded q×k neighbour table is
+    * (the knn_block aggregate, k rows per query per partition
+    * pre-shuffle), then the bounded q×k neighbour table is
     * BROADCAST back onto the corpus for the label lookup, so the
     * corpus is scanned, never shuffled.
     */

@@ -14,8 +14,9 @@ import scala.util.control.NonFatal
   * idiom for the reference's online Search endpoint
   * (pkg/index/hnsw/hnsw.go Search): a query firehose lands in
   * micro-batches, each batch routes through the coarse quantizer and
-  * scans only its probed clusters — one partition-pruned job per
-  * batch via [[Ann.searchIvfBatch]], never per-query driver loops.
+  * scores only its probed clusters — one scan of the tagged index per
+  * batch via [[Ann.searchIvfBatch]] (the batch ships inside each task),
+  * never per-query driver loops.
   *
   * State: none (the index is static within a serving generation), so
   * there is no watermark to manage; restarts are safe because every

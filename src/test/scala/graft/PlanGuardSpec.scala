@@ -445,11 +445,12 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("recall_dim_budget: every budget is a broadcast scan + TopKPairs partials") {
+  test("recall_dim_budget: every budget is one knn_block scan with no pair join") {
     val p = plan("recall_dim_budget")
-    assert(p.contains("BroadcastExchange"), p)
-    assert(p.contains("partial_topk_pairs"), p)
+    assert(p.contains("partial_knn_block"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("Window"), p)
   }
 
   test("split_group_aware: no cartesian anywhere in the pairs->CC->split chain") {
