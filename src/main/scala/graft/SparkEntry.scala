@@ -6314,19 +6314,12 @@ object SparkEntry {
         graft.functions.LshExpr.rp_project(col("embedding"), 16).as("proj"))
       val qp = q.select(
         graft.functions.LshExpr.rp_project(col("qvec"), 16).as("qproj"))
-      val short = codes.crossJoin(broadcast(qp))
-        .select(col("vec_id"), round(expr(
+      val short = Knn.cut(codes.crossJoin(broadcast(qp)), "vec_id",
+        Seq("proj", "qproj"), round(expr(
           """aggregate(zip_with(proj, qproj, (x, z) -> (x - z) * (x - z)),
             |CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)"""
-            .stripMargin.replaceAll("\n", " ")), 4).as("pd"))
-        .orderBy(col("pd"), col("vec_id")).limit(50)
-      e.join(broadcast(short.select(col("vec_id"))), Seq("vec_id"))
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          round(VectorFunctions.forMetric("euclidean")(
-            col("embedding"), col("qvec")), 4).as("dist"))
-        .orderBy(col("dist"), col("vec_id"))
-        .limit(10)
+            .stripMargin.replaceAll("\n", " ")), 4), "pd", 50)
+      Knn.rerank(e, short, q, "vec_id", "embedding", "euclidean", 10, 4)
     }),
 
     // -- composed IVF-PQ (static centroids + static codebooks): coarse

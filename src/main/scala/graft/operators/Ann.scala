@@ -74,8 +74,8 @@ object IvfTable {
   *   - NaN ranks above every number;
   *   - ties go to the lower cluster;
   *   - a length mismatch raises IllegalArgumentException, as vec_l2.
-  * One ranking ([[nearest]]) serves `ivf_assign` (the best one) and
-  * the `knn_block` probe (the best `nprobe`).
+  * One ranking ([[nearest]]) serves `ivf_assign` (the best one), the
+  * `knn_block` probe and `ivf_probe` (the best `nprobe`).
   */
 object IvfKernels {
   def assign(vec: ArrayData, isFloat: Boolean, group: Int, t: IvfTable): Int = {
@@ -271,14 +271,8 @@ object Ann {
       if (probeHamming == 0) array(sig)
       else array(sig +: (0 until numPlanes).map(p =>
         sig.bitwiseXOR(lit(1L << p))): _*)
-    val q = query
-      .withColumn("qbucket", explode(probes))
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    bucketed
-      .join(broadcast(q), col("bucket") === col("qbucket"))
-      .select(col(idCol), round(d, roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
+    Knn.exactTopK(bucketed.join(broadcast(query.withColumn("qbucket", explode(probes))),
+      col("bucket") === col("qbucket")), idCol, vecCol, metric, k, roundTo)
   }
 
   /** OR-amplified multi-table LSH: `numTables` independent
@@ -329,13 +323,9 @@ object Ann {
     val q = query
       .select(col("qvec"), explode(tb(qsigAll)).as("tb"))
       .select(col("qvec"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    bucketed
-      .join(broadcast(q), Seq("tbl", "bucket"))
-      .dropDuplicates(idCol) // a pair can match in several tables
-      .select(col(idCol), round(d, roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
+    Knn.exactTopK(bucketed.join(broadcast(q), Seq("tbl", "bucket"))
+      .dropDuplicates(idCol), // a pair can match in several tables
+      idCol, vecCol, metric, k, roundTo)
   }
 
   /** Batch APPROXIMATE kNN join — the many-queries scale pattern.
@@ -623,30 +613,27 @@ object Ann {
   def loadIndex(spark: SparkSession, path: String): (DataFrame, DataFrame) =
     (spark.read.parquet(s"$path/ivf"), spark.read.parquet(s"$path/centroids"))
 
-  /** The query's `nprobe` l2-nearest clusters (1-row query in `qvec`).
-    * Shared by IVF and IVF-PQ probing.
+  /** THE single-query IVF probe: `rows` joined on `cluster` with one
+    * broadcast, the one-row `query` exploded over its [[probe]]
+    * clusters, then `side`; the query's columns ride along. At rest
+    * (`partitionBy("cluster")`) dynamic pruning reads only the probed
+    * directories when the query row is a filtered file read (from a
+    * cached frame it read them all).
     */
-  def nearestClusters(
-      centroids: DataFrame, query: DataFrame, nprobe: Int): DataFrame =
-    query.crossJoin(broadcast(centroids))
-      .select(col("cluster"),
-        VectorFunctions.vec_l2(
-          transform(col("qvec"), _.cast("double")), col("centroid")).as("_d"))
-      .orderBy(col("_d"), col("cluster")).limit(nprobe)
-      .select(col("cluster"))
+  private[operators] def probeJoin(rows: DataFrame, centroids: DataFrame,
+      query: DataFrame, nprobe: Int, side: DataFrame => DataFrame): DataFrame =
+    rows.join(broadcast(side(query.withColumn("cluster",
+      explode(probe(col("qvec"), centroids, nprobe))))), Seq("cluster"))
 
-  /** Search an IVF index: probe the `nprobe` nearest clusters only.
-    * The probe is a broadcast join on `cluster`; no plan has shown it
-    * pruning partitions of an at-rest `partitionBy("cluster")` index.
+  /** Search an IVF index: [[Knn.topK]] over the [[probeJoin]] of the
+    * `nprobe` nearest clusters only.
     */
   def searchIvf(
       tagged: DataFrame, centroids: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, metric: String, k: Int,
       nprobe: Int = 2, roundTo: Int = 4): DataFrame =
-    Knn.topK(
-      tagged.join(broadcast(nearestClusters(centroids, query, nprobe)),
-        Seq("cluster")),
-      query, idCol, vecCol, metric, k, roundTo)
+    Knn.exactTopK(probeJoin(tagged, centroids, query, nprobe, identity),
+      idCol, vecCol, metric, k, roundTo)
 
   /** Batch form of [[searchIvf]]: many queries at once, each routed
     * to ITS `nprobe` nearest clusters and ranked independently —
@@ -680,10 +667,11 @@ object Ann {
     * action, no job while the DataFrame is built.
     */
   private[operators] def centroidBlock(centroids: DataFrame): Column =
-    Knn.onePartition(centroids).select(collect_list(struct(col("cluster").cast("int").as("cluster"),
-      transform(col("centroid"), _.cast("double")).as("centroid")))).scalar()
+    Knn.onePartition(centroids, oneFile = true)
+      .select(collect_list(struct(col("cluster").cast("int").as("cluster"),
+        transform(col("centroid"), _.cast("double")).as("centroid")))).scalar()
 
-  /** The `nprobe` clusters `qvec` probes (array<int>, best first). */
+  /** The `nprobe` clusters `qvec` probes (array<int>, distinct, best first). */
   private[operators] def probe(qvec: Column, centroids: DataFrame, nprobe: Int): Column =
     Shims.column(IvfProbeExpr(Shims.expression(qvec),
       Shims.expression(centroidBlock(centroids)), nprobe))
@@ -700,11 +688,10 @@ object Ann {
       metric: String, k: Int, numPlanes: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"))
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
     val byQuery = Window.partitionBy(col("qid"))
       .orderBy(col("dist"), col(idCol))
     def topK(pairs: DataFrame): DataFrame = pairs
-      .select(col("qid"), col(idCol), round(d, 4).as("dist"))
+      .select(col("qid"), col(idCol), Knn.dist(vecCol, metric, 4).as("dist"))
       .withColumn("rn", row_number().over(byQuery))
       .where(col("rn") <= k)
       .select(col("qid"), col(idCol), col("rn"))

@@ -217,11 +217,14 @@ object Bq {
     * [[search]]: map-only scan, TakeOrderedAndProject on (ham, id). */
   def searchWide(model: Model, codes: DataFrame, query: DataFrame,
       idCol: String, topK: Int): DataFrame =
-    codes.crossJoin(broadcast(
-        query.select(bq_encode_wide(model, col("qvec")).as("qcode"))))
-      .select(col(idCol), hammingWide(col("code"), col("qcode")).as("ham"))
-      .orderBy(col("ham"), col(idCol))
-      .limit(topK)
+    hamTopK(codes.crossJoin(broadcast(
+        query.select(bq_encode_wide(model, col("qvec")).as("qcode")))),
+      idCol, hammingWide(col("code"), col("qcode")), topK)
+
+  /** [[Knn.cut]] of code rows paired with their `qcode` by `ham`. */
+  private def hamTopK(pairs: DataFrame, idCol: String, ham: Column,
+      topK: Int): DataFrame =
+    Knn.cut(pairs, idCol, Seq("code", "qcode"), ham, "ham", topK)
 
   def bq_encode(model: Model, vec: Column): Column =
     Shims.column(BqEncodeExpr(Shims.expression(vec), model.thr))
@@ -235,28 +238,27 @@ object Bq {
   def encode(model: Model, corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
     corpus.select(col(idCol), bq_encode(model, col(vecCol)).as("code"))
 
+  /** The query's packed code, `qcode`. */
+  private def qcode(model: Model): Column = bq_encode(model, col("qvec")).as("qcode")
+
   /** Top-k by Hamming distance over the packed codes: scan + xor +
     * popcount per row, TakeOrderedAndProject on (ham, id). `query` is
-    * a one-row (qvec) DataFrame — broadcast, never collected. */
+    * a one-row (qvec) DataFrame — broadcast, never collected. Null
+    * codes and queries as in [[Knn.cut]] (a null code used to rank
+    * first). */
   def search(model: Model, codes: DataFrame, query: DataFrame,
       idCol: String, topK: Int): DataFrame =
-    codes.crossJoin(broadcast(
-        query.select(bq_encode(model, col("qvec")).as("qcode"))))
-      .select(col(idCol), hamming(col("code"), col("qcode")).as("ham"))
-      .orderBy(col("ham"), col(idCol))
-      .limit(topK)
+    hamTopK(codes.crossJoin(broadcast(query.select(qcode(model)))), idCol,
+      hamming(col("code"), col("qcode")), topK)
 
   /** Hamming shortlist + exact re-rank — the production serving
     * pattern: the 8-byte code scan picks `candidates` ids, exact
-    * distance touches only those full-precision rows (broadcast
-    * semi-join of a C-row id list; the corpus is never shuffled). */
+    * distance touches only those full-precision rows ([[Knn.rerank]]). */
   def searchWithRerank(model: Model, codes: DataFrame, corpus: DataFrame,
       query: DataFrame, idCol: String, vecCol: String, metric: String,
-      topK: Int, candidates: Int, roundTo: Int = 4): DataFrame = {
-    val short = search(model, codes, query, idCol, topK = candidates)
-    Knn.topK(corpus.join(broadcast(short.select(col(idCol))), Seq(idCol)),
+      topK: Int, candidates: Int, roundTo: Int = 4): DataFrame =
+    Knn.rerank(corpus, search(model, codes, query, idCol, candidates),
       query, idCol, vecCol, metric, topK, roundTo)
-  }
 
   /** Live-index insert: encode new rows with the FROZEN thresholds
     * and union — map-only, no retrain (the storage-Insert path; same
@@ -302,16 +304,18 @@ object Bq {
       encodeIvf(model, Ann.tagCorpus(newRows, idCol, vecCol, centroids),
         idCol, vecCol))
 
-  /** IVF-BQ serving: [[searchWithRerank]] over the codes of the
-    * query's `nprobe` nearest clusters only. */
+  /** IVF-BQ serving: the [[searchWithRerank]] funnel over the codes of
+    * the query's `nprobe` nearest clusters only ([[Ann.probeJoin]],
+    * `qcode` riding along; partition-pruned at rest). */
   def searchIvfBq(model: Model, clusterCodes: DataFrame,
       centroids: DataFrame, corpus: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, metric: String, topK: Int,
       candidates: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame =
-    searchWithRerank(model, // the probe join partition-prunes at rest
-      clusterCodes.join(broadcast(Ann.nearestClusters(centroids, query, nprobe)),
-        Seq("cluster")),
-      corpus, query, idCol, vecCol, metric, topK, candidates, roundTo)
+    Knn.rerank(corpus,
+      hamTopK(Ann.probeJoin(clusterCodes, centroids,
+          query.select(col("qvec"), qcode(model)), nprobe, identity),
+        idCol, hamming(col("code"), col("qcode")), candidates),
+      query, idCol, vecCol, metric, topK, roundTo)
 
   /** Persist the index: 8-byte codes table + dim-row threshold table. */
   def writeIndex(model: Model, codes: DataFrame, dir: String): Unit = {

@@ -16,9 +16,9 @@ import graft.sources.VectorStore
   *
   * Encode and scoring are Pq's codegen'd kernels: build and append
   * run `pq_encode` over the cluster-tagged frame they already hold
-  * (no join back on id), and search is a broadcast probe join, a
-  * broadcast cross join with the query and `pq_adc` under one top-k —
-  * no explode, no codebook join, no shuffle after routing.
+  * (no join back on id), and search is one broadcast probe join
+  * ([[Ann.probeJoin]], the query riding along) and `pq_adc` under one
+  * top-k — no explode of codes, no codebook join, no shuffle.
   *
   * [[build]] PQ-encodes the raw vectors (IVF-Flat-PQ). Classic
   * IVF-PQ encodes residuals (x - centroid) for tighter quantization
@@ -72,18 +72,15 @@ object IvfPq {
     Index(cents, model, encodeTagged(model, tagged, idCol, vecCol))
   }
 
-  /** Probe nprobe clusters, ADC-score only their codes with
-    * `pq_adc`. No action on the query path beyond the model's one-time
-    * codebook collect (query stays a broadcast one-row frame with `qvec`).
+  /** Probe nprobe clusters ([[Ann.probeJoin]]), ADC-score only their
+    * codes ([[Pq.adcTopK]]). No action on the query path beyond the
+    * model's one-time codebook collect.
     */
   def search(index: Index, query: DataFrame, idCol: String,
-      topK: Int, nprobe: Int = 2): DataFrame = {
-    val qc = Ann.nearestClusters(index.centroids, query, nprobe)
-    val cand = index.codes
-      .join(broadcast(qc), Seq("cluster")) // partition-prunes at rest
-      .select(col(idCol), col("codes"))
-    Pq.searchAdcJoin(index.model, cand, query, idCol, topK)
-  }
+      topK: Int, nprobe: Int = 2): DataFrame =
+    Pq.adcTopK(index.model,
+      Ann.probeJoin(index.codes, index.centroids, query, nprobe, identity),
+      "qvec", idCol, topK, Knn.DefaultRound)
 
   /** Classic residual IVF-PQ (Jégou et al. §IV): PQ encodes
     * x - centroid(x) instead of x, so all codebook mass models the
@@ -110,21 +107,17 @@ object IvfPq {
   /** Search a residual index: every probed cluster gets its own
     * residual query (q - centroid), and `pq_adc` scores each
     * candidate's codes against its cluster's residual. Same shape as
-    * the raw-vector path — the query side is one tiny (nprobe-row)
-    * broadcast instead of the one-row query.
+    * the raw-vector path; the probe's broadcast carries nprobe
+    * (cluster, qres) rows.
     */
   def searchResidual(index: Index, query: DataFrame, idCol: String,
-      topK: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame = {
-    val qc = Ann.nearestClusters(index.centroids, query, nprobe)
-    val qres = qc.join(broadcast(index.centroids), Seq("cluster"))
-      .crossJoin(broadcast(query))
-      .select(col("cluster"),
-        zip_with(col("qvec"), col("centroid"),
-          (x, c) => x.cast("double") - c).as("qres"))
+      topK: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame =
     Pq.adcTopK(index.model,
-      index.codes.join(broadcast(qres), Seq("cluster")), // partition-prunes at rest
+      Ann.probeJoin(index.codes, index.centroids, query, nprobe,
+        _.join(broadcast(index.centroids), Seq("cluster"))
+          .select(col("cluster"), zip_with(col("qvec"), col("centroid"),
+            (x, c) => x.cast("double") - c).as("qres"))),
       "qres", idCol, topK, roundTo)
-  }
 
   /** Live-index insert for the composed index: route each new vector
     * through the FROZEN coarse quantizer (the `ivf_assign` kernel),

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,7 +28,8 @@ object Knn {
 
   val DefaultRound = 4
 
-  /** Exact top-k for a single query vector column expression.
+  /** Exact top-k for a single query vector column expression, under
+    * [[cut]]'s contract (a null-vector row used to rank first).
     *
     * @param corpus  DataFrame holding `idCol` and `vecCol`
     * @param query   single-row DataFrame with the query vector as `qvec`
@@ -39,14 +42,41 @@ object Knn {
       vecCol: String,
       metric: String,
       k: Int,
-      roundTo: Int = DefaultRound): DataFrame = {
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    corpus
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(d, roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-  }
+      roundTo: Int = DefaultRound): DataFrame =
+    exactTopK(corpus.crossJoin(broadcast(query)), idCol, vecCol, metric, k, roundTo)
+
+  /** The exact score of a row paired with its query `qvec`. */
+  private[graft] def dist(vecCol: String, metric: String, roundTo: Int): Column =
+    round(VectorFunctions.forMetric(metric)(col(vecCol), col("qvec")), roundTo)
+
+  /** [[cut]] by the exact [[dist]]: (id, dist). */
+  private[graft] def exactTopK(pairs: DataFrame, idCol: String, vecCol: String,
+      metric: String, k: Int, roundTo: Int): DataFrame =
+    cut(pairs, idCol, Seq(vecCol, "qvec"), dist(vecCol, metric, roundTo), "dist", k)
+
+  /** THE single-query top-k cut of every index family: rows paired
+    * with their query → (id, `name` = `score`) by (score, id), limited
+    * to `k` (`TakeOrderedAndProject`; `k <= 0` gives no rows, `k > n`
+    * n). A null in any of `inputs` (vector or codes, query) drops the
+    * row on the input: a filter on the score alias would be pushed
+    * below the projection and evaluate the kernel twice per row. NaN
+    * scores are kept and order last.
+    */
+  private[graft] def cut(pairs: DataFrame, idCol: String, inputs: Seq[String],
+      score: Column, name: String, k: Int): DataFrame =
+    pairs.where(inputs.map(col(_).isNotNull).reduce(_ && _))
+      .select(col(idCol), score.as(name))
+      .orderBy(col(name), col(idCol))
+      .limit(math.max(k, 0))
+
+  /** THE shortlist rerank: the exact [[topK]] over the corpus rows on
+    * `shortlist`, a broadcast semi-join of its ids (no corpus shuffle).
+    */
+  private[graft] def rerank(corpus: DataFrame, shortlist: DataFrame,
+      query: DataFrame, idCol: String, vecCol: String, metric: String,
+      k: Int, roundTo: Int): DataFrame =
+    topK(corpus.join(broadcast(shortlist.select(col(idCol))), Seq(idCol)),
+      query, idCol, vecCol, metric, k, roundTo)
 
   /** Radius (range) search: ALL corpus rows within `radius` of the
     * query, nearest first — the "every vector closer than r" contract
@@ -66,13 +96,9 @@ object Knn {
       radius: Double,
       maxRows: Int = 1000,
       roundTo: Int = DefaultRound): DataFrame = {
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-    corpus
-      .crossJoin(broadcast(query))
-      .select(col(idCol), round(d, roundTo).as("dist"))
-      .where(col("dist") <= radius)
-      .orderBy(col("dist"), col(idCol))
-      .limit(maxRows)
+    val d = dist(vecCol, metric, roundTo)
+    cut(corpus.crossJoin(broadcast(query)).where(d <= radius), idCol,
+      Seq(vecCol, "qvec"), d, "dist", maxRows)
   }
 
   /** Faceted top-k: the query's nearest `k` within EACH value of
@@ -93,11 +119,10 @@ object Knn {
       metric: String,
       k: Int,
       roundTo: Int = DefaultRound): DataFrame = {
-    val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
     val w = Window.partitionBy(col(groupCol)).orderBy(col("dist"), col(idCol))
     corpus
       .crossJoin(broadcast(query))
-      .select(col(groupCol), col(idCol), round(d, roundTo).as("dist"))
+      .select(col(groupCol), col(idCol), dist(vecCol, metric, roundTo).as("dist"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
       .select(col(groupCol), col(idCol), col("dist"))
@@ -143,16 +168,23 @@ object Knn {
   /** `df` coalesced to one partition when it provably is one already
     * (projections and filters over a one-partition RDD or loaded cache,
     * as a streamed micro-batch, a one-slice `createDataFrame` or a
-    * pinned centroid table), so a block's aggregate needs no exchange
-    * and its subquery is one job. Any other frame keeps its partitions
-    * and the aggregate its partial/final pair: a query frame is never
-    * scanned by one task.
+    * pinned centroid table; with `oneFile`, also over one file no
+    * larger than the open cost, which Spark never splits, as a stored
+    * centroid table), so a block's aggregate needs no exchange and its
+    * subquery is one job. Any other frame keeps its partitions and the
+    * aggregate its partial/final pair: a query frame is never scanned
+    * by one task. Query blocks leave `oneFile` off: identical blocks
+    * of one plan share that exchange (recall_dim_budget: 10 jobs, 13
+    * with one subquery job per block).
     */
-  private[operators] def onePartition(df: DataFrame): DataFrame = {
+  private[operators] def onePartition(df: DataFrame, oneFile: Boolean): DataFrame = {
     def single(p: LogicalPlan): Boolean = p match {
       case r: LogicalRDD => r.rdd.getNumPartitions == 1
       case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded &&
         m.cacheBuilder.cachedColumnBuffers.getNumPartitions == 1
+      case LogicalRelation(f: HadoopFsRelation, _, _, _, _) =>
+        oneFile && f.location.inputFiles.length == 1 &&
+          f.location.sizeInBytes <= SQLConf.get.filesOpenCostInBytes
       case _: Project | _: Filter => single(p.children.head)
       case _ => false
     }
@@ -169,7 +201,7 @@ object Knn {
       corpus: DataFrame, idCol: String, vecCol: String, queries: DataFrame,
       probe: Option[(DataFrame, Int)], metric: String, k: Int,
       excludeSelf: Boolean, roundTo: Int): DataFrame = {
-    val block = onePartition(queries)
+    val block = onePartition(queries, oneFile = false)
       .select(collect_list(struct(col("qid"), col("qvec")))).scalar()
     val ivf = probe.map { case (centroids, nprobe) =>
       (col("cluster"), Ann.centroidBlock(centroids), nprobe)

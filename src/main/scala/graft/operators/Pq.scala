@@ -382,38 +382,34 @@ object Pq {
     * the model's one-time codebook collect — and each code row is
     * scored by the `pq_adc` kernel, topped by TakeOrderedAndProject.
     * Returns (id, score) ascending: approximate distances, exact
-    * ordering by the codes.
+    * ordering by the codes, under [[Knn.cut]]'s contract.
     */
   def searchAdcJoin(model: Model, codes: DataFrame, query: DataFrame,
       idCol: String, topK: Int, roundTo: Int = 4): DataFrame =
     adcTopK(model, codes.crossJoin(broadcast(query)), "qvec", idCol, topK, roundTo)
 
-  /** Score rows holding `codes` and a query column `qCol` with
-    * round(sqrt(pq_adc), roundTo); (id, score) top-k ascending. Rows
-    * with null codes are skipped.
-    */
-  private[operators] def adcTopK(model: Model, rows: DataFrame, qCol: String,
+  /** THE ADC score of `codes` to a query vector. */
+  private[operators] def adcScore(model: Model, codes: Column, q: Column,
+      roundTo: Int): Column =
+    round(sqrt(pq_adc(model, codes, q)), roundTo)
+
+  /** [[Knn.cut]] of `codes` rows paired with query column `qCol`. */
+  private[operators] def adcTopK(model: Model, pairs: DataFrame, qCol: String,
       idCol: String, topK: Int, roundTo: Int): DataFrame =
-    rows.where(col("codes").isNotNull)
-      .select(col(idCol),
-        round(sqrt(pq_adc(model, col("codes"), col(qCol))), roundTo).as("score"))
-      .orderBy(col("score"), col(idCol))
-      .limit(topK)
+    Knn.cut(pairs, idCol, Seq("codes", qCol),
+      adcScore(model, col("codes"), col(qCol), roundTo), "score", topK)
 
   /** ADC shortlist + exact re-rank: scan the 8-byte codes for
     * `candidates` approximate nearest, then compute true distances
-    * for only those rows. The production pattern: the full-precision
-    * corpus is touched for C rows, not |corpus| — at 100 TB the codes
-    * (32x smaller) are the only full scan. The query stays a
-    * (broadcast) one-row DataFrame; with static codebooks the whole
-    * plan is deterministic and DuckDB-oracled (`ann_pq_rerank`).
+    * for only those rows ([[Knn.rerank]]). The production pattern:
+    * the full-precision corpus is touched for C rows, not |corpus| —
+    * at 100 TB the codes (32x smaller) are the only full scan. With
+    * static codebooks the whole plan is DuckDB-oracled (`ann_pq_rerank`).
     */
   def searchWithRerankJoin(
       model: Model, codes: DataFrame, corpus: DataFrame,
       query: DataFrame, idCol: String, vecCol: String,
-      metric: String, topK: Int, candidates: Int = 100): DataFrame = {
-    val shortlist = searchAdcJoin(model, codes, query, idCol, candidates)
-    Knn.topK(corpus.join(broadcast(shortlist.select(col(idCol))), Seq(idCol)),
-      query, idCol, vecCol, metric, topK)
-  }
+      metric: String, topK: Int, candidates: Int = 100): DataFrame =
+    Knn.rerank(corpus, searchAdcJoin(model, codes, query, idCol, candidates),
+      query, idCol, vecCol, metric, topK, Knn.DefaultRound)
 }

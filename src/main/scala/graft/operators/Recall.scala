@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TopKAgg, VectorFunctions}
+import graft.functions.TopKAgg
 
 /** Cross-family recall audit: one matrix of (family, budget,
   * recall@k) over a shared query sample, for every index family the
@@ -119,10 +119,8 @@ object Recall {
         .unionByName(gq.select(col("qid"), col("qid").as(idCol)))
       (gq, served)
     }
-    def scored(df: DataFrame, metric: String): DataFrame = {
-      val d = VectorFunctions.forMetric(metric)(col(vecCol), col("qvec"))
-      df.select(col("qid"), col(idCol), round(d, 4).as("_s"))
-    }
+    def scored(df: DataFrame, metric: String): DataFrame =
+      df.select(col("qid"), col(idCol), Knn.dist(vecCol, metric, 4).as("_s"))
     val exactCos = topPairs(
       scored(corpus.crossJoin(broadcast(q)), "cosine"), idCol, k)
       .localCheckpoint(eager = false)
@@ -157,11 +155,10 @@ object Recall {
       m = 8, k = 16)
     val codes = Pq.encode(pqModel, corpus, idCol, vecCol)
       .localCheckpoint(eager = false)
-    // per-(qid, id) ADC score: the pq_adc kernel and rounding of
-    // Pq.searchAdcJoin
+    // per-(qid, id) ADC score: Pq.searchAdcJoin's
     val adcScores = codes.crossJoin(broadcast(q))
       .select(col("qid"), col(idCol),
-        round(sqrt(Pq.pq_adc(pqModel, col("codes"), col("qvec"))), 4).as("_s"))
+        Pq.adcScore(pqModel, col("codes"), col("qvec"), 4).as("_s"))
       .localCheckpoint(eager = false)
     val pqAdc = recallRow(exactEuc, topPairs(adcScores, idCol, k),
       idCol, "pq", "adc")
@@ -183,7 +180,7 @@ object Recall {
     val sqScores = Sq.encode(sqModel, corpus, idCol, vecCol)
       .crossJoin(broadcast(q))
       .select(col("qid"), col(idCol),
-        round(Sq.sq8_l2(sqModel, col("codes"), col("qvec")), 4).as("_s"))
+        Sq.dist8(sqModel, 4).as("_s"))
       .localCheckpoint(eager = false)
     val sq8Codes = recallRow(exactEuc, topPairs(sqScores, idCol, k),
       idCol, "sq8", "codes")
@@ -195,7 +192,7 @@ object Recall {
     val sq4Scores = Sq.encode4(sqModel, corpus, idCol, vecCol)
       .crossJoin(broadcast(q))
       .select(col("qid"), col(idCol),
-        round(Sq.sq4_l2(sqModel, col("codes"), col("qvec")), 4).as("_s"))
+        Sq.dist4(sqModel, 4).as("_s"))
       .localCheckpoint(eager = false)
     val sq4Codes = recallRow(exactEuc, topPairs(sq4Scores, idCol, k),
       idCol, "sq4", "codes")

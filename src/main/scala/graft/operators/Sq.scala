@@ -263,30 +263,32 @@ object Sq {
   def encode(model: Model, corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
     corpus.select(col(idCol), sq8_encode(model, col(vecCol)).as("codes"))
 
+  /** THE SQ8 / SQ4 scores of a `codes` row paired with its `qvec`. */
+  private[operators] def dist8(model: Model, roundTo: Int): Column =
+    round(sq8_l2(model, col("codes"), col("qvec")), roundTo)
+  private[operators] def dist4(model: Model, roundTo: Int): Column =
+    round(sq4_l2(model, col("codes"), col("qvec")), roundTo)
+
+  private def codeTopK(pairs: DataFrame, idCol: String, score: Column,
+      topK: Int): DataFrame =
+    Knn.cut(pairs, idCol, Seq("codes", "qvec"), score, "dist", topK)
+
   /** Top-k by dequantized L2: scan codes, distance kernel per row,
     * TakeOrderedAndProject. `query` is a one-row (qvec) DataFrame —
-    * broadcast, never collected on the driver. */
+    * broadcast, never collected on the driver. Null codes and queries
+    * as in [[Knn.cut]] (a null-codes row used to rank first). */
   def search(model: Model, codes: DataFrame, query: DataFrame,
       idCol: String, topK: Int, roundTo: Int = 4): DataFrame =
-    codes.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(sq8_l2(model, col("codes"), col("qvec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
+    codeTopK(codes.crossJoin(broadcast(query)), idCol, dist8(model, roundTo), topK)
 
   /** SQ8 shortlist + exact re-rank — the production serving pattern:
     * the 1/4-size code scan picks `candidates` ids, exact distance
-    * touches only those full-precision rows (broadcast semi-join of a
-    * C-row id list; corpus is never shuffled). Same shape as
-    * Pq.searchWithRerankJoin. */
+    * touches only those full-precision rows ([[Knn.rerank]]). */
   def searchWithRerank(model: Model, codes: DataFrame, corpus: DataFrame,
       query: DataFrame, idCol: String, vecCol: String, metric: String,
-      topK: Int, candidates: Int, roundTo: Int = 4): DataFrame = {
-    val short = search(model, codes, query, idCol, topK = candidates,
-      roundTo = roundTo)
-    Knn.topK(corpus.join(broadcast(short.select(col(idCol))), Seq(idCol)),
+      topK: Int, candidates: Int, roundTo: Int = 4): DataFrame =
+    Knn.rerank(corpus, search(model, codes, query, idCol, candidates, roundTo),
       query, idCol, vecCol, metric, topK, roundTo)
-  }
 
   def sq4_encode(model: Model, vec: Column): Column =
     Shims.column(Sq4EncodeExpr(Shims.expression(vec), model.mins, model.maxs))
@@ -305,11 +307,7 @@ object Sq {
     * [[search]] — map-only code scan + TakeOrderedAndProject. */
   def search4(model: Model, codes: DataFrame, query: DataFrame,
       idCol: String, topK: Int, roundTo: Int = 4): DataFrame =
-    codes.crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(sq4_l2(model, col("codes"), col("qvec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(topK)
+    codeTopK(codes.crossJoin(broadcast(query)), idCol, dist4(model, roundTo), topK)
 
   /** SQ4 shortlist + exact re-rank: the coarse 1/8-size scan picks
     * `candidates`, full-precision distance touches only those rows.
@@ -317,12 +315,9 @@ object Sq {
     * SQ8's — the recall matrix quantifies the trade. */
   def search4WithRerank(model: Model, codes: DataFrame, corpus: DataFrame,
       query: DataFrame, idCol: String, vecCol: String, metric: String,
-      topK: Int, candidates: Int, roundTo: Int = 4): DataFrame = {
-    val short = search4(model, codes, query, idCol, topK = candidates,
-      roundTo = roundTo)
-    Knn.topK(corpus.join(broadcast(short.select(col(idCol))), Seq(idCol)),
+      topK: Int, candidates: Int, roundTo: Int = 4): DataFrame =
+    Knn.rerank(corpus, search4(model, codes, query, idCol, candidates, roundTo),
       query, idCol, vecCol, metric, topK, roundTo)
-  }
 
   /** Cluster-tagged encode for the composed IVF-SQ8 index: same
     * map-only kernel, cluster column carried for at-rest
@@ -333,19 +328,20 @@ object Sq {
       sq8_encode(model, col(vecCol)).as("codes"))
 
   /** Composed IVF-SQ8 serving — completes the composed-family matrix
-    * next to IVF-PQ and IVF-BQ: [[searchWithRerank]] over the codes of
-    * the query's nprobe nearest clusters ONLY (at rest the probe join
-    * is a partition prune), so the dequantized-L2 scan reads 1/4-size
-    * codes of nprobe/k of the corpus and the exact re-rank touches
-    * just the `candidates` survivors. */
+    * next to IVF-PQ and IVF-BQ: the [[searchWithRerank]] funnel over
+    * the codes of the query's nprobe nearest clusters ONLY
+    * ([[Ann.probeJoin]], partition-pruned at rest), so the
+    * dequantized-L2 scan reads 1/4-size codes of nprobe/k of the
+    * corpus and the exact re-rank touches just the `candidates`
+    * survivors. */
   def searchIvfSq(model: Model, clusterCodes: DataFrame,
       centroids: DataFrame, corpus: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, metric: String, topK: Int,
       candidates: Int, nprobe: Int = 2, roundTo: Int = 4): DataFrame =
-    searchWithRerank(model,
-      clusterCodes.join(broadcast(Ann.nearestClusters(centroids, query, nprobe)),
-        Seq("cluster")),
-      corpus, query, idCol, vecCol, metric, topK, candidates, roundTo)
+    Knn.rerank(corpus,
+      codeTopK(Ann.probeJoin(clusterCodes, centroids, query, nprobe, identity), idCol,
+        dist8(model, roundTo), candidates),
+      query, idCol, vecCol, metric, topK, roundTo)
 
   /** Live-index insert: encode new rows with the FROZEN model and
     * union — map-only, no retrain, the storage-Insert path every

@@ -104,7 +104,7 @@ object VectorSql {
     */
   final case class IvfIndex(tagged: DataFrame, centroids: DataFrame,
       nprobe: Int, candidates: Int = 16) extends AnnIndex {
-    // nearestClusters routes by L2 to the centroids
+    // the probe routes by L2 to the centroids
     override def honors(metric: String): Boolean = l2RoutedHonors(metric)
   }
 
@@ -1197,20 +1197,15 @@ object VectorSql {
           // exact TakeOrdered scan)
           case Some(idx: IvfIndex)
               if !deferWhere && idx.honors(metricName(s.metric)) =>
-            val qdf = cat.spark.range(1)
-              .select(typedLit(qvec).as("qvec"))
             // routing happens at PLAN time (the query vector is a
-            // literal): the nprobe nearest clusters collect as a
-            // bounded k-row model read (centroids ARE the model —
-            // the Bq/Sq loadIndex discipline), so the probe becomes
-            // a STATIC `cluster IN (...)` predicate the parquet
-            // source prunes to nprobe directories. A join-shaped
-            // probe would need dynamic partition pruning, which
-            // requires a selective build-side filter Spark can't see
-            // through the top-nprobe limit.
-            val probeClusters = graft.operators.Ann
-              .nearestClusters(idx.centroids, qdf, idx.nprobe)
-              .collect().map(_.getInt(0)).toSeq
+            // literal): the centroids collect as a bounded k-row
+            // model read and `ivf_probe`'s kernel ranks them on the
+            // driver, so the probe becomes a STATIC `cluster IN (...)`
+            // predicate the parquet source prunes to nprobe directories
+            val probeClusters = graft.operators.IvfKernels.probe(
+              qvec.map(_.toDouble).toArray,
+              graft.operators.IvfTable.collect(idx.centroids, None),
+              idx.nprobe).toSeq
             val probed0 = idx.tagged
               .where(col("cluster").isin(probeClusters: _*)).drop("cluster")
             setRoute("VECTOR_SEARCH(route=ivf-probe, clusters=[" +

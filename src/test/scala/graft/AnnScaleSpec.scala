@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions
-import graft.operators.{Ann, Bq, IvfAssignExpr, IvfPq, IvfTable, Pq, Sq}
+import graft.operators.{Ann, Bq, IvfAssignExpr, IvfKernels, IvfPq, IvfTable, Pq, Sq}
 import graft.sources.VectorStore
 
 class AnnScaleSpec extends AnyFunSuite {
@@ -266,10 +266,10 @@ class AnnScaleSpec extends AnyFunSuite {
     val rows = res.collect()
     assert(rows.head.getLong(0) == 0L && rows.head.getDouble(1) == 0.0)
 
-    // scale proof: the scan is partition-pruned to the probed clusters
-    val plan = res.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning") || plan.contains("PartitionFilters: [isnotnull(cluster"),
-      s"no partition pruning in plan:\n$plan")
+    // scale proof: the scan reads only the probed cluster directories
+    val parts = SparkTestSession.partitionsRead(res)
+    assert(parts.nonEmpty && parts.forall(_ <= 2),
+      s"scan read $parts of 4 cluster partitions:\n${res.queryExecution.executedPlan}")
   }
 
   test("tagCorpus plan is map-only: no Exchange, no join") {
@@ -383,10 +383,31 @@ class AnnScaleSpec extends AnyFunSuite {
         val wrong = (got.toSet diff want.toSet).take(5)
         assert(got.size == 294 && want.size == 294 && wrong.isEmpty,
           s"group=$group $elemType: kernel (group, id) -> cluster $wrong")
-        if (group.isEmpty) assert(Ann.tagCorpus(
-            vecs.where(col(g) === 0).withColumnRenamed("_v", "v"),
-            "_id", "v", cents.drop(g)).collect()
-          .map(r => (0, r.getLong(0)) -> r.getInt(2)).toMap == want)
+        if (group.isEmpty) {
+          assert(Ann.tagCorpus(
+              vecs.where(col(g) === 0).withColumnRenamed("_v", "v"),
+              "_id", "v", cents.drop(g)).collect()
+            .map(r => (0, r.getLong(0)) -> r.getInt(2)).toMap == want)
+          // the top-nprobe probe (ivf_probe, every single-query IVF
+          // search and VectorSql's route) picks the clusters of the
+          // Catalyst reference, for nprobe 1, 2 and k
+          val table = IvfTable.collect(cents.drop(g), None)
+          val g0 = typed.filter(_.getInt(0) == 0)
+          for (r <- g0.take(10) ++ g0.find(_.isNullAt(2));
+               nprobe <- Seq(1, 2, table.clusters.length)) {
+            val qdf = spark.createDataFrame(
+              spark.sparkContext.parallelize(Seq(Row(r.get(2))), 1),
+              StructType(Seq(StructField("qvec", ArrayType(elemType)))))
+            val want = KnnReference.nearestClusters(cents.drop(g), qdf, nprobe)
+              .collect().map(_.getInt(0)).toSet
+            val x = if (r.isNullAt(2)) null else r.getSeq[Any](2).map {
+              case f: Float => f.toDouble
+              case d: Double => d
+            }.toArray
+            val got = IvfKernels.probe(x, table, nprobe).toSet
+            assert(got == want, s"$elemType nprobe=$nprobe ${r.get(2)}: probe $got")
+          }
+        }
       }
     }
   }

@@ -173,10 +173,10 @@ class BqSpec extends AnyFunSuite {
       Bq.encodeIvf(model, tagged, "vec_id", "embedding"), cents, e, q,
       "vec_id", "embedding", "euclidean", topK = 10, candidates = 50)
     assert(res.collect().toSeq == mem.collect().toSeq)
-    // scale proof: the code scan is pruned to the probed clusters
-    val plan = res.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning") ||
-      plan.contains("PartitionFilters: [isnotnull(cluster"), plan)
+    // scale proof: the code scan reads only the probed clusters
+    val parts = SparkTestSession.partitionsRead(res)
+    assert(parts.nonEmpty && parts.forall(_ <= 2),
+      s"scan read $parts of 4 cluster partitions:\n${res.queryExecution.executedPlan}")
   }
 
   test("recall@10 grows with the shortlist; 20% of corpus reaches 0.7") {

@@ -66,11 +66,10 @@ class IvfPqSpec extends AnyFunSuite {
 
     // scale proof: the codes scan reads only the probed cluster
     // partitions (dynamic pruning via the broadcast cluster join)
-    val plan = IvfPq.search(back, q(0), "vec_id", 10, nprobe = 2)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning") ||
-      plan.contains("PartitionFilters: [isnotnull(cluster"),
-      s"no partition pruning:\n$plan")
+    val res = IvfPq.search(back, q(0), "vec_id", 10, nprobe = 2)
+    val parts = SparkTestSession.partitionsRead(res)
+    assert(parts.nonEmpty && parts.forall(_ <= 2),
+      s"scan read $parts of 8 cluster partitions:\n${res.queryExecution.executedPlan}")
   }
 
   test("nprobe=k (probe everything) == plain PQ ADC over all codes") {

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
 
-/** The join + window formulations of the batch kNN operators, kept
-  * as the executable specs the `knn_block` kernel is tested against:
-  * every (query, corpus row) pair as a row, rounded, then a
-  * `row_number` window per qid.
+/** The join + window formulations of the batch kNN operators and the
+  * IVF probe ranking, kept as the executable specs the `knn_block` and
+  * `ivf_probe` kernels are tested against: every (query, corpus row)
+  * pair as a row, rounded, then a `row_number` window per qid.
   */
 object KnnReference {
 
@@ -46,6 +46,20 @@ object KnnReference {
       excludeSelf: Boolean = true, roundTo: Int = 4): DataFrame =
     rankWindow(knnPairs(corpus, queries, idCol, vecCol, qidCol, qvecCol, metric,
       excludeSelf, roundTo), qidCol, idCol, k)
+
+  /** A one-row query's (`qvec`) `nprobe` l2-nearest clusters by a
+    * cross join + `orderBy(distance, cluster).limit`: the Catalyst
+    * ranking `IvfKernels.probe` (`ivf_probe`, the single-query IVF
+    * probe and `VectorSql`'s plan-time route) is tested against.
+    */
+  def nearestClusters(
+      centroids: DataFrame, query: DataFrame, nprobe: Int): DataFrame =
+    query.crossJoin(broadcast(centroids))
+      .select(col("cluster"),
+        VectorFunctions.vec_l2(
+          transform(col("qvec"), _.cast("double")), col("centroid")).as("_d"))
+      .orderBy(col("_d"), col("cluster")).limit(nprobe)
+      .select(col("cluster"))
 
   /** Each query row's `nprobe` l2-nearest clusters, ties to the lower
     * cluster, by a cross join + rank window: (qid, qvec, cluster).

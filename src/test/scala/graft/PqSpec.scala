@@ -215,7 +215,13 @@ class PqSpec extends AnyFunSuite {
 
   test("PQ encode, search and append plans are map-only: no Exchange, no Generate") {
     def shuffles(df: DataFrame): Int = executed(df).count(_.isInstanceOf[ShuffleExchangeLike])
-    def generates(df: DataFrame): Int = executed(df).count(_.isInstanceOf[GenerateExec])
+    // a Generate over code rows is the old explode + codebook join; the
+    // one allowed is the IVF probe's, the one-row query exploded over
+    // its nprobe clusters on the broadcast side
+    def generates(df: DataFrame): Int = executed(df).count {
+      case g: GenerateExec => !g.generator.toString.contains("ivf_probe")
+      case _ => false
+    }
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_plan").toString
     Pq.writeIndex(static, Pq.encode(static, e, "vec_id", "embedding"), dir)
     val (rm, rc) = Pq.loadIndex(spark, dir)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +26,15 @@ object SparkTestSession {
     df.collect()
     nodes(df.queryExecution.executedPlan)
   }
+
+  /** The `numPartitions` metric (partition directories read) of every
+    * scan of a partitioned table in the executed plan, after running it.
+    */
+  def partitionsRead(df: DataFrame): Seq[Long] =
+    executed(df).collect {
+      case s: FileSourceScanExec if s.relation.partitionSchema.nonEmpty =>
+        s.metrics("numPartitions").value
+    }
 }
 
 class VectorExprsSpec extends AnyFunSuite {

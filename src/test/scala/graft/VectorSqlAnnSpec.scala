@@ -64,7 +64,7 @@ class VectorSqlAnnSpec extends AnyFunSuite {
     val (tagged, cents) = Ann.loadIndex(spark, idxPath)
     val q = collection().where(col("id") === "0")
       .select(col("vector").as("qvec"))
-    val qc = Ann.nearestClusters(cents, q, 2)
+    val qc = KnnReference.nearestClusters(cents, q, 2)
       .collect().map(_.getInt(0)).toSet
     val want = tagged
       .where(col("cluster").isin(qc.toSeq: _*))
@@ -203,7 +203,7 @@ class VectorSqlAnnSpec extends AnyFunSuite {
     val (tagged, cents) = Ann.loadIndex(spark, idxPath)
     val q = collection().where(col("id") === "0")
       .select(col("vector").as("qvec"))
-    val qc = Ann.nearestClusters(cents, q, 4)
+    val qc = KnnReference.nearestClusters(cents, q, 4)
       .collect().map(_.getInt(0)).toSet
     val want = tagged
       .where(col("cluster").isin(qc.toSeq: _*))
@@ -554,7 +554,7 @@ class VectorSqlAnnSpec extends AnyFunSuite {
     val (tagged, cents) = Ann.loadIndex(spark, idxPath)
     val q = collection().where(col("id") === "0")
       .select(col("vector").as("qvec"))
-    val qc = Ann.nearestClusters(cents, q, 2)
+    val qc = KnnReference.nearestClusters(cents, q, 2)
       .collect().map(_.getInt(0)).toSet
     val want = tagged.where(col("cluster").isin(qc.toSeq: _*))
       .where(col("id") =!= victim)
