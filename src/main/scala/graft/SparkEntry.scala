@@ -2101,12 +2101,13 @@ object SparkEntry {
     //    0.890 at the same beam), route a count-derived ~50-query
     //    sample through it as COUNT-DERIVED bounded hops of greedy
     //    beam expansion with a COUNT-DERIVED beam width (HNSW's
-    //    ef ~ log n: clamp(3·⌈log₂n⌉, 16, 64)) — each hop ONE
-    //    equi-join of the whole query set's beam against the edge
-    //    frame, exact integer e4 re-scoring, top-beam cut per query
-    //    (KnnGraph.beamSearchRounds has the 100 TB shape: per-hop
-    //    work O(|Q|·beam·degree) keyed by qid, corpus-sized frames
-    //    only ever join SIDES). Entry points: LSH-bucket mates (the
+    //    ef ~ log n: clamp(3·⌈log₂n⌉, 16, 64)) — the whole walk of
+    //    each query in the task that holds its row (the graph_walk
+    //    kernel: the served graph's vecs and edges are one block
+    //    each, read once per action), exact integer e4 re-scoring,
+    //    top-beam cut per hop (KnnGraph.beamSearchRounds: per-query
+    //    work O(hops·beam·degree), the served graph fits in a
+    //    task). Entry points: LSH-bucket mates (the
     //    routed seed, same planes as the build) ∪ id-ring fallback.
     //    Output: per-hop beam checksums pinning the whole traversal
     //    + recall@8 vs exact kNN (0.978 at n=500 / 0.898 at n=2000
@@ -8034,7 +8035,7 @@ object SparkEntry {
     * KnnGraph.beamSearchRounds exactly.
     */
   /** LSH-bucket ∪ id-ring seed CTEs — ONE definition shared by the
-    * exact and ADC beam chains (the KnnGraph.lshRingSeeds mirror), so
+    * exact and ADC beam chains (the `graph_walk` ring seed rule), so
     * a seed-rule change can never diverge the two oracles.
     */
   private lazy val knnGraphLshSeedCtes: String =
@@ -8121,8 +8122,8 @@ object SparkEntry {
     * name to the "SELECT qid, node, d_e4 FROM ..." scoring SQL —
     * default the exact integer-e4 l2 against vv; the PQ-compressed
     * traversal passes the ADC LUT-sum body instead (same gated hop
-    * machinery, different distance, mirroring KnnGraph.beamCore's
-    * pluggable scorer).
+    * machinery, different distance, mirroring the two score modes of
+    * the `graph_walk` kernel).
     */
   private def knnGraphBeamCtes(seedCtes: String,
       scoreBody: Option[String => String] = None): String = {

@@ -41,10 +41,10 @@ final class TopKBuffer(val k: Int) {
   def add(dist: Double, id: Long): Unit = {
     // NaN guard (r15 ADVICE): the reject-form comparison below lets an
     // unordered NaN fall through (NaN > x is false) and evict a
-    // genuine pair. No shipped caller produces NaN (integer-e4 graph
-    // distances; Recall feeds 4-dp rounded kernels), but a NaN
-    // embedding must degrade to "rejected", matching the old
-    // accept-form gate.
+    // genuine pair. knn_block and topk_pairs over a NaN-scored column
+    // rely on it: a NaN embedding degrades to "rejected". The graph
+    // walk never passes one (its integer-e4 cast raises on a NaN
+    // distance first, as Spark's ANSI cast does).
     if (dist != dist || k <= 0) return // k <= 0 keeps nothing
     if (heap.size == k) {
       // zero-allocation fast reject (the overwhelmingly common case

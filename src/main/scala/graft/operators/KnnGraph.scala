@@ -3,7 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TopKAgg, VectorFunctions}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftshim.Shims
+import org.apache.spark.sql.internal.SQLConf
+
+import graft.functions.{GraphWalk, TopKAgg, VectorFunctions, WalkSpec}
+import graft.sources.VectorStore
 
 /** Batch NN-descent k-NN-graph build (Dong et al., WWW'11) — the
   * Spark-native analog of HNSW's graph layer (hnsw.go:75-524): where
@@ -158,9 +163,8 @@ object KnnGraph {
     // the aggregate can dedup — distinct-first shrinks both keyed
     // join exchanges more than its own exchange costs (measured:
     // dropping it moved the sf0.1 build 5.4 -> 7.4 s; the TopKBuffer
-    // distinct-id contract makes it semantically optional, so the
-    // SERVING paths, whose scorer join is query-broadcast + one keyed
-    // side, do drop theirs — see beamCore)
+    // distinct-id contract makes it semantically optional; the
+    // touched-node refine drops it — see refineTouched)
     val init = ring.unionByName(lshAdj).distinct()
     val out = Seq.newBuilder[DataFrame]
     var edges = topK(init, vecs, k).localCheckpoint(true)
@@ -206,11 +210,10 @@ object KnnGraph {
     math.min(cap, math.max(16, 3 * ceilLog2(n)))
 
   /** Batch greedy beam search over a built k-NN graph — the
-    * hnsw.go:439-524 `Search` analog, re-expressed as `hops` unrolled
-    * join steps so a whole query SET routes through the graph at
-    * once (HNSW serves one query at a time from an entry point; a
-    * batch engine serves the set, and every hop is one equi-join
-    * against the edge frame for ALL queries simultaneously).
+    * hnsw.go:439-524 `Search` analog. HNSW walks one query at a time
+    * from an entry point in memory; here every query row of the set
+    * walks the whole graph inside the task that holds it, through one
+    * kernel, `graph_walk` ([[graft.functions.GraphWalk]]).
     *
     * State after each hop is each query's current top-`beam`
     * candidates by (d_e4, id). Hop step: expand every beam node
@@ -224,12 +227,19 @@ object KnnGraph {
     * ties by id, hop count count(*)-derived ([[adaptiveHops]]) so
     * the whole search is unrolled-CTE-replayable.
     *
-    * Scale shape: per hop, each query contributes ≤ beam·k edge
-    * expansions — work is O(|Q|·beam·k) distances per hop keyed by
-    * qid, independent of corpus size; the only corpus-sized frames
-    * (edges, vecs) are join SIDES keyed by node id, never
-    * broadcast, so a 1000-executor cluster shards them by key. The
-    * query set rides a broadcast (model-sized by contract).
+    * Scale shape: the served graph must fit in a task. Its `vecs` and
+    * edge frames are scalar subqueries, each read once per action in
+    * one task and parsed once per task; no job runs while the
+    * DataFrame is built. Each query does O(hops·beam·degree) distance
+    * work in the task of its row, so the query set is never collected
+    * or broadcast and may span any number of partitions. One action
+    * over a one-partition query frame is 3 jobs (the two blocks and
+    * the walk), whatever the hop count.
+    *
+    * Degenerate input: a null query vector or qid gives no rows, a NaN
+    * element raises (Spark's ANSI `CAST_OVERFLOW` of the NaN
+    * distance), an empty query frame gives no rows. Query rows sharing
+    * a qid each walk on their own.
     *
     * @param graph  (src, dst) edge frame — the built graph, cut to
     *               the serving degree
@@ -247,35 +257,11 @@ object KnnGraph {
       queries: DataFrame, n: Long, beam: Int = Adaptive,
       hops: Int = Adaptive, ringSeeds: Int = 4,
       degree: Int = 8): Seq[DataFrame] = {
-    requireBudgets(beam, hops) // before any checkpoint is planned
-    // LAZY checkpoint (r16): same lineage truncation, but the tiny
-    // query frame materializes inside the seed-scoring job instead
-    // of paying its own blocking driver job per serving call (§5)
-    val q = broadcast(
-      queries.select(col("qid"), col("qv"), col("qbucket"))
-        .localCheckpoint(false))
-    beamCore(graph, vecs, q, lshRingSeeds(q, vecs, n, ringSeeds), n,
-      beam, hops, degree)
-  }
-
-  /** LSH-bucket-mate ∪ id-ring entry points — the seed set shared by
-    * the exact and ADC traversals (one definition, so a seed-rule
-    * change can never diverge the two). `q` must expose (qid,
-    * qbucket).
-    */
-  private def lshRingSeeds(q: DataFrame, vecs: DataFrame, n: Long,
-      ringSeeds: Int): DataFrame = {
-    val ring = q.select(col("qid"),
-        explode(sequence(lit(1), lit(ringSeeds))).as("d"))
-      .select(col("qid"),
-        explode(array(pmod(col("qid") + col("d"), lit(n)),
-          pmod(col("qid") - col("d"), lit(n)))).as("node"))
-    val mates = q.select(col("qid"), col("qbucket"))
-      .join(vecs.select(col("id").as("node"), col("bucket")),
-        col("qbucket") === col("bucket"))
-      .select(col("qid"), col("node"))
-    ring.unionByName(mates)
-      .where(col("qid") =!= col("node")).distinct()
+    requireBudgets(beam, hops)
+    val (bw, nHops) = budgets(n, beam, hops, degree)
+    perHop(walk(Some(graph), vecs,
+      queries.select(col("qid"), col("qv"), col("qbucket")), n, bw, nHops,
+      ringSeeds, None, None, evaluated = false), nHops, "node", "d_e4", "rank")
   }
 
   /** The coarse-routing level mod: members are ids ≡ 0 (mod
@@ -288,19 +274,18 @@ object KnnGraph {
 
   /** At-rest edge-shard shift: shard(src) = src >> (⌈log₂n⌉/2), so
     * each shard covers a contiguous power-of-two id range of ~√n ids
-    * and the index holds ~√n shards — ring/NN locality keeps a
-    * query's frontier inside few shards, and shard count stays
-    * object-store-sane (~30k dirs at n = 10¹⁰). Count-derived and
-    * integer-exact, so serve-time [[edgeShard]] reproduces the
+    * and the index holds ~√n shards (~30k dirs at n = 10¹⁰).
+    * Count-derived and integer-exact, so [[edgeShard]] reproduces the
     * write-time value from the params count alone. Results are
-    * unaffected (shard is implied by src); only the SCAN shape
-    * changes — the Ann.writeIndex partitionBy(cluster) discipline.
+    * unaffected (shard is implied by src); only the layout changes —
+    * the Ann.writeIndex partitionBy(cluster) discipline.
     */
   def edgeShardShift(n: Long): Int = ceilLog2(n) / 2
 
-  /** The at-rest shard of node id `id` for a corpus of `n` — the
-    * serve-side key the beam hop adds to its src equi-join so the
-    * edge scan partition-prunes to the frontier's shards.
+  /** The at-rest shard of node id `id` for a corpus of `n`: the
+    * directory of its out-edges, so a reader of a node range reads
+    * only that range's directories. Serving reads every shard once
+    * per action (the served graph fits in a task).
     */
   def edgeShard(id: Column, n: Long): Column =
     shiftright(id, edgeShardShift(n))
@@ -314,24 +299,18 @@ object KnnGraph {
     * with a GUARANTEED-near one: the nearest level member is a true
     * distance minimizer over √n anchors, where an LSH bucket is only
     * probably near (and can be empty of close mates on isotropic
-    * data). Recursing the same split gives n^(1/3) levels etc. — at
-    * 100 TB the level scan is |Q|·√n keyed work, distributed like
-    * any broadcast-query scan, and the level frame is corpus-derived
-    * (no training step, no stored model beyond the mod).
+    * data). The level scan is `graph_walk`'s routed seed rule, |Q|·√n
+    * distances in the tasks of the query rows; the level is
+    * corpus-derived (no training step, no stored model beyond the
+    * mod). Returns (qid, node).
     */
   def routedSeeds(vecs: DataFrame, q: DataFrame, n: Long,
       s: Int = 8, maxQueries: Long = 65536L): DataFrame = {
-    // CONTRACT: the level join below compiles to a broadcast
-    // nested-loop join (the =!= predicate is structurally a cross
-    // product of the query set against the ~√n level frame) — the
-    // DESIGNED |Q|·√n routing scan while Q is micro-batch-sized, a
-    // silent quadratic if a caller ever routes a corpus-sized Q.
-    // Probe the (model-sized, usually checkpointed) query frame and
-    // fail loudly past `maxQueries`; a corpus-sized query set should
-    // go through the LSH-seeded beamSearchRounds entry (equi-join
-    // seeds) or be chunked into micro-batches. limit(max+1) keeps the
-    // guard itself O(maxQueries) — a plain count() would pay one
-    // full corpus pass on exactly the corpus-sized-Q case it rejects.
+    // CONTRACT: the routing scan is |Q|*sqrt(n) distances by design,
+    // for micro-batch-sized query sets. Probe the query frame and fail
+    // loudly past `maxQueries`; limit(max+1) keeps the guard itself
+    // O(maxQueries) — a plain count() would pay one full corpus pass
+    // on exactly the corpus-sized-Q case it rejects.
     val nq = q.limit(math.min(maxQueries, Int.MaxValue - 1L).toInt + 1)
       .count()
     require(nq <= maxQueries,
@@ -339,36 +318,26 @@ object KnnGraph {
         "coarse-level routing scan is |Q|*sqrt(n) by design and only " +
         "contracts for micro-batch-sized query sets — chunk the " +
         "queries or use LSH-seeded beamSearchRounds")
-    val lm = levelMod(n)
-    val level = vecs.where(pmod(col("id"), lit(lm)) === 0)
-      .select(col("id").as("node"), col("v").as("nv"))
-    level.join(q.select(col("qid"), col("qv")),
-        col("node") =!= col("qid"))
-      .select(col("qid"), col("node"), dE4(col("nv"), col("qv")).as("d"))
-      .groupBy(col("qid"))
-      .agg(TopKAgg.topk_pairs(col("d").cast("double"), col("node"), s)
-        .as("tk"))
-      .select(col("qid"), explode(col("tk")).as("pair"))
-      .select(col("qid"), col("pair.id").as("node"))
+    walk(None, vecs, q.select(col("qid"), col("qv")), n, s, 0, 0, Some(s), None,
+      evaluated = false).select(col("qid"), col("node"))
   }
 
   /** [[beamSearchRounds]] with hierarchical routed entry points
     * ([[routedSeeds]]) instead of LSH-bucket ∪ ring seeds — the full
     * HNSW descend analog: route through the ~√n coarse level, then
     * count-derived greedy beam hops over the base graph. `queries`
-    * needs only (qid, qv).
+    * needs only (qid, qv). The level scan runs per query row inside
+    * the walk, so no query-set size guard applies here (routedSeeds
+    * keeps its own).
     */
   def layeredSearchRounds(graph: DataFrame, vecs: DataFrame,
       queries: DataFrame, n: Long, beam: Int = Adaptive,
       hops: Int = Adaptive, seedK: Int = 8,
       degree: Int = 8): Seq[DataFrame] = {
-    requireBudgets(beam, hops) // before any checkpoint is planned
-    // lazy like beamSearchRounds' q: routedSeeds' bounded limit+count
-    // guard is the first job over it and materializes it there
-    val q = broadcast(
-      queries.select(col("qid"), col("qv")).localCheckpoint(false))
-    beamCore(graph, vecs, q, routedSeeds(vecs, q, n, seedK), n, beam,
-      hops, degree)
+    requireBudgets(beam, hops)
+    val (bw, nHops) = budgets(n, beam, hops, degree)
+    perHop(walk(Some(graph), vecs, queries.select(col("qid"), col("qv")), n, bw,
+      nHops, 0, Some(seedK), None, evaluated = false), nHops, "node", "d_e4", "rank")
   }
 
   private def requireBudgets(beam: Int, hops: Int): Unit = {
@@ -378,138 +347,52 @@ object KnnGraph {
       s"hops must be >= 0 or KnnGraph.Adaptive, got $hops")
   }
 
-  /** Shared hop engine of [[beamSearchRounds]],
-    * [[layeredSearchRounds]] and [[beamSearchRoundsAdc]]: score the
-    * seeds, then `hops` gated expand/re-score/top-beam rounds. `q`
-    * must already be broadcast + checkpointed and expose (qid, qv).
-    * `scorer` maps a (qid, node) candidate frame to (qid, node,
-    * d_e4) — any DETERMINISTIC integer distance (ties broken by id
-    * inside the cut); None = the exact integer-e4 l2 against `vecs`.
-    * CONTRACT (r15 ADVICE): when `scorer` is None the per-hop
-    * candidate `.distinct()` is dropped because the exact scorer
-    * emits exactly one deterministic d_e4 row per (qid, node) — the
-    * TopKBuffer distinct-id fold is then equivalent. A custom scorer
-    * gets the hard dedup below BECAUSE this cannot be assumed (the
-    * ADC scorer aggregates joined code rows per candidate ROW, so
-    * duplicates would double its sums); any new scorer that is
-    * row-multiplying or non-deterministic must keep that dedup.
-    * `scoredOut`, when set, collects each hop's FULL scored candidate
-    * frame (checkpointed, before the beam cut) — the evaluated set a
-    * filtered search admits from.
+  /** (beam width, hop count) with [[Adaptive]] resolved from `n`. */
+  private def budgets(n: Long, beam: Int, hops: Int, degree: Int): (Int, Int) =
+    (if (beam == Adaptive) adaptiveBeam(n) else beam,
+      if (hops == Adaptive) adaptiveHops(n, degree) else hops)
+
+  /** The `graph_walk` of every row of `queries` ((qid, qv) and, for
+    * ring seeds, qbucket) as (qid, hop, node, d_e4[, rank]) rows: the
+    * beams, or with `evaluated` every scored candidate, of hops 0 to
+    * `hops`. `routed` = the routed seed count (else ring seeds); `adc`
+    * = the (node, grp, code) codes and (qid, grp, code, sd) LUT to
+    * score with. Each block is one task's scalar subquery (`coalesce(1)`:
+    * the served graph fits in a task); the edges are read only when
+    * the walk hops.
     */
-  private def beamCore(graph: DataFrame, vecs: DataFrame, q: DataFrame,
-      seeds: DataFrame, n: Long, beam: Int, hops: Int, degree: Int,
-      scorer: Option[DataFrame => DataFrame] = None,
-      scoredOut: Option[scala.collection.mutable.Buffer[DataFrame]] =
-        None): Seq[DataFrame] = {
-    requireBudgets(beam, hops)
-    // a graph loaded from the sharded at-rest layout ([[writeIndex]])
-    // carries its `shard` partition column: keep it and add the
-    // count-derived shard key to the hop's src equi-join, so the
-    // parquet edge scan partition-prunes (DPP off the broadcast
-    // frontier) to the frontier's shards instead of reading the full
-    // edge frame every hop — at 100 TB the difference between a
-    // ~√n-shard read and a corpus-sized one. In-memory builds have no
-    // shard column and join on src alone; results are identical
-    // either way (shard is implied by src).
-    val sharded = graph.columns.contains("shard")
-    val edges =
-      if (sharded) graph.select(col("shard"), col("src"), col("dst"))
-      else graph.select(col("src"), col("dst"))
-    val bw = if (beam == Adaptive) adaptiveBeam(n) else beam
-    val nHops =
-      if (hops == Adaptive) adaptiveHops(n, degree) else hops
-    val score: DataFrame => DataFrame = scorer.getOrElse(cands =>
-      cands
-        .join(vecs.select(col("id").as("node"), col("v").as("nv")),
-          Seq("node"))
-        .join(q.select(col("qid"), col("qv")), Seq("qid"))
-        .select(col("qid"), col("node"),
-          dE4(col("nv"), col("qv")).as("d_e4")))
-    def scoreBeam(cands: DataFrame): DataFrame = {
-      var sc = score(cands)
-      scoredOut.foreach { buf =>
-        // lazy: materializes inside the hop's own job; the admit
-        // pass then re-reads the persisted partitions
-        sc = sc.localCheckpoint(false)
-        buf += sc
-      }
-      sc.groupBy(col("qid"))
-        .agg(TopKAgg.topk_pairs(col("d_e4").cast("double"), col("node"),
-          bw).as("tk"))
-        .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "pair")))
-        .select(col("qid"), col("pair.id").as("node"),
-          col("pair.dist").cast("bigint").as("d_e4"),
-          (col("pos") + 1).cast("int").as("rank"))
-    }
-    // the exact scorer computes one deterministic d_e4 row per
-    // (qid, node), so duplicated candidates (a node reached from two
-    // beam members) are deduped inside the topk cut (TopKBuffer
-    // distinct-id contract) and the per-hop candidate `.distinct()`
-    // exchange is dropped; a custom scorer (the ADC LUT sum
-    // aggregates joined code rows per candidate ROW) still needs the
-    // hard dedup or duplicates would double its sums
-    val dedupCands = scorer.nonEmpty
-    // LAZY per-hop checkpoints: the plan/lineage is truncated exactly
-    // as before (localCheckpoint swaps in a LogicalRDD either way),
-    // but hop h's state now materializes inside the job that first
-    // reads it — hop h+1's frontier shard-collect — instead of one
-    // extra blocking driver job per hop. A traversal of H hops pays
-    // H driver round-trips (the shard collects, which are the static
-    // prune's price) rather than 2H.
-    val out = Seq.newBuilder[DataFrame]
-    var state = scoreBeam(seeds).localCheckpoint(false)
-    out += state
-    for (_ <- 1 to nHops) {
-      val frontier = state.select(col("qid"), col("node"))
-      val expand = expandFrontier(frontier, edges, n, sharded)
-      val cands0 = frontier.unionByName(expand)
-        .where(col("qid") =!= col("node"))
-      val cands = if (dedupCands) cands0.distinct() else cands0
-      state = scoreBeam(cands).localCheckpoint(false)
-      out += state
-    }
-    out.result()
+  private def walk(graph: Option[DataFrame], vecs: DataFrame, queries: DataFrame,
+      n: Long, beam: Int, hops: Int, ringSeeds: Int, routed: Option[Int],
+      adc: Option[(DataFrame, DataFrame)], evaluated: Boolean): DataFrame = {
+    def long(c: String): Column = col(c).cast("long")
+    def block(df: DataFrame, fields: Column*): Expression = Shims.expression(
+      df.coalesce(1).select(collect_list(struct(fields: _*))).scalar())
+    val none = Shims.expression(lit(null))
+    val kernel = GraphWalk(
+      Shims.expression(long("qid")),
+      Shims.expression(col("qv").cast("array<double>")),
+      Shims.expression(if (routed.isEmpty) long("qbucket") else lit(null).cast("long")),
+      block(vecs, long("id"), col("v").cast("array<double>"),
+        if (routed.isEmpty) long("bucket") else lit(null).cast("long")),
+      graph.filter(_ => hops > 0).fold(none)(block(_, long("src"), long("dst"))),
+      adc.fold(none) { case (codes, _) => block(codes, long("node"), long("grp"), long("code")) },
+      adc.fold(none) { case (_, lut) =>
+        block(lut, long("qid"), long("grp"), long("code"), long("sd"))
+      },
+      WalkSpec(n, beam, hops, ringSeeds, routed.isDefined, routed.getOrElse(0), levelMod(n),
+        adc.isDefined, evaluated, SQLConf.get.ansiEnabled))
+    queries.select(col("qid"), inline(Shims.column(kernel)))
   }
 
-  /** One frontier expansion through the out-edges — the hop join
-    * [[beamCore]] unrolls. Over a SHARDED edge frame (the at-rest
-    * [[writeIndex]] layout) the frontier's shard set — computed off
-    * the already-checkpointed frontier, a bounded model-sized read
-    * like the nprobe routing collect — becomes a STATIC partition
-    * filter on the edge scan, so each hop reads only the frontier's
-    * shard directories instead of the corpus-sized edge frame.
-    * Static (not DPP) because the checkpointed frontier carries no
-    * selective predicate for the DPP planner rule to latch onto; the
-    * IN list is exact, so hops whose frontier clusters in few shards
-    * (ring/NN id locality) prune hardest. The shard column is
-    * collected RAW and deduped on the driver: a distinct() first
-    * would shrink the collect to ≤ √n ints but pay one extra
-    * exchange + stage per hop, while the raw collect is bounded by
-    * |frontier| ≤ |Q|·beam rows — the same micro-batch-sized
-    * contract that already broadcasts the query frame itself.
-    * Package-visible so the plan spec asserts the pruned scan on the
-    * production join, not a reconstruction.
-    */
-  private[graft] def expandFrontier(frontier: DataFrame,
-      edges: DataFrame, n: Long, sharded: Boolean): DataFrame = {
-    val pruned =
-      if (sharded) {
-        val shards = frontier
-          .select(edgeShard(col("node"), n).cast("int").as("sh"))
-          .collect().map(_.getInt(0)).distinct.sorted
-        edges.where(col("shard").isin(shards.map(Integer.valueOf): _*))
-          .select(col("src"), col("dst"))
-      } else edges.select(col("src"), col("dst"))
-    frontier.join(pruned, col("node") === col("src"))
-      .select(col("qid"), col("dst").as("node"))
-  }
+  /** Hops 0 to `hops` of a [[walk]], each as (qid, `cols`…). */
+  private def perHop(walked: DataFrame, hops: Int, cols: String*): Seq[DataFrame] =
+    (0 to hops).map(h => walked.where(col("hop") === h).select(("qid" +: cols).map(col): _*))
 
   /** ADC lookup table for PQ-compressed traversal: one integer-e6
     * squared-subdistance row per (query, subspace, code) —
-    * |Q|·m·k rows, the textbook asymmetric-distance LUT, broadcast
-    * at serve time. Integer BEFORE the cross-subspace sum, so the
-    * total is an order-free exact integer (no float-accumulation
+    * |Q|·m·k rows, the textbook asymmetric-distance LUT, shipped to
+    * the walk as one block. Integer BEFORE the cross-subspace sum, so
+    * the total is an order-free exact integer (no float-accumulation
     * tie risk inside the beam's rank cuts).
     *
     * @param qsv       (qid, grp, qsv double array) query subvectors
@@ -525,24 +408,26 @@ object KnnGraph {
   /** Batch graph search over PQ-COMPRESSED vectors — the
     * DiskANN-style serving split: the traversal re-scores beam
     * candidates from m-byte PQ codes via the [[adcLut]] (integer-e6
-    * ADC, a broadcast LUT join + an order-free integer sum), and the
-    * full-precision vectors are never touched during the walk. At
-    * 100 TB this is the difference between streaming the corpus'
-    * float vectors through every hop and streaming 16-byte codes:
-    * the hop working set shrinks ~16× (64-dim float32 → 8 codes),
-    * which is what lets the beam's keyed joins stay memory-resident
-    * per executor. Quality cost is the PQ quantization error —
-    * `knn_graph_search_pq` reports recall@k vs exact next to the
-    * uncompressed traversal's.
+    * ADC, an order-free integer sum of the query's LUT entries over
+    * the node's codes), and the full-precision vectors are never
+    * touched during the walk. At 100 TB this is the difference
+    * between streaming the corpus' float vectors through every hop
+    * and streaming 16-byte codes: the walk's working set shrinks ~16×
+    * (64-dim float32 → 8 codes). Quality cost is the PQ quantization
+    * error — `knn_graph_search_pq` reports recall@k vs exact next to
+    * the uncompressed traversal's.
     *
-    * Same gated hop machinery, seeds and count-derived budgets as
+    * Same walk, seeds and count-derived budgets as
     * [[beamSearchRounds]] (d_e4 column = the ADC integer, summed
     * e6-quantized squared subdistances — monotone in l2², so rank
-    * cuts are order-identical to ranking by ADC distance).
+    * cuts are order-identical to ranking by ADC distance). A node
+    * whose codes match no LUT entry is not a candidate.
     *
     * @param codes (node, grp, code) — the corpus' PQ assignment,
     *              exploded (Pq.encode posexploded)
     * @param lut   [[adcLut]] output for the query set
+    * @param scoredOut when set, receives each hop's full scored
+    *              candidate set (qid, node, d_e4), before the beam cut
     */
   def beamSearchRoundsAdc(graph: DataFrame, vecs: DataFrame,
       queries: DataFrame, n: Long, codes: DataFrame, lut: DataFrame,
@@ -551,26 +436,17 @@ object KnnGraph {
       scoredOut: Option[scala.collection.mutable.Buffer[DataFrame]] =
         None): Seq[DataFrame] = {
     requireBudgets(beam, hops)
-    // lazy like beamSearchRounds' q — and the LUT (|Q|·m·k rows,
-    // query-derived) likewise materializes inside the first hop's
-    // scoring job instead of a blocking driver job of its own
-    val q = broadcast(
-      queries.select(col("qid"), col("qv"), col("qbucket"))
-        .localCheckpoint(false))
-    val seeds = lshRingSeeds(q, vecs, n, ringSeeds)
-    val blut = broadcast(lut.localCheckpoint(false))
-    val adcScore: DataFrame => DataFrame = cands =>
-      cands
-        .join(codes.select(col("node"), col("grp"), col("code")),
-          Seq("node"))
-        .join(blut, Seq("qid", "grp", "code"))
-        .groupBy(col("qid"), col("node"))
-        .agg(sum(col("sd")).as("d_e4"))
-    beamCore(graph, vecs, q, seeds, n, beam, hops, degree,
-      Some(adcScore), scoredOut)
+    val (bw, nHops) = budgets(n, beam, hops, degree)
+    def adcWalk(evaluated: Boolean): DataFrame = walk(Some(graph), vecs,
+      queries.select(col("qid"), col("qv"), col("qbucket")), n, bw, nHops,
+      ringSeeds, None, Some((codes, lut)), evaluated)
+    scoredOut.foreach(_ ++= perHop(adcWalk(evaluated = true), nHops, "node", "d_e4"))
+    perHop(adcWalk(evaluated = false), nHops, "node", "d_e4", "rank")
   }
 
-  /** Final top-k per query after a [[beamSearchRounds]] traversal. */
+  /** Final top-k per query after a [[beamSearchRounds]] traversal:
+    * `k = 0` gives no rows and `k` above the beam width the beam.
+    */
   def beamSearch(graph: DataFrame, vecs: DataFrame, queries: DataFrame,
       n: Long, k: Int = 8, beam: Int = Adaptive,
       hops: Int = Adaptive): DataFrame =
@@ -619,13 +495,13 @@ object KnnGraph {
     * has ~beam·degree·hops candidates to fill top-k from, not just
     * the final beam.
     *
-    * Scale shape: identical to [[beamSearchRounds]] (per-hop
-    * O(|Q|·beam·degree) keyed by qid) plus ONE semi-join of the
-    * ≤|Q|·beam·(degree+1)·(hops+1) evaluated frame against
-    * `allowed` — the predicate frame joins on node id, so a
-    * selective predicate at 100 TB is a keyed (broadcastable when
-    * small) join, never a corpus re-scan. Deterministic: integer e4
-    * distances, ties by id, count-derived budgets.
+    * Scale shape: [[beamSearchRounds]]' walk, emitting every scored
+    * candidate (≤|Q|·beam·(degree+1)·(hops+1) rows) instead of the
+    * beams, plus ONE semi-join of those rows against `allowed` — the
+    * predicate frame joins on node id, so a selective predicate at
+    * 100 TB is a keyed (broadcastable when small) join, never a corpus
+    * re-scan. Deterministic: integer e4 distances, ties by id,
+    * count-derived budgets.
     *
     * @param allowed one `id` column — the nodes passing the predicate
     * @param degree  the hop-budget basis (the graph's serving degree,
@@ -642,17 +518,9 @@ object KnnGraph {
       beam: Int = Adaptive, hops: Int = Adaptive, ringSeeds: Int = 4,
       degree: Int = 8): DataFrame = {
     requireBudgets(beam, hops)
-    // lazy like beamSearchRounds' q (same seed-scoring first reader)
-    val q = broadcast(
-      queries.select(col("qid"), col("qv"), col("qbucket"))
-        .localCheckpoint(false))
-    val scored = scala.collection.mutable.Buffer[DataFrame]()
-    beamCore(graph, vecs, q, lshRingSeeds(q, vecs, n, ringSeeds), n,
-      beam, hops, degree = degree, scoredOut = Some(scored))
-    val visited = scored.toSeq
-      .map(_.select(col("qid"), col("node"), col("d_e4")))
-      .reduce(_.unionByName(_)).distinct()
-    visited
+    val (bw, nHops) = budgets(n, beam, hops, degree)
+    walk(Some(graph), vecs, queries.select(col("qid"), col("qv"), col("qbucket")),
+      n, bw, nHops, ringSeeds, None, None, evaluated = true)
       .join(allowed.select(col("id").as("node")), Seq("node"), "left_semi")
       .groupBy(col("qid"))
       .agg(TopKAgg.topk_pairs(col("d_e4").cast("double"), col("node"), k)
@@ -666,12 +534,11 @@ object KnnGraph {
   /** Persist a built kNN graph for serving — the at-rest layout every
     * other index family already has (Ann/Pq/Sq/Bq/IvfPq.writeIndex):
     * `path`/edges (src, dst, d_e4, rank — the full-width adjacency
-    * [[beamSearchRounds]] joins against) written
+    * [[beamSearchRounds]] walks) written
     * `partitionBy(shard)` where shard = src >> [[edgeShardShift]]
     * (the Ann partitionBy(cluster) discipline: ~√n contiguous-id
-    * directories, so a serve's hop joins partition-prune to the
-    * frontier's shards instead of reading the corpus-sized edge
-    * frame), `path`/vecs (id, v, bucket — the re-scoring frame +
+    * directories; a serve reads them all once per action, one
+    * scalar-subquery block), `path`/vecs (id, v, bucket — the re-scoring frame +
     * routed-seed buckets) and `path`/params (the corpus count the
     * count-derived beam/hop/shard knobs need WITHOUT re-scanning).
     *
@@ -679,11 +546,11 @@ object KnnGraph {
     * re-persisting a maintained (appended/deleted) graph whose count
     * crossed a power-of-two boundary reshards WHOLESALE — coherently,
     * because `params` carries the same count the mapping derives
-    * from. Serve-side [[edgeShard]] must therefore always take the
+    * from. A reader's [[edgeShard]] must therefore always take the
     * PERSISTED count ([[loadIndex]]'s params read, [[Build.n]]),
     * never a fresh count of a corpus that drifted after the persist —
-    * a drifted count past the next boundary maps frontiers to shard
-    * ids the layout doesn't have (KnnGraphSpec pins both directions).
+    * a drifted count past the next boundary maps ids to shard ids the
+    * layout doesn't have (KnnGraphSpec pins both directions).
     */
   def writeIndex(build: Build, path: String): Unit = {
     build.rounds.last
@@ -721,10 +588,13 @@ object KnnGraph {
     // must not leak into the maintained graph's unionByName
     val keep = keep0.select(col("src"), col("dst"), col("d_e4"),
       col("rank"))
+    val touchedSrc = touched.select(col("id").as("src"))
     val u = sym(edges)
-    val ut = u.join(touched.select(col("id").as("src")), Seq("src"),
-      "left_semi")
-    val hop = ut.as("a")
+    // the touched sources' edges are batch-sized (≤ 2·degree per
+    // touched node): both joins broadcast them, so the graph-sized
+    // `u` is never shuffled for the refine
+    val ut = u.join(broadcast(touchedSrc), Seq("src"), "left_semi")
+    val hop = broadcast(ut).as("a")
       .join(u.select(col("src").as("mid"), col("dst").as("far")).as("b"),
         col("a.dst") === col("b.mid"))
       .select(col("a.src").as("src"), col("far").as("dst"))
@@ -738,8 +608,7 @@ object KnnGraph {
     val cands = ut.unionByName(hop)
       .where(col("src") =!= col("dst"))
     val refined = topK(cands, vecs, degree)
-    keep.join(touched.select(col("id").as("src")), Seq("src"), "left_anti")
-      .unionByName(refined)
+    VectorStore.delete(keep, "src", touchedSrc).unionByName(refined)
   }
 
   /** Everything [[appendBatch]] produces: the appended graph (same
@@ -772,14 +641,16 @@ object KnnGraph {
     *      (batch inserts can be mutual nearest neighbors). Untouched
     *      base nodes keep their lists verbatim.
     *
-    * Scale shape: probe work is O(|batch|·beam·degree) per hop keyed
-    * by qid; touched is ≤ |batch|·(degree+1) ids, so the re-refine
-    * round is O(|batch|·degree³) distances keyed by node id — all
-    * INDEPENDENT of the base corpus size; base-sized frames (edges,
-    * vecs) only ever join on their keyed side. The batch itself rides
-    * the query broadcast, so it must be ingest-micro-batch-sized, not
-    * corpus-sized — the same contract every other index family's
-    * append (Ann.appendToIvf) carries.
+    * Scale shape: the probe is one `graph_walk` per batch row,
+    * O(hops·beam·degree) distances in the row's task over the base
+    * graph (which must fit in a task); touched is ≤
+    * |batch|·(degree+1) ids, so the re-refine round is
+    * O(|batch|·degree³) distances keyed by node id — all INDEPENDENT
+    * of the base corpus size; base-sized frames (edges, vecs) only
+    * ever join on their keyed side, and the touched ids are broadcast,
+    * so the batch must be ingest-micro-batch-sized, not corpus-sized —
+    * the same contract every other index family's append
+    * (Ann.appendToIvf) carries.
     *
     * Deterministic end to end (integer e4 distances, id ties,
     * count-derived budgets) — unrolled-CTE-replayable like the build.
@@ -847,8 +718,11 @@ object KnnGraph {
     * (sym ∪ sym∘sym smaller than degree) — shorter lists, never
     * dangling ones. Work is O(|touched|·degree²) distances keyed by
     * node id, independent of corpus size; touched is ≤
-    * |deleted|·degree by construction. Deterministic and
-    * unrolled-CTE-replayable like build/append.
+    * |deleted|·degree by construction. The deleted and touched ids
+    * are a batch: every join on them is broadcast (the drops through
+    * `VectorStore.delete`), so neither the graph nor `vecs` is
+    * shuffled for them. Deterministic and unrolled-CTE-replayable
+    * like build/append.
     *
     * @param build     the built graph ([[nnDescentBuild]] or
     *                  [[loadIndex]])
@@ -862,14 +736,12 @@ object KnnGraph {
     // no per-frame blocking job — both materialize inside the first
     // consuming job (the caller's audit/materialization)
     val del = deleteIds.select(col("id")).localCheckpoint(false)
-    val keptSrc = g.join(del.select(col("id").as("src")), Seq("src"),
-      "left_anti")
-    val touched = keptSrc
-      .join(del.select(col("id").as("dst")), Seq("dst"), "left_semi")
+    val delDst = del.select(col("id").as("dst"))
+    val keptSrc = VectorStore.delete(g, "src", del.select(col("id").as("src")))
+    val touched = keptSrc.join(broadcast(delDst), Seq("dst"), "left_semi")
       .select(col("src").as("id")).distinct().localCheckpoint(false)
-    val gClean = keptSrc
-      .join(del.select(col("id").as("dst")), Seq("dst"), "left_anti")
-    val vecs = build.vecs.join(del, Seq("id"), "left_anti")
+    val gClean = VectorStore.delete(keptSrc, "dst", delDst)
+    val vecs = VectorStore.delete(build.vecs, "id", del)
     Deleted(refineTouched(gClean, gClean, touched,
       vecs.select(col("id"), col("v")), degree), touched, vecs)
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ClassicConversions, ExpressionUtils}
+import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Bridge into `private[sql]` surface of Spark 4's classic API:
   * Column <-> Catalyst Expression conversion and the session function
@@ -15,4 +17,7 @@ object Shims {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     ClassicConversions.castToImpl(spark).sessionState.functionRegistry
+  /** The error an ANSI `cast(d as bigint)` raises for a double out of range. */
+  def castOverflow(d: Double): ArithmeticException =
+    QueryExecutionErrors.castingCauseOverflowError(d, DoubleType, LongType)
 }

@@ -79,6 +79,23 @@ class KnnGraphSpec extends AnyFunSuite {
     assert(recall > 0.8 && recall <= 1.0, s"beam recall@8 $recall")
   }
 
+  test("beamSearch plans with no job and serves 64 queries in 3 jobs") {
+    // perfbench's shape: an in-memory degree-16 graph over 500 nodes
+    // and a one-partition batch of 64 queries; the whole walk is one
+    // plan — the vecs and edge blocks (one job each) and the walk
+    val build = KnnGraph.nnDescentBuild(emb, "vec_id", "embedding", 16)
+    val rows = build.vecs.where(col("id") < 64).collect()
+    val qs = spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
+        build.vecs.schema)
+      .select(col("id").as("qid"), col("v").as("qv"), col("bucket").as("qbucket"))
+    val (served, buildJobs) = JobCount.during(spark)(
+      KnnGraph.beamSearch(build.rounds.last, build.vecs, qs, build.n, k = 10))
+    val (got, actionJobs) = JobCount.during(spark)(served.collect())
+    assert(buildJobs === 0)
+    assert(actionJobs === 3)
+    assert(got.map(_.getLong(0)).distinct.length === 64)
+  }
+
   test("levelMod: ~sqrt(n) coarse level, integer-exact at powers of two") {
     assert(KnnGraph.levelMod(1) === 1L)
     assert(KnnGraph.levelMod(4) === 2L)     // ceil(log2)=2 -> 2^1... level ~n/2
@@ -99,7 +116,7 @@ class KnnGraphSpec extends AnyFunSuite {
     assert(lm === 32L) // n=500: ceil(log2)=9 -> 2^5
     val qs = broadcast(build.vecs.where(col("id") < 6)
       .select(col("id").as("qid"), col("v").as("qv")))
-    val got = KnnGraph.routedSeeds(build.vecs, qs, build.n, s = 4)
+    val got = GraphReference.routedSeeds(build.vecs, qs, build.n, s = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute force over the level members
     val want = build.vecs.where(pmod(col("id"), lit(lm)) === 0)
@@ -295,7 +312,7 @@ class KnnGraphSpec extends AnyFunSuite {
     }
   }
 
-  test("at-rest edges are shard-partitioned and the hop join prunes") {
+  test("at-rest edges are shard-partitioned and a serve scans them once per action") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_knngraph_shard").toString
     try {
@@ -312,50 +329,40 @@ class KnnGraphSpec extends AnyFunSuite {
       assert(shardDirs === expectDirs)
       val loaded = KnnGraph.loadIndex(spark, dir)
       assert(loaded.rounds.last.columns.contains("shard"))
-      // the PRODUCTION hop join over a tiny frontier: the parquet
-      // edge scan must carry a static shard IN (...) partition
-      // filter — the scan shape that reads the frontier's shards,
-      // not the corpus-sized edge frame
-      // two frontier nodes in two DIFFERENT shards, so the filter
-      // stays a genuine IN over a strict shard subset
-      val f0 = 1L << shift
-      val frontier = loaded.vecs
-        .where(col("id").isin(0L, f0))
-        .select(lit(0L).as("qid"), col("id").as("node"))
-        .localCheckpoint(true)
-      val edges = loaded.rounds.last
-        .select(col("shard"), col("src"), col("dst"))
-      val expand =
-        KnnGraph.expandFrontier(frontier, edges, loaded.n, sharded = true)
-      val plan = expand.queryExecution.executedPlan.toString
-      val pf = "PartitionFilters: \\[[^\\]]*shard[^\\]]* IN \\(0,1\\)".r
-      assert(pf.findFirstIn(plan).isDefined, plan)
-      // and the prune is REAL, not just plan text: the edge scan's
-      // file index selects exactly the frontier's 2 shard
-      // directories out of all of them
+      // every hop of an at-rest serve, in one action: the edge frame
+      // is one block, so the plan scans it once (the hop frames share
+      // the subquery), reads all of it, and serves the fresh build's rows
+      def allHops(b: KnnGraph.Build) = {
+        val qs = b.vecs.where(col("id") < 5)
+          .select(col("id").as("qid"), col("v").as("qv"),
+            col("bucket").as("qbucket"))
+        KnnGraph.beamSearchRounds(b.rounds.last, b.vecs, qs, b.n, degree = 16)
+          .zipWithIndex.map { case (st, h) => st.withColumn("hop", lit(h)) }
+          .reduce(_.unionByName(_))
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getAs[Int]("hop"), r.getLong(0), r.getAs[Int]("rank"),
+          r.getLong(1), r.getLong(2))).sorted.toSeq
+      val served = allHops(loaded)
+      val got = rows(served)
+      assert(got.nonEmpty)
+      assert(got === rows(allHops(build)))
       import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
         case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case s: QueryStageExec => scans(s.plan)
         case f: FileSourceScanExec => Seq(f)
-        case _ => p.children.flatMap(scans)
+        case _ => p.children.flatMap(scans) ++ p.subqueries.flatMap(scans)
       }
-      val edgeScan = scans(expand.queryExecution.executedPlan)
-        .filter(_.output.exists(_.name == "shard"))
-      assert(edgeScan.nonEmpty, expand.queryExecution.executedPlan.toString)
-      val selected = edgeScan.head.selectedPartitions.partitionCount
-      assert(selected === 2,
-        s"selected $selected shard dirs of ${shardDirs.size}")
-      assert(shardDirs.size > 2)
-      // and the sharded expansion returns exactly the unsharded rows
-      val got = expand.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val expect = KnnGraph.expandFrontier(frontier,
-          loaded.rounds.last.select(col("src"), col("dst")),
-          loaded.n, sharded = false)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got === expect)
-      assert(got.nonEmpty)
+      val edgeScans = scans(served.queryExecution.executedPlan)
+        .filter(_.relation.location.rootPaths.exists(_.getName == "edges"))
+      val distinct = edgeScans.foldLeft(List.empty[FileSourceScanExec]) { (acc, f) =>
+        if (acc.exists(_ eq f)) acc else f :: acc
+      }
+      assert(distinct.size === 1, served.queryExecution.executedPlan.toString)
+      assert(distinct.head.metrics("numOutputRows").value ===
+        loaded.rounds.last.count())
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
@@ -404,8 +411,7 @@ class KnnGraphSpec extends AnyFunSuite {
         .collect().map(r => s"shard=${r.getLong(0)}").toSet
       assert(shardDirs === expect)
       // serve coherence across the re-persist: the at-rest graph
-      // (hop prune keyed by loaded.n) serves exactly the in-memory
-      // maintained graph's results
+      // serves exactly the in-memory maintained graph's results
       val q = vecs2.where(col("id") === 0)
         .select(lit(0L).as("qid"), col("v").as("qv"),
           col("bucket").as("qbucket"))
@@ -419,7 +425,7 @@ class KnnGraphSpec extends AnyFunSuite {
         top8(app.graph, vecs2, b2.n))
       // and a DRIFTED fresh count is NOT a valid serve basis: once
       // the live corpus crosses the NEXT boundary, its shift maps
-      // frontiers to shard ids this layout doesn't have
+      // ids to shard ids this layout doesn't have
       val drifted = KnnGraph.edgeShardShift(4 * n + 100)
       assert(drifted !== s2)
       val wrongDirs = app.graph

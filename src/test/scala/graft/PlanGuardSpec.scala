@@ -702,6 +702,34 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(p.contains("partial_topk_pairs"), p)
   }
 
+  test("knn_graph deleteBatch: no SortMergeJoin, the id drops are broadcast") {
+    // the deleted and touched ids are a batch: the drops go through
+    // VectorStore.delete's broadcast anti-join, so neither the graph
+    // nor the vectors are shuffled for them
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val emb = graft.Tables.load(spark, dir, "embeddings")
+    val build = graft.operators.KnnGraph.nnDescentBuild(emb, "vec_id", "embedding", 16)
+    val del = build.vecs.where(col("id") % 13 === 0).select(col("id"))
+    val d = graft.operators.KnnGraph.deleteBatch(build, del, 16)
+    for ((name, df) <- Seq("graph" -> d.graph, "vecs" -> d.vecs)) {
+      val nodes = SparkTestSession.executed(df)
+      // as planned, before AQE re-plans with runtime statistics, and
+      // as executed
+      val planned = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      assert(planned.collect { case j: SortMergeJoinExec => j }.isEmpty, s"$name: $planned")
+      assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), s"$name: ${nodes.head}")
+      assert(nodes.exists {
+        case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+        case _ => false
+      }, s"$name: ${nodes.head}")
+    }
+  }
+
   test("dedup_graph_cc: percentile threshold never a global window") {
     // the exact-P5 edge-weight cut must run as histogram + partitioned
     // prefix sum (Rank.globalCumSum), not a corpus-sized unpartitioned
