@@ -158,8 +158,9 @@ case class BqHammingWideExpr(left: Expression, right: Expression)
   * xor + popcount per row — `bit_count(code ^ qcode)` stays inside
   * whole-stage codegen with zero object allocation.
   *
-  * Train is one min/max aggregate pass (2*dim cells, map-side
-  * partials, a single collected row — bounded by dim, not data).
+  * Train is [[Sq.range]]'s one pass over whole vectors (a dim-bounded
+  * buffer per map task, a single collected row — bounded by dim, not
+  * data; its degenerate-input rules are BQ's too).
   * Encode is map-only. Search is a map-only scan of the 8-byte codes
   * with a TakeOrderedAndProject heap on (hamming, id); the exact
   * re-rank touches only the C shortlisted full-precision rows via a
@@ -175,13 +176,10 @@ object Bq {
 
   case class Model(dim: Int, thr: Array[Double])
 
-  /** Per-dimension midrange threshold in ONE aggregation pass. */
+  /** Per-dimension midrange (mn + mx) / 2 of [[Sq.range]]'s one pass. */
   private def midrange(corpus: DataFrame, vecCol: String, dim: Int): Array[Double] = {
-    val aggs = (1 to dim).flatMap(i => Seq(
-      min(element_at(col(vecCol), i).cast("double")).as(s"mn$i"),
-      max(element_at(col(vecCol), i).cast("double")).as(s"mx$i")))
-    val row = corpus.agg(aggs.head, aggs.tail: _*).head()
-    Array.tabulate(dim)(i => (row.getDouble(2 * i) + row.getDouble(2 * i + 1)) / 2.0)
+    val (mins, maxs) = Sq.range(corpus, vecCol, dim)
+    Array.tabulate(dim)(i => (mins(i) + maxs(i)) / 2.0)
   }
 
   def train(corpus: DataFrame, vecCol: String, dim: Int): Model = {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
+import graft.functions.DimRange
 import graft.sources.VectorStore
 
 /** Static kernels for SQ8 scalar quantization. The arithmetic is
@@ -225,13 +226,15 @@ case class Sq4L2Expr(left: Expression, right: Expression,
 
 /** SQ8 scalar-quantization index: every float dimension compressed to
   * one byte against per-dimension [min, max] ranges learned in a
-  * single aggregate pass. The third index family next to LSH/IVF and
-  * PQ: 4x smaller than float32 at rest, ~1% distance error on this
-  * corpus, and — unlike k-means codebooks — the training statistic
-  * (min/max) is DETERMINISTIC, so build + search oracle end to end.
+  * single pass over whole vectors. The third index family next to
+  * LSH/IVF and PQ: 4x smaller than float32 at rest, ~1% distance error
+  * on this corpus, and — unlike k-means codebooks — the training
+  * statistic (min/max) is DETERMINISTIC, so build + search oracle end
+  * to end.
   *
-  * 100 TB shape: train is one map-side-combining aggregate producing
-  * 2*dim cells (one collected row, bounded by dim, not data — same
+  * 100 TB shape: train is one `dim_range` aggregate ([[range]]): each
+  * map task folds its partition into one dim-bounded buffer and the
+  * driver collects a single row (bounded by dim, not data — same
   * argument as PQ's m*k codebook literal); encode is map-only;
   * search is a map-only scan of the codes with the distance kernel,
   * topped by TakeOrderedAndProject. No shuffle anywhere.
@@ -240,16 +243,30 @@ object Sq {
 
   case class Model(dim: Int, mins: Array[Double], maxs: Array[Double])
 
-  /** Per-dimension min/max in ONE aggregation pass (2*dim aggregate
-    * cells, map-side partials; the driver collects a single row). */
-  def train(corpus: DataFrame, vecCol: String, dim: Int): Model = {
-    val aggs = (1 to dim).flatMap(i => Seq(
-      min(element_at(col(vecCol), i).cast("double")).as(s"mn$i"),
-      max(element_at(col(vecCol), i).cast("double")).as(s"mx$i")))
-    val row = corpus.agg(aggs.head, aggs.tail: _*).head()
-    Model(dim,
-      Array.tabulate(dim)(i => row.getDouble(2 * i)),
+  /** Per-dimension (mins, maxs) of elements 1..dim, read as doubles,
+    * in one pass over whole vectors ([[graft.functions.DimRange]]: 2
+    * jobs on a cached multi-partition corpus). A null vector or element
+    * is skipped and elements past `dim` are ignored; NaN ranks above
+    * every number, and -0.0 == 0.0 keeps the value held first. A vector
+    * shorter than `dim` raises `INVALID_ARRAY_INDEX_IN_ELEMENT_AT`; a
+    * dimension with no value (an empty or all-null corpus) raises
+    * `ROW_VALUE_IS_NULL`. The model of [[train]], [[Bq.train]] and
+    * [[Bq.trainWide]].
+    */
+  private[operators] def range(corpus: DataFrame, vecCol: String,
+      dim: Int): (Array[Double], Array[Double]) = {
+    val row = corpus.agg(DimRange.dim_range(col(vecCol), dim).as("r"))
+      .select("r.*").head()
+    (Array.tabulate(dim)(i => row.getDouble(2 * i)),
       Array.tabulate(dim)(i => row.getDouble(2 * i + 1)))
+  }
+
+  /** Per-dimension [min, max] ranges, as [[range]]; `dim` < 1 raises
+    * `IllegalArgumentException`. */
+  def train(corpus: DataFrame, vecCol: String, dim: Int): Model = {
+    require(dim >= 1, s"sq: dim $dim must be positive")
+    val (mins, maxs) = range(corpus, vecCol, dim)
+    Model(dim, mins, maxs)
   }
 
   def sq8_encode(model: Model, vec: Column): Column =

@@ -20,4 +20,7 @@ object Shims {
   /** The error an ANSI `cast(d as bigint)` raises for a double out of range. */
   def castOverflow(d: Double): ArithmeticException =
     QueryExecutionErrors.castingCauseOverflowError(d, DoubleType, LongType)
+  /** The error an ANSI `element_at(arr, index)` raises past the array's end. */
+  def elementAtOutOfBounds(index: Int, numElements: Int): ArrayIndexOutOfBoundsException =
+    QueryExecutionErrors.invalidElementAtIndexError(index, numElements, null)
 }
